@@ -1,37 +1,33 @@
 #!/usr/bin/env python3
 """Compare the Python references in ``reference.py`` with the registry's
-DuckDB oracles on one generated input (slow: the oracle SQL takes minutes).
+DuckDB oracles on the benchmark's sf0.1 tables (slow: the oracle SQL takes
+minutes).
 
-    python3 perfbench/check_reference.py --kind floor --seed 1
+    python3 perfbench/check_reference.py
 
 Run from the repository root; exits 1 on any difference.
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 import sys
+import time
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--kind", default="floor")
-    ap.add_argument("--seed", type=int, default=1)
-    args = ap.parse_args()
     root = os.getcwd()
+    here = os.path.dirname(os.path.abspath(__file__))
     sys.path[:0] = [root, os.path.join(root, "tests")]
 
     import pyarrow.parquet as pq
     from oracle import _canon, duckdb_con
 
-    import gen
     import reference
     from checks import same_frame
     from mare_spark.registry import all_queries
 
-    sf_dir = os.path.join(root, ".perfbench_work", "check", f"{args.kind}-{args.seed}")
-    gen.generate(args.kind, args.seed, sf_dir)
+    sf_dir = os.path.join(here, "data", "sf0.1")
     docs = pq.read_table(f"{sf_dir}/documents.parquet").to_pandas()
     ids, texts = docs["doc_id"].tolist(), docs["text"].tolist()
     pairs = reference.jaccard_pairs(ids, texts)
@@ -44,9 +40,11 @@ def main() -> int:
     bad = 0
     try:
         for name, got in mine.items():
+            t0 = time.perf_counter()
             want = _canon(con.execute(registry[name].oracle).df())
             why = same_frame(_canon(got), want)
-            print(f"{name}: {len(want)} rows, {'match' if why is None else why}")
+            print(f"{name}: {len(want)} rows, oracle {time.perf_counter() - t0:.1f} s, "
+                  f"{'match' if why is None else why}")
             bad += why is not None
     finally:
         con.close()

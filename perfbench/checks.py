@@ -1,12 +1,14 @@
 """Per-invocation answer checks, run outside the timed region.
 
 * Queries with a reference answer (the registry's DuckDB oracle run via
-  ``tests/oracle.py``, or the exact Python reference for the two Jaccard
-  queries) must match it after the oracle harness's canonicalization.
+  ``tests/oracle.py``, or the exact Python reference for
+  ``pipeline_clean_corpus``) must match it after the oracle harness's
+  canonicalization.
 * ``dedup_minhash_lsh`` (no oracle; LSH is approximate) must reproduce its
-  first invocation's pairs, each reported Jaccard must equal the exact
-  snapped Jaccard of that pair, and the share of injected pairs at or
-  above the threshold that it reports is the recall.
+  first invocation's pairs. In that first answer each reported Jaccard must
+  equal the exact snapped Jaccard of the pair and reach the threshold, and
+  the share of the exact pairs it reports (the recall) must reach
+  ``LSH_RECALL_FLOOR``. Until an answer passes, each one is checked so.
 """
 
 from __future__ import annotations
@@ -14,9 +16,9 @@ from __future__ import annotations
 import pandas as pd
 import pyarrow.parquet as pq
 
-from gen import oracle_shingles, snapped_jaccard
 from oracle import _canon, _cell_eq
-from workloads import LSH_QUERIES, LSH_THRESHOLD
+from reference import oracle_shingles, snapped_jaccard
+from workloads import LSH_QUERIES, LSH_RECALL_FLOOR, LSH_THRESHOLD
 
 
 def same_frame(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
@@ -38,11 +40,13 @@ def same_frame(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
 
 
 class Checker:
-    def __init__(self, sf_dir: str, expected: dict, truth: list[dict]):
+    def __init__(self, sf_dir: str, expected: dict,
+                 exact_pairs: pd.DataFrame | None):
         self.sf_dir = sf_dir
         self.expected = expected
-        self.truth = {(p["doc_a"], p["doc_b"]) for p in truth
-                      if p["jaccard"] >= LSH_THRESHOLD}
+        self.truth = set() if exact_pairs is None else set(
+            zip(exact_pairs["doc_a"].tolist(), exact_pairs["doc_b"].tolist())
+        )
         self.first: dict[str, pd.DataFrame] = {}
         self.recall: float | None = None
         self._texts: dict | None = None
@@ -66,7 +70,12 @@ class Checker:
     def _check_lsh(self, name: str, got: pd.DataFrame) -> str | None:
         if name in self.first:
             return same_frame(got, self.first[name])
-        self.first[name] = got
+        why = self._lsh_pairs(got)
+        if why is None:  # a wrong answer is checked in full again next time
+            self.first[name] = got
+        return why
+
+    def _lsh_pairs(self, got: pd.DataFrame) -> str | None:
         if self._texts is None:
             docs = pq.read_table(f"{self.sf_dir}/documents.parquet").to_pandas()
             self._texts = dict(zip(docs["doc_id"], docs["text"]))
@@ -78,4 +87,7 @@ class Checker:
                 return f"pair ({a}, {b}) reports {jac}, exact {exact}"
             found.add((min(a, b), max(a, b)))
         self.recall = len(found & self.truth) / max(len(self.truth), 1)
+        if self.recall < LSH_RECALL_FLOOR:
+            return (f"recall {self.recall:.4f} of {len(self.truth)} exact "
+                    f"pairs is below {LSH_RECALL_FLOOR}")
         return None

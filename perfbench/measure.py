@@ -21,7 +21,7 @@ import traceback
 import probes
 from checks import Checker
 from spans import Tracer
-from workloads import QUERY_TABLES, WORKLOADS
+from workloads import LSH_QUERIES, QUERY_TABLES, WORKLOADS
 
 # Two samples of every query per run: a single slow round would otherwise
 # decide the median alone.
@@ -246,6 +246,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--sf-dir", required=True)
+    ap.add_argument("--expected", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, default=0)
@@ -264,15 +265,13 @@ def main() -> int:
     warm = [sess.invoke(name, -1 - i) for i, name in enumerate(order)]
     setup_s = time.time() - args.spawn_time
 
-    with open(os.path.join(args.sf_dir, "manifest.json")) as fh:
-        manifest = json.load(fh)
-    with open(os.path.join(args.sf_dir, "expected.pkl"), "rb") as fh:
-        expected = pickle.load(fh)  # written by run.py for this input
-    checker = Checker(args.sf_dir, expected, manifest["corpus"]["truth"])
+    with open(args.expected, "rb") as fh:
+        expected = pickle.load(fh)  # written by run.py for these tables
+    checker = Checker(args.sf_dir, expected["answers"], expected.get("exact_pairs"))
     for rec in warm:
         checker.check(rec)
         rec.pop("result")
-    rows = {q: sum(manifest["rows"][t] for t in QUERY_TABLES[q]) for q in order}
+    rows = {q: sum(expected["rows"][t] for t in QUERY_TABLES[q]) for q in order}
 
     with probes.RssSampler() as rss:
         plain = run_rounds(sess, order, args.seconds, checker, 0)
@@ -292,7 +291,7 @@ def main() -> int:
         traced = run_rounds(sess, order, args.seconds, checker, len(plain))
         for rec in traced:
             rec.update(sess.hook_recs.get(rec["k"], {}))
-            if rec["query"] in ("dedup_minhash_lsh", "dedup_ngram_jaccard"):
+            if rec["query"] in LSH_QUERIES:
                 rec["pairs_out"] = rec.get("rows_out", 0)
         record["traced"] = loop_metrics(traced, rows)
         record["layers"] = layer_metrics(traced, sess.tracer, sess.start_s)

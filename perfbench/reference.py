@@ -4,8 +4,8 @@ They compute what the registry's DuckDB oracles for
 ``dedup_ngram_jaccard`` and ``pipeline_clean_corpus`` compute (same
 tokenization, same 6-decimal snap, same exact connected components), but
 with a prefix-filtered all-pairs join instead of a self-join over every
-shingle occurrence. ``python3 perfbench/run.py --check-reference`` compares
-both against the DuckDB oracles on a generated input.
+shingle occurrence. ``python3 perfbench/check_reference.py`` compares both
+against the DuckDB oracles on the benchmark's tables.
 """
 
 from __future__ import annotations
@@ -17,15 +17,28 @@ from collections import Counter, defaultdict
 import numpy as np
 import pandas as pd
 
-from gen import oracle_shingles, snapped_jaccard
-
 THRESHOLD = 0.8
 # Lowest raw Jaccard whose 6-decimal snap still reads >= THRESHOLD.
 _RAW_FLOOR = THRESHOLD - 5e-7
 
 
 def _words(text: str) -> list[str]:
+    """Tokens as the registry's DuckDB oracle splits them (lower, collapse
+    whitespace, trim, split on single spaces)."""
     return re.sub(r"\s+", " ", text).strip().lower().split(" ")
+
+
+def oracle_shingles(text: str, n: int = 3) -> set[str]:
+    """Word n-gram set exactly as the registry's DuckDB oracle builds it."""
+    words = _words(text)
+    return {" ".join(words[i:i + n]) for i in range(max(len(words) - n + 1, 0))}
+
+
+def snapped_jaccard(a: set, b: set) -> float:
+    """Jaccard with the oracle's 6-decimal snap."""
+    common = len(a & b)
+    union = len(a) + len(b) - common
+    return float(np.floor(common / union * 1e6 + 0.5) / 1e6) if union else 0.0
 
 
 def jaccard_pairs(doc_ids, texts) -> pd.DataFrame:

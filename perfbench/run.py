@@ -5,9 +5,9 @@
 
 Run from the repository root. The run
 
-1. generates the workload's input for ``--seed`` (``gen.py``) under
-   ``.perfbench_work/inputs`` and computes every query's reference answer
-   there, outside any timing;
+1. computes every query's reference answer on the shipped sf0.1 tables
+   (``data/sf0.1``) outside any timing, once per checkout, under
+   ``.perfbench_work/expected``; ``--seed`` draws the query order;
 2. starts ``measure.py`` as a child process with a host-sized, pinned
    environment (see ``env_for``), which starts a SparkSession, runs one
    warm-up round of the workload's queries (``setup_s`` ends here), then
@@ -30,16 +30,16 @@ import json
 import math
 import os
 import pickle
-import shutil
 import signal
 import subprocess
 import sys
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-RUN_LIMIT_S = 160  # the whole run, generation included; stopping takes <= 10 s
-KEEP_INPUTS = 6
+RUN_LIMIT_S = 160  # the whole run, reference answers included; stopping takes <= 10 s
 DRIVER_MEM = "2g"
+# The shipped sf0.1 fixture tables every workload reads (never written).
+SF_DIR = os.path.join(HERE, "data", "sf0.1")
 
 
 def env_for(root: str, work: str) -> dict:
@@ -66,57 +66,49 @@ def env_for(root: str, work: str) -> dict:
     return env
 
 
-def prepare_input(work: str, kind: str, seed: int) -> str:
-    """Generate (or reuse) the input for (kind, seed) and its reference
-    answers; return the input directory."""
-    import gen
-
-    inputs = os.path.join(work, "inputs")
-    out = os.path.join(inputs, f"{kind}-{seed}")
-    if not os.path.exists(os.path.join(out, "expected.pkl")):
-        tmp = out + ".partial"
-        shutil.rmtree(tmp, ignore_errors=True)
-        manifest = gen.generate(kind, seed, tmp)
-        expected = reference_answers(tmp, manifest)
-        with open(os.path.join(tmp, "expected.pkl"), "wb") as fh:
-            pickle.dump(expected, fh)
-        shutil.rmtree(out, ignore_errors=True)
-        os.rename(tmp, out)
-    os.utime(out)
-    old = sorted(
-        (os.path.join(inputs, d) for d in os.listdir(inputs)),
-        key=os.path.getmtime,
-    )
-    for path in old[:-KEEP_INPUTS]:
-        shutil.rmtree(path, ignore_errors=True)
-    return out
+def prepare_expected(work: str, wl) -> str:
+    """Compute (or reuse) the workload's reference answers and input row
+    counts on the shipped tables; return the pickle's path."""
+    path = os.path.join(work, "expected", f"{wl.name}.pkl")
+    if not os.path.exists(path):
+        tmp = path + ".partial"
+        with open(tmp, "wb") as fh:
+            pickle.dump(reference_answers(SF_DIR, wl), fh)
+        os.rename(tmp, path)
+    return path
 
 
-def reference_answers(sf_dir: str, manifest: dict) -> dict:
-    """Canonical expected answer of every checked query on this input."""
+def reference_answers(sf_dir: str, wl) -> dict:
+    """Canonical expected answer of every checked query of ``wl``, the exact
+    near-duplicate pairs (LSH recall truth) and every table's row count."""
     import pyarrow.parquet as pq
     from oracle import _canon, duckdb_con
 
     import reference
     from mare_spark.registry import all_queries
-    from workloads import LSH_QUERIES, PY_REFERENCE, WORKLOADS
+    from mare_spark.tables import TABLE_NAMES, table_path
+    from workloads import LSH_QUERIES, PY_REFERENCE
 
     registry = all_queries()
-    names = {q for w in WORKLOADS.values() if w.input_kind == manifest["kind"]
-             for q in w.queries if q not in LSH_QUERIES}
-    out = {}
-    if names & set(PY_REFERENCE):
-        docs = pq.read_table(f"{sf_dir}/documents.parquet").to_pandas()
+    out = {"answers": {}, "rows": {
+        t: pq.ParquetFile(table_path(sf_dir, t)).metadata.num_rows
+        for t in TABLE_NAMES
+    }}
+    if set(wl.queries) & set(PY_REFERENCE + LSH_QUERIES):
+        docs = pq.read_table(table_path(sf_dir, "documents")).to_pandas()
         ids, texts = docs["doc_id"].tolist(), docs["text"].tolist()
         pairs = reference.jaccard_pairs(ids, texts)
-        out["dedup_ngram_jaccard"] = _canon(pairs)
-        out["pipeline_clean_corpus"] = _canon(
+        out["exact_pairs"] = pairs
+        out["answers"]["pipeline_clean_corpus"] = _canon(
             reference.clean_corpus(ids, texts, pairs)
         )
     con = duckdb_con(sf_dir)
     try:
-        for name in sorted(names - set(PY_REFERENCE)):
-            out[name] = _canon(con.execute(registry[name].oracle).df())
+        for name in wl.queries:
+            if name not in PY_REFERENCE + LSH_QUERIES:
+                out["answers"][name] = _canon(
+                    con.execute(registry[name].oracle).df()
+                )
     finally:
         con.close()
     return out
@@ -211,16 +203,17 @@ def main() -> int:
         return 2
 
     work = os.path.join(root, ".perfbench_work")
-    for sub in ("tmp", "spark-local", "results"):
+    for sub in ("tmp", "spark-local", "results", "expected"):
         os.makedirs(os.path.join(work, sub), exist_ok=True)
-    sf_dir = prepare_input(work, wl.input_kind, args.seed)
+    expected = prepare_expected(work, wl)
 
     out = os.path.join(
         work, "results",
         f"{wl.name}-seed{args.seed}-trace{args.trace}-{int(t_start)}.json",
     )
     cmd = [sys.executable, os.path.join(HERE, "measure.py"),
-           "--workload", wl.name, "--sf-dir", sf_dir, "--seed", str(args.seed),
+           "--workload", wl.name, "--sf-dir", SF_DIR, "--expected", expected,
+           "--seed", str(args.seed),
            "--seconds", str(args.seconds), "--trace", str(args.trace),
            "--tmp-dir", os.path.join(work, "tmp"), "--out", out]
     spawn = time.time()

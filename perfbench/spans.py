@@ -100,5 +100,17 @@ class Tracer:
         return out
 
     def totals(self, name: str) -> tuple[int, float]:
-        hits = [s for s in self.spans if s.name == name]
-        return len(hits), sum(s.end - s.start for s in hits)
+        """Call count and wall time of ``name``. A call made inside another
+        call of the same name (``MaRe.reduce`` recurses) is counted but its
+        time is not, as the outer call's time already covers it."""
+        calls, wall = 0, 0.0
+        for s in self.spans:
+            if s.name != name:
+                continue
+            calls += 1
+            parent = s.parent
+            while parent is not None and self.spans[parent].name != name:
+                parent = self.spans[parent].parent
+            if parent is None:
+                wall += s.end - s.start
+        return calls, wall
