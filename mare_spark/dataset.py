@@ -16,12 +16,19 @@ reference              this class
 ``collectReduce``      ``collect_reduce(...)``      (MaRe.scala:194-241)
 =====================  ============================================
 
-Execution model: ``map`` enters the Catalyst plan as a ``MapInPandas`` node.
-The executor-side body re-assembles the WHOLE partition from the Arrow batch
-iterator (one container run per partition, not per batch — the reference's
-unit of work is the partition, MaRe.scala:69-96), writes it to a temp mount
-under ``$TMPDIR`` (tmpfs recommended, reference README.md:25), runs the
-command, reads the output mount back and yields it as Arrow batches.
+Execution model: building a pipeline runs no Spark job. The partition count
+is tracked statically (``repartition``/``repartition_by`` set it, ``map`` and
+``cache`` carry it; only a DataFrame wrapped directly asks Spark, once), so
+``reduce`` plans its whole tree up front and every container stage runs
+exactly once, in the action. ``map`` enters the Catalyst plan as a
+``MapInPandas`` node, and consecutive ``map`` calls (no repartition or cache
+between) share that node: one Python pass per partition runs their commands
+in order. The executor-side body re-assembles the WHOLE partition from the
+Arrow batch iterator (one container run per partition, not per batch — the
+reference's unit of work is the partition, MaRe.scala:69-96), writes it to a
+temp mount under ``$TMPDIR`` (tmpfs recommended, reference README.md:25),
+runs the command, reads the output mount back and hands it to the next
+command in the pass, or yields it as Arrow batches after the last one.
 
 Scale posture: the per-partition temp file bounds memory exactly like the
 reference (MountPoint.scala:90 reads whole files); at 100 TB you size
@@ -141,17 +148,43 @@ class MaRe:
         self.df = df
         self.backend = backend
         self.tmp_dir = tmp_dir
+        # Partition count, once known: set by repartition/repartition_by,
+        # else asked of ``_same_parts`` (the MaRe a map/cache derived from)
+        # or, for a DataFrame wrapped directly, of Spark — at most once.
+        self._parts: int | None = None
+        self._same_parts: MaRe | None = None
+        # For a map result: (input DataFrame, stages) such that ``df`` is
+        # ONE mapInPandas over the input that runs the stages in order.
+        self._pipe: tuple[DataFrame, tuple] | None = None
+
+    def _derive(self, df: DataFrame, parts: int | None = None) -> "MaRe":
+        """A MaRe over ``df``, which has ``parts`` partitions, or as many
+        as ``self`` when ``parts`` is None."""
+        out = MaRe(df, self.backend, self.tmp_dir)
+        out._parts = self._parts if parts is None else parts
+        if out._parts is None:
+            out._same_parts = self
+        return out
 
     # -- RDD-plumbing parity (MaRe.scala:32-51) ------------------------------
     @property
     def num_partitions(self) -> int:
-        return self.df.rdd.getNumPartitions()
+        """Partition count, known statically along a pipeline: only a
+        DataFrame wrapped directly asks Spark (once), which under AQE runs
+        the upstream shuffle stages."""
+        if self._parts is None:
+            self._parts = (
+                self._same_parts.num_partitions
+                if self._same_parts is not None
+                else self.df.rdd.getNumPartitions()
+            )
+        return self._parts
 
     def cache(self) -> "MaRe":
-        return MaRe(self.df.cache(), self.backend, self.tmp_dir)
+        return self._derive(self.df.cache())
 
     def repartition(self, num_partitions: int) -> "MaRe":
-        return MaRe(self.df.repartition(num_partitions), self.backend, self.tmp_dir)
+        return self._derive(self.df.repartition(num_partitions), num_partitions)
 
     def repartition_by(self, key: str | Column | Callable, num_partitions: int) -> "MaRe":
         """Co-locate records by key (MaRe.scala:161-178).
@@ -168,9 +201,11 @@ class MaRe:
                 .partitionBy(num_partitions)
                 .map(lambda kv: kv[1])
             )
-            return MaRe(self.df.sparkSession.createDataFrame(rdd, schema), self.backend, self.tmp_dir)
+            return self._derive(
+                self.df.sparkSession.createDataFrame(rdd, schema), num_partitions
+            )
         col = F.col(key) if isinstance(key, str) else key
-        return MaRe(self.df.repartition(num_partitions, col), self.backend, self.tmp_dir)
+        return self._derive(self.df.repartition(num_partitions, col), num_partitions)
 
     # -- container ops -------------------------------------------------------
     def map(
@@ -185,19 +220,22 @@ class MaRe:
 
         Type-changing: the result schema is ``output_mount.spark_schema``.
         Runs on every partition, including empty ones (reference parity).
+        A map directly on a map result (no repartition or cache between)
+        joins its ``mapInPandas``: one Python pass per partition runs the
+        commands in order, each with its own mounts and codecs.
         """
         backend, tmp_dir = self.backend, self.tmp_dir
+        src, stages = self._pipe or (self.df, ())
+        stages += ((input_mount, output_mount, image, command, force_pull),)
 
         def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            yield from _pipe_partition(
-                batches, input_mount, output_mount, image, command, force_pull,
-                backend, tmp_dir,
-            )
+            for stage in stages:
+                batches = _pipe_partition(batches, *stage, backend, tmp_dir)
+            yield from batches
 
-        return MaRe(
-            self.df.mapInPandas(fn, schema=output_mount.spark_schema),
-            backend, tmp_dir,
-        )
+        out = self._derive(src.mapInPandas(fn, schema=output_mount.spark_schema))
+        out._pipe = (src, stages)
+        return out
 
     def reduce(
         self,
@@ -217,6 +255,9 @@ class MaRe:
         (:132); recursion repartitions to ``P/scale`` while it still shrinks
         (:133-141; like the reference, the recursive call does not forward
         ``force_pull``), else a final single-partition pass (:142-149).
+        The tree is planned from the static partition count, so building it
+        runs no Spark job; on a map result, the first-level combine shares
+        that map's Python pass.
         """
         if depth < 2:
             raise ValueError(f"depth must be >= 2 but got {depth}")

@@ -205,24 +205,20 @@ def _verified_jaccard(sh_a: str, sh_b: str) -> Column:
     verify stages: ``|a∩b| / (|a| + |b| − |a∩b|)``.
 
     Every verify input is a sorted-distinct hash array by construction
-    (``np.unique`` output in :func:`hashed_word_shingles` and
-    :func:`_minhash_base_udf`), so ``|a∪b| = |a| + |b| − |a∩b|`` exactly —
-    including the empty/empty case (0, same NULL-on-0/0 division as
-    before). That replaces ``array_union``'s per-pair materialization (a
-    hash-set build plus an ``|a|+|b|``-element array allocated only to be
-    counted) with two integer subtractions; ``array_intersect`` still runs
-    once per pair (codegen subexpression elimination covers its two
-    textual uses). Same integer operands → bit-identical division and
+    (``np.unique`` in :func:`hashed_word_shingles`, ``sorted(set(...))``
+    in :func:`_minhash_base_udf`, so a 64-bit collision merges two grams
+    rather than duplicating a hash), so ``|a∪b| = |a| + |b| − |a∩b|``
+    exactly — including the empty/empty case (0, same NULL-on-0/0
+    division as before). That replaces ``array_union``'s per-pair
+    materialization (a hash-set build plus an ``|a|+|b|``-element array
+    allocated only to be counted) with two integer subtractions;
+    ``array_intersect`` still runs once per pair (codegen subexpression
+    elimination covers its two textual uses). Same integer operands → bit-identical division and
     rounding (r10; guide §1.2 per-task work — measured on the verify
     stage, the largest CPU slice of the jaccard/pipeline invocations).
-    ``MARE_JACCARD_UNION_ARRAY=1`` restores the array_union form (kept so
-    the interleaved A/B harness can re-verify the trade on future hosts).
     """
     inter = F.size(F.array_intersect(sh_a, sh_b))
-    if os.environ.get("MARE_JACCARD_UNION_ARRAY"):
-        union = F.size(F.array_union(sh_a, sh_b))
-    else:
-        union = F.size(sh_a) + F.size(sh_b) - inter
+    union = F.size(sh_a) + F.size(sh_b) - inter
     return fround(inter / union, 6)
 
 
@@ -677,7 +673,9 @@ def _minhash_base_udf(num_perm: int, shingle_n: int, seed: int):
                     )
                     gram_cache[g] = h
                 hs.append(h)
-            hs.sort()
+            # distinct even if two grams' 64-bit hashes collide: the
+            # verify Jaccard's |a|+|b|-|a∩b| union needs set semantics
+            hs = sorted(set(hs))
             shingles_out.append(hs)
             flat.extend(hs)
             offs.append(len(flat))

@@ -1,11 +1,13 @@
 """SparkSession factory for the engine.
 
-Local-mode defaults are tuned for the test harness (``local[$SPARK_GRAFT_CPUS]``,
-single JVM); the same settings are the right starting point on a real cluster:
-AQE handles runtime re-planning (skew joins, partition coalescing), Arrow makes
-the Pandas-UDF path batch-transfer instead of per-row pickling, and a UTC
-session timezone keeps timestamp semantics aligned with the parquet fixtures
-and the DuckDB oracle.
+Local-mode defaults are sized to the host: ``local[$SPARK_GRAFT_CPUS]``, by
+default every CPU this process may use, and a driver heap of half the
+physical memory unless ``$SPARK_GRAFT_DRIVER_MEM`` is set. The same settings
+are the right starting point on a real cluster: AQE handles runtime
+re-planning (skew joins, partition coalescing), Arrow makes the Pandas-UDF
+path batch-transfer instead of per-row pickling, and a UTC session timezone
+keeps timestamp semantics aligned with the parquet fixtures and the DuckDB
+oracle.
 
 Design notes for 100 TB scale
 -----------------------------
@@ -27,6 +29,22 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def host_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def host_driver_mem() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half the host's physical memory in
+    whole GiB (at least 1g): in local mode the driver JVM shares the host
+    with its Python workers and the piped commands."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    with open("/proc/meminfo") as fh:
+        kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{max(kib // (2 << 20), 1)}g"
+
+
 def get_spark(
     app_name: str = "mare_spark",
     *,
@@ -39,7 +57,7 @@ def get_spark(
     Parameters mirror what a deployment would tune; everything else is a
     scale-safe default.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -79,7 +97,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # -- local-mode ergonomics ---------------------------------------
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", host_driver_mem())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -40,6 +40,25 @@ def test_engine_run_query(eng):
     assert "sum_qty" in df.columns
 
 
+def test_session_defaults_are_host_sized(monkeypatch):
+    """Unset, the local-mode CPU count is the process's CPU affinity and
+    the driver heap is half of physical memory; the variables override."""
+    import os
+
+    from mare_spark.session import host_cpus, host_driver_mem
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert host_cpus() == len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as fh:
+        kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    gib = int(host_driver_mem().removesuffix("g"))
+    assert gib >= 1 and gib << 21 <= max(kib, 2 << 20)  # at most half of RAM
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert (host_cpus(), host_driver_mem()) == (3, "2g")
+
+
 def test_jdbc_requires_bounds_with_partition_column(spark):
     with pytest.raises(ValueError, match="requires lower_bound"):
         read_jdbc(spark, "jdbc:h2:mem:x", "t", partition_column="id")

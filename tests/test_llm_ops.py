@@ -1889,6 +1889,26 @@ def test_minhash_grid_chunking_is_bit_identical(docs):
     assert big == small
 
 
+def test_minhash_shingles_distinct_under_hash_collision(spark):
+    """Two grams whose 64-bit hashes collide leave ONE hash in the
+    MinHash tier's shingle array: the verify Jaccard's
+    |a|+|b|-|a∩b| union is exact only over distinct elements."""
+    import pandas as pd
+
+    import mare_spark.operators.dedup as D
+
+    saved = dict(D._MH_GRAM_CACHE)
+    try:
+        D._MH_GRAM_CACHE.update({"alpha beta gamma": 7, "beta gamma delta": 7})
+        out = D._minhash_base_udf(16, 3, 42).func(
+            pd.Series(["alpha beta gamma delta"])
+        )
+    finally:
+        D._MH_GRAM_CACHE.clear()
+        D._MH_GRAM_CACHE.update(saved)
+    assert list(out["shingles"][0]) == [7]
+
+
 def test_verified_jaccard_matches_array_union_form(spark):
     """r10: the verify stages compute |a∪b| as |a|+|b|−|a∩b| instead of
     materializing array_union — exact for the DISTINCT-element shingle

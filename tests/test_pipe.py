@@ -441,3 +441,50 @@ def test_pipe_differentials_on_adversarial_text(spark, tmp_path):
     # awk NF over the 6 non-NULL docs ('multi\nline text here' = 1 + 3:
     # the newline is a record boundary, fields sum across records)
     assert tok == 3 + 2 + 2 + 0 + 2 + 4
+
+
+def test_reduce_tree_builds_without_jobs_and_runs_each_stage_once(
+    spark, tmp_path, monkeypatch
+):
+    """Building map + a depth-3 reduce tree over 5 partitions launches no
+    Spark job (partition counts are static: 5, then 2, then 1), and one
+    collect() runs every container stage exactly once: 5 map + 5 combine
+    + 2 + 1 = 13 runs. The map and the first-level combine share one
+    MapInPandas, so the plan holds 3 of them, not 4."""
+    log = tmp_path / "runs.log"
+    df = spark.createDataFrame(
+        [(" ".join(["w"] * (i % 7)),) for i in range(60)], "value string"
+    )
+    counts = []
+    repartition = MaRe.repartition
+
+    def counted(self, n):
+        out = repartition(self, n)
+        counts.append(out.num_partitions)
+        return out
+
+    monkeypatch.setattr(MaRe, "repartition", counted)
+    sc = spark.sparkContext
+    sc.setJobGroup("mare-build", "MaRe pipeline build")
+    try:
+        mapped = MaRe(df).repartition(5).map(
+            TextFile("/in"), TextFile("/out"), "busybox:1",
+            f"echo map >> {log}; awk '{{ s += NF }} END {{ print s+0 }}' /in > /out",
+        )
+        assert mapped.num_partitions == 5
+        out = mapped.reduce(
+            TextFile("/in"), TextFile("/out"), "busybox:1",
+            f"echo sum >> {log}; awk '{{ s += $1 }} END {{ print s+0 }}' /in > /out",
+            depth=3,
+        )
+        assert counts == [5, 2, 1]
+        assert out.num_partitions == 1
+        assert sc.statusTracker().getJobIdsForGroup("mare-build") == []
+        plan = out.df._jdf.queryExecution().analyzed().toString()
+        assert plan.count("MapInPandas") == 3
+        rows = out.df.collect()
+    finally:
+        sc.setJobGroup("", "")
+    assert [int(r.value) for r in rows] == [sum(i % 7 for i in range(60))]
+    runs = log.read_text().split()
+    assert (runs.count("map"), runs.count("sum")) == (5, 8)

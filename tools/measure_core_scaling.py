@@ -37,11 +37,11 @@ def main() -> None:
         _simhash_pudf,
         hashed_word_shingles,
     )
-    from mare_spark.session import get_spark
+    from mare_spark.session import get_spark, host_cpus
     from mare_spark.tables import read_table
 
     spark = get_spark("measure_core_scaling")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     docs = read_table(spark, sf_dir, "documents")
     # MARE_SCALE_REPL=k unions the corpus k times: at sf0.1 a single pass
     # is ~0.3-1 s of compute against a ~0.55 s fixed floor (job launch +
