@@ -1,7 +1,7 @@
 # Round-exit gate: run `make check` as the LAST act before recording
 # artifacts — round 3 shipped with its own plan-audit test red because the
 # final full-suite run was skipped. `check` is the full gate; `quickcheck`
-# is the fast inner loop (plan audit + all 132 DuckDB oracles at sf0.01).
+# is the fast inner loop (plan audit + all 153 DuckDB oracles at sf0.01).
 #
 # Snapshot discipline (round 8 shipped 2 red tests in its final commit):
 # a round's final commit must contain NO new operator/test logic that

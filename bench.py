@@ -95,43 +95,37 @@ def main() -> None:
     calib_before = _calibrate(spark)
     print(f"# calibration (before): {calib_before}", file=sys.stderr)
 
-    from mare_spark.operators.dedup import release_caches
+    from mare_spark.cache import cache_scope
 
     timings: dict[str, float] = {}
     timings_full: dict[str, float] = {}
     for name, q in sorted(queries.items()):
         samples: list[float] = []
         full_samples: list[float] = []
-        dfs = []
         n = 0
-        for i in range(1 + WARM_RUNS):
-            t0 = time.perf_counter()
-            df = q.fn(spark, sf_dir)
-            n = df.count()
-            dt = time.perf_counter() - t0
-            dfs.append(df)
-            if i > 0:  # drop the cold run
-                samples.append(dt)
-        # FULL-execution timing via the noop sink (r8 review): count()
-        # lets Catalyst prune unreferenced final projections and
-        # aggregate expressions, so expression-heavy tails were
-        # under-measured. The count() series stays the headline "value"
-        # for round-over-round comparability (every prior BENCH_r{N}
-        # used it); "value_full_exec" is the honest companion series.
-        for _ in range(WARM_RUNS):
-            t0 = time.perf_counter()
-            df = q.fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            full_samples.append(time.perf_counter() - t0)
-            dfs.append(df)
+        # one scope per query: warm reuse within a query is kept, cache
+        # pressure does not accumulate across queries
+        with cache_scope():
+            for i in range(1 + WARM_RUNS):
+                t0 = time.perf_counter()
+                df = q.fn(spark, sf_dir)
+                n = df.count()
+                dt = time.perf_counter() - t0
+                if i > 0:  # drop the cold run
+                    samples.append(dt)
+            # FULL-execution timing via the noop sink (r8 review): count()
+            # lets Catalyst prune unreferenced final projections and
+            # aggregate expressions, so expression-heavy tails were
+            # under-measured. The count() series stays the headline "value"
+            # for round-over-round comparability (every prior BENCH_r{N}
+            # used it); "value_full_exec" is the honest companion series.
+            for _ in range(WARM_RUNS):
+                t0 = time.perf_counter()
+                df = q.fn(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                full_samples.append(time.perf_counter() - t0)
         med = statistics.median(samples)
         med_full = statistics.median(full_samples)
-        # release operator-attached persists from EVERY run's plan (pandas-UDF
-        # plans are not plan-equal across invocations, so each run may pin its
-        # own signature/candidate caches) — warm reuse within a query is kept,
-        # cache pressure must not accumulate across queries.
-        for df in dfs:
-            release_caches(df)
         timings[name] = round(med, 4)
         timings_full[name] = round(med_full, 4)
         print(

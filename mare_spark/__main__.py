@@ -118,6 +118,7 @@ def cmd_report(args: argparse.Namespace) -> int:
     """One-page corpus dataset card: mix, quality funnel, dedup clusters,
     length histogram — the audit queries a team runs before training,
     composed into a single readout."""
+    from mare_spark.cache import cache_scope
     from mare_spark.registry import all_queries
 
     queries = all_queries()
@@ -134,12 +135,15 @@ def cmd_report(args: argparse.Namespace) -> int:
         # (r8 review); JSON consumers get the section on each row instead
         header = f"\n== {title} [{name}] =="
         print(header, file=sys.stderr if args.json else sys.stdout)
-        df = queries[name].fn(spark, args.sf_dir)
-        if args.json:
-            from pyspark.sql import functions as F
+        # one scope per section: the session runs every section, so each
+        # one's intermediates drop once it is printed
+        with cache_scope():
+            df = queries[name].fn(spark, args.sf_dir)
+            if args.json:
+                from pyspark.sql import functions as F
 
-            df = df.select(F.lit(name).alias("section"), "*")
-        _emit(df, args.limit, args.json)
+                df = df.select(F.lit(name).alias("section"), "*")
+            _emit(df, args.limit, args.json)
     return 0
 
 

@@ -51,6 +51,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from mare_spark.cache import cache_scope, persist
 from mare_spark.codecs import MountPoint
 from mare_spark.runner import run_container
 
@@ -294,52 +295,52 @@ class MaRe:
         reference's per-partition ``sc.runJob`` loop (MaRe.scala:224-227):
         only one partition is resident on the driver at a time.
         """
-        persisted = self.df.persist(intermediate_storage_level)
-        persisted.count()  # force upstream computation (MaRe.scala:205-208)
+        with cache_scope():
+            persisted = persist(self.df, intermediate_storage_level)
+            persisted.count()  # force upstream computation (MaRe.scala:205-208)
 
-        parent = os.path.dirname(os.path.abspath(local_out_path))
-        tmp_dir = os.path.join(parent, f".temporary_{uuid.uuid4()}")
-        os.makedirs(tmp_dir, exist_ok=True)
-        tmp_in = os.path.join(tmp_dir, f"mare_{uuid.uuid4()}")
-        try:
-            input_mount.create_empty(tmp_in)
-            # Streaming driver pull; append preserves the record stream
-            # exactly like the reference's per-partition loop. The flush
-            # budget is BYTES first (row count only as a backstop):
-            # 10k buffered WholeText/Binary records of ~100 MB each would
-            # be ~1 TB resident, where the documented contract is
-            # one-bounded-slice-at-a-time.
-            batch: list = []
-            batch_bytes = 0
-            flush_bytes = 64 << 20
-            for row in persisted.toLocalIterator(prefetchPartitions=False):
-                batch.append(row)
-                batch_bytes += _payload_bytes(tuple(row))
-                if batch_bytes >= flush_bytes or len(batch) >= 10_000:
+            parent = os.path.dirname(os.path.abspath(local_out_path))
+            tmp_dir = os.path.join(parent, f".temporary_{uuid.uuid4()}")
+            os.makedirs(tmp_dir, exist_ok=True)
+            tmp_in = os.path.join(tmp_dir, f"mare_{uuid.uuid4()}")
+            try:
+                input_mount.create_empty(tmp_in)
+                # Streaming driver pull; append preserves the record stream
+                # exactly like the reference's per-partition loop. The flush
+                # budget is BYTES first (row count only as a backstop):
+                # 10k buffered WholeText/Binary records of ~100 MB each would
+                # be ~1 TB resident, where the documented contract is
+                # one-bounded-slice-at-a-time.
+                batch: list = []
+                batch_bytes = 0
+                flush_bytes = 64 << 20
+                for row in persisted.toLocalIterator(prefetchPartitions=False):
+                    batch.append(row)
+                    batch_bytes += _payload_bytes(tuple(row))
+                    if batch_bytes >= flush_bytes or len(batch) >= 10_000:
+                        input_mount.write(
+                            input_mount.records_from_pandas(_rows_to_pandas(batch, persisted)),
+                            tmp_in,
+                            append=True,
+                        )
+                        batch, batch_bytes = [], 0
+                if batch:
                     input_mount.write(
                         input_mount.records_from_pandas(_rows_to_pandas(batch, persisted)),
                         tmp_in,
                         append=True,
                     )
-                    batch, batch_bytes = [], 0
-            if batch:
-                input_mount.write(
-                    input_mount.records_from_pandas(_rows_to_pandas(batch, persisted)),
-                    tmp_in,
-                    append=True,
-                )
 
-            output_mount.create_empty(local_out_path)
-            run_container(
-                image,
-                command,
-                binds=[(tmp_in, input_mount.path), (local_out_path, output_mount.path)],
-                force_pull=force_pull,
-                backend=self.backend,
-            )
-        finally:
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-            persisted.unpersist()
+                output_mount.create_empty(local_out_path)
+                run_container(
+                    image,
+                    command,
+                    binds=[(tmp_in, input_mount.path), (local_out_path, output_mount.path)],
+                    force_pull=force_pull,
+                    backend=self.backend,
+                )
+            finally:
+                shutil.rmtree(tmp_dir, ignore_errors=True)
 
 
 def _rows_to_pandas(rows: list, df: DataFrame) -> pd.DataFrame:

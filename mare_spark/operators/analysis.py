@@ -693,25 +693,22 @@ def ngram_novelty(
     """
     from pyspark import StorageLevel
 
-    from mare_spark.operators.dedup import (
-        _materialize,
-        attach_caches,
-        hashed_word_shingles,
-    )
+    from mare_spark.cache import persist
+    from mare_spark.operators.dedup import _materialize, hashed_word_shingles
 
     # the Arrow shingle hasher is the dominant cost and feeds BOTH the
     # doc-frequency aggregate and the join-back — persist it once
-    # (spillable) instead of hashing the corpus twice; release via the
-    # attach_caches contract like the dedup pipelines. Eager build
+    # (spillable) instead of hashing the corpus twice. Eager build
     # (_materialize): the aggregate branch and the join probe launch
     # concurrently under AQE and would race the shingle UDF through
     # twice on a cold cache.
-    ex = _materialize(
+    ex = _materialize(persist(
         df.select(
             F.col(id_col), *[F.col(c) for c in keep_cols],
             F.explode(hashed_word_shingles(F.col(text_col), n)).alias("gh"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    ))
     shared = (
         ex.select("gh").groupBy("gh").agg(F.count("*").alias("gram_df"))
         .filter(F.col("gram_df") >= 2)
@@ -728,16 +725,12 @@ def ngram_novelty(
             ),
         )
     )
-    return attach_caches(
-        per_doc.withColumn(
-            "novelty",
-            fround(
-                F.col("n_novel_ngrams")
-                / F.col("n_distinct_ngrams").cast("double"),
-                6,
-            ),
+    return per_doc.withColumn(
+        "novelty",
+        fround(
+            F.col("n_novel_ngrams") / F.col("n_distinct_ngrams").cast("double"),
+            6,
         ),
-        ex,
     )
 
 

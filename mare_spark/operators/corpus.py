@@ -1010,7 +1010,7 @@ def repeated_chunk_scrub_cms(
     """
     from pyspark import StorageLevel
 
-    from mare_spark.operators.dedup import attach_caches
+    from mare_spark.cache import persist
     from mare_spark.operators.sketches import build_cms, cms_probe_expr
 
     _check_scrub_columns(
@@ -1020,25 +1020,22 @@ def repeated_chunk_scrub_cms(
 
     # same narrow-scan fan-out rationale as repeated_chunk_scrub
     ex = _chunk_explode(_fan_out(df), text_col, id_col, chunk_words, keep_cols)
-    ex = ex.withColumn("chunk_h", F.xxhash64("chunk")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     # the expansion feeds TWO jobs (sketch build, then probe/reassembly);
-    # without the persist the full tokenize+chunk+hash scan runs twice —
-    # release via release_caches(result) once downstream state is
-    # materialized, the same contract as ngram_jaccard_pairs
+    # without the persist the full tokenize+chunk+hash scan runs twice
+    ex = persist(
+        ex.withColumn("chunk_h", F.xxhash64("chunk")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     sketch = build_cms(ex, "chunk_h", width_bits=width_bits, depth=depth)
     flagged = ex.withColumn(
         "chunk_freq_est", cms_probe_expr(F.col("chunk_h"), sketch)
     )
     keep = F.col("chunk_freq_est") <= max_freq
-    # the sketch broadcast rides the cache-release contract too: Broadcast
-    # exposes unpersist(), which release_caches invokes — repeated scrubs
-    # in one session must not accumulate pinned 2+ MB sketch copies
-    bc = sketch.spark_broadcast(df.sparkSession)
-    return attach_caches(
-        _chunk_reassemble(flagged, id_col, keep_cols, keep), ex, bc
-    )
+    # the sketch broadcast lives in the caller's cache scope like the
+    # expansion — repeated scrubs in one session must not accumulate
+    # pinned 2+ MB sketch copies
+    persist(sketch.spark_broadcast(df.sparkSession))
+    return _chunk_reassemble(flagged, id_col, keep_cols, keep)
 
 
 # Knuth multiplicative constant for the hashed classifier's synthetic

@@ -45,6 +45,7 @@ from pyspark.storagelevel import StorageLevel
 
 _log = logging.getLogger("mare_spark.dedup")
 
+from mare_spark.cache import persist, release_caches  # noqa: F401
 from mare_spark.numeric import fround
 
 # Mersenne prime 2^31 - 1 — the MinHash permutation modulus. It must match
@@ -179,27 +180,6 @@ def _candidate_shingles(base: DataFrame, cand: DataFrame) -> DataFrame:
     return base.select("doc", "shingles").join(cand_docs, "doc", "left_semi")
 
 
-def attach_caches(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Record the intermediate persists backing ``result`` so a composing
-    pipeline can release them once downstream state is materialized (see
-    :func:`release_caches`). Long-lived sessions otherwise accumulate one
-    base+candidate cache per operator invocation."""
-    existing = getattr(result, "_mare_caches", ())
-    result._mare_caches = tuple(existing) + tuple(cached)
-    return result
-
-
-def release_caches(df: DataFrame) -> None:
-    """Unpersist the intermediates recorded by :func:`attach_caches`.
-
-    ONLY safe once nothing downstream still needs ``df``'s lineage — i.e.
-    after the consumer has materialized its own state (collected, written,
-    or eagerly checkpointed, as :func:`dedup_clusters` does)."""
-    for cached in getattr(df, "_mare_caches", ()):
-        cached.unpersist()
-    df._mare_caches = ()
-
-
 def _verified_jaccard(sh_a: str, sh_b: str) -> Column:
     """Exact Jaccard of two DISTINCT-element shingle arrays, for the LSH
     verify stages: ``|a∩b| / (|a| + |b| − |a∩b|)``.
@@ -229,7 +209,7 @@ def _persisted_candidates(cand: DataFrame) -> DataFrame:
     eagerly (see :func:`_materialize`): the verify action launches its join
     exchanges concurrently and a cold cache would be raced through once per
     exchange."""
-    return _materialize(cand.persist(StorageLevel.MEMORY_AND_DISK))
+    return _materialize(persist(cand, StorageLevel.MEMORY_AND_DISK))
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -464,12 +444,13 @@ def ngram_jaccard_pairs(
     """
     from pyspark.sql import Window as W
 
-    base = _materialize(
+    base = _materialize(persist(
         _fan_out(df).select(
             F.col(id_col).alias("doc"),
             hashed_word_shingles(F.col(text_col), n).alias("shingles"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    ))
 
     inv = base.select("doc", F.size("shingles").alias("n_sh"),
                       F.explode("shingles").alias("shingle"))
@@ -519,12 +500,12 @@ def ngram_jaccard_pairs(
     # The prefix is the SMALL end of the index — ~(1-t) of the exploded
     # shingles — and disk-backed, so this is the standard "index once,
     # probe twice" materialization, not a corpus-sized cache.
-    prefix = _materialize(
+    prefix = _materialize(persist(
         inv.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= prefix_len)
-        .select("shingle", "doc", "n_sh", "rn")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        .select("shingle", "doc", "n_sh", "rn"),
+        StorageLevel.MEMORY_AND_DISK,
+    ))
 
     # Jaccard ≥ t additionally implies (both exact, cheap row predicates):
     # * length filter — min(|a|,|b|) ≥ t · max(|a|,|b|);
@@ -549,14 +530,13 @@ def ngram_jaccard_pairs(
 
     cand = _persisted_candidates(cand)
     sh = _candidate_shingles(base, cand)
-    result = (
+    return (
         cand.join(sh.withColumnsRenamed({"doc": "doc_a", "shingles": "sh_a"}), "doc_a")
         .join(sh.withColumnsRenamed({"doc": "doc_b", "shingles": "sh_b"}), "doc_b")
         .withColumn("jaccard", _verified_jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    return attach_caches(result, base, cand, prefix)
 
 
 def _perm_coeffs(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -742,7 +722,7 @@ def _mh_base(
     :func:`minhash_lsh_pairs`). Built eagerly (:func:`_materialize`): the
     band-bucket self-join's two exchange sides launch concurrently and
     would otherwise race the signature UDF through twice."""
-    return _materialize(
+    return _materialize(persist(
         _fan_out(df)
         .select(
             F.col(id_col).alias("doc"),
@@ -754,9 +734,9 @@ def _mh_base(
             "doc",
             F.col("mh.shingles").alias("shingles"),
             F.col("mh.sig").alias("sig"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    ))
 
 
 def _mh_buckets(base: DataFrame, bands: int, r: int) -> DataFrame:
@@ -865,7 +845,7 @@ def minhash_lsh_pairs(
     # at sf0.1: invocation CPU 9.7-10.0 s → 7.1-7.8 s, executorRunTime
     # 25-26 s → 20-22 s, at +1 barrier job. At corpus scale the saved
     # duplicate is a corpus-sized projection + aggregate per side.
-    buckets = _materialize(buckets.persist(StorageLevel.MEMORY_AND_DISK))
+    buckets = _materialize(persist(buckets, StorageLevel.MEMORY_AND_DISK))
 
     cand = (
         buckets.alias("x")
@@ -881,14 +861,13 @@ def minhash_lsh_pairs(
 
     cand = _persisted_candidates(cand)
     sh = _candidate_shingles(base, cand)
-    verified = (
+    return (
         cand.join(sh.withColumnsRenamed({"doc": "doc_a", "shingles": "sh_a"}), "doc_a")
         .join(sh.withColumnsRenamed({"doc": "doc_b", "shingles": "sh_b"}), "doc_b")
         .withColumn("jaccard", _verified_jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    return attach_caches(verified, base, buckets, cand)
 
 
 def minhash_lsh_join(
@@ -972,14 +951,13 @@ def minhash_lsh_join(
         )
         .withColumnsRenamed({"doc": "id_right", "shingles": "sh_r"})
     )
-    verified = (
+    return (
         cand.join(sh_l, "id_left")
         .join(sh_r, "id_right")
         .withColumn("jaccard", _verified_jaccard("sh_l", "sh_r"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_left", "id_right", "jaccard")
     )
-    return attach_caches(verified, base_l, base_r, cand)
 
 
 def simhash64(text_col: Column, shingle_n: int = 2) -> Column:
@@ -1119,7 +1097,9 @@ def simhash_pairs(
     # 64 KB codegen limit, falls back to interpreted eval and runs ~10×
     # slower; the 64×n bit-vote matrix is exactly the shape numpy is good
     # at. This is the sanctioned UDF case: built-ins can't express it fast.
-    base = _materialize(
+    # eager (see _materialize): the chunk self-join's two exchange sides
+    # launch concurrently and would race the simhash UDF twice
+    base = _materialize(persist(
         _fan_out(df)
         .select(
             F.col(id_col).alias("doc"),
@@ -1127,11 +1107,9 @@ def simhash_pairs(
         )
         # gram-less docs (NULL signature) never enter bucketing — the
         # same contract as the MinHash tier's size(shingles) > 0 filter
-        .filter(F.col("sh").isNotNull())
-        # eager (see _materialize): the chunk self-join's two exchange
-        # sides launch concurrently and would race the simhash UDF twice
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        .filter(F.col("sh").isNotNull()),
+        StorageLevel.MEMORY_AND_DISK,
+    ))
     chunk_cols = [
         # a 64-bit-wide chunk (max_hamming=0) IS the signature: the full
         # mask literal (2^64-1) would overflow LongType
@@ -1157,7 +1135,7 @@ def simhash_pairs(
     # anti-join (exchange reuse does not fire across deduplicated
     # self-join sides — see minhash_lsh_pairs). Four fixed-width columns,
     # cheap encode; same census evidence as the minhash bucket persist.
-    chunks = _materialize(chunks.persist(StorageLevel.MEMORY_AND_DISK))
+    chunks = _materialize(persist(chunks, StorageLevel.MEMORY_AND_DISK))
     cand = (
         chunks.alias("x")
         .join(
@@ -1174,14 +1152,13 @@ def simhash_pairs(
         )
         .distinct()
     )
-    result = (
+    return (
         cand.withColumn(
             "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-    return attach_caches(result, base, chunks)
 
 
 def _dedup_clusters_driver(directed: DataFrame) -> DataFrame:
@@ -1517,7 +1494,7 @@ def substring_overlap_candidates(
     # not the exploded index. Eager (see _materialize): the self-join's
     # exchange sides launch concurrently and would race the UDF through
     # once per side on a cold cache.
-    fp = _materialize(fp.persist(StorageLevel.MEMORY_AND_DISK))
+    fp = _materialize(persist(fp, StorageLevel.MEMORY_AND_DISK))
     inv = fp.select(F.col(id_col).alias("doc"), F.explode("fingerprint").alias("fp"))
     if max_fp_freq is not None:
         # Frequency cap via the hot-key HEAD set, not a count window:
@@ -1533,14 +1510,13 @@ def substring_overlap_candidates(
             .filter(F.col("_fp_freq") > max_fp_freq).select("fp")
         )
         inv = inv.join(hot, "fp", "left_anti")
-    return attach_caches(
+    return (
         inv.alias("a")
         .join(inv.alias("b"), "fp")
         .filter(F.col("a.doc") < F.col("b.doc"))
         .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared),
-        fp,
+        .filter(F.col("n_shared") >= min_shared)
     )
 
 

@@ -42,6 +42,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mare_spark.cache import cache_scope, persist
+
 MANIFEST_NAME = "_manifest.json"
 
 _RESERVED = ("shard",)
@@ -238,8 +240,8 @@ def _refresh_from_sharded(
     rewritten slice FROM DISK, and rewrite the manifest."""
     id_col, token_col = manifest["id_col"], manifest["token_col"]
     fmt = manifest["format"]
-    sharded.persist()
-    try:
+    with cache_scope():
+        persist(sharded)
         new_stats = {
             r["shard"]: (r["rows"], r["tokens"], r["id_xor"])
             for r in _shard_stats(sharded, id_col, token_col).collect()
@@ -285,8 +287,6 @@ def _refresh_from_sharded(
                     new_stats[r["shard"]] = (
                         r["rows"], r["tokens"], r["id_xor"],
                     )
-    finally:
-        sharded.unpersist()
 
     manifest = dict(
         manifest,

@@ -374,7 +374,7 @@ def merge_parquet(
     base — it rewrites only the partitions the batch touches (same
     anti-join shape per partition, untouched files byte-identical). For
     frequent fine-grained merges, graduate to a table format with real
-    commit logs (sources.external gates Delta/Iceberg) — copy-on-write
+    commit logs (sources.external gates Delta) — copy-on-write
     rewrites everything it touches by design.
 
     Swap visibility caveat: the tmp→live promotion is two renames, so a

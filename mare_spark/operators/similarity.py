@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from mare_spark.numeric import fround
 
-from mare_spark.operators.dedup import attach_caches
+from mare_spark.cache import persist
 
 
 def cosine_to_query(vec_col, query_vec: list[float]):
@@ -272,7 +272,7 @@ def embedding_lsh_pairs(
     # eager build (dedup._materialize): the bucket self-join's exchange
     # sides launch concurrently and would race a cold cache twice
     base = _materialize(
-        df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).persist()
+        persist(df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")))
     )
     buckets = base.select(
         "vid",
@@ -292,9 +292,7 @@ def embedding_lsh_pairs(
     # each candidate-join side otherwise re-runs the hyperplane-signature
     # pandas UDF — the most expensive step of this operator — plus the
     # cap aggregate/anti-join. Three fixed-width columns, cheap encode.
-    buckets = _materialize(
-        buckets.persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    buckets = _materialize(persist(buckets, StorageLevel.MEMORY_AND_DISK))
     cand = (
         buckets.alias("x")
         .join(
@@ -307,7 +305,7 @@ def embedding_lsh_pairs(
         .distinct()
     )
     v = base
-    result = (
+    return (
         cand.join(v.withColumnsRenamed({"vid": "id_a", "v": "v_a"}), "id_a")
         .join(v.withColumnsRenamed({"vid": "id_b", "v": "v_b"}), "id_b")
         .withColumn(
@@ -316,7 +314,6 @@ def embedding_lsh_pairs(
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
-    return attach_caches(result, base, buckets)
 
 
 def _kmeanspp_init(
@@ -658,12 +655,12 @@ def semantic_dedup_pairs(
 
     # eager build (dedup._materialize): the cell self-join's exchange
     # sides launch concurrently and would race the cell UDF twice
-    base = _materialize(
+    base = _materialize(persist(
         df.select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("v"),
             cells_udf(F.col(vec_col)).alias("cells"),
-        ).persist()
-    )
+        )
+    ))
     blocked = base.select("vid", F.explode("cells").alias("cell"))
     cand = (
         blocked.alias("a")
@@ -676,7 +673,7 @@ def semantic_dedup_pairs(
         .distinct()
     )
     v = base.select("vid", "v")
-    pairs = (
+    return (
         cand.join(v.withColumnsRenamed({"vid": "id_a", "v": "v_a"}), "id_a")
         .join(v.withColumnsRenamed({"vid": "id_b", "v": "v_b"}), "id_b")
         .withColumn(
@@ -685,7 +682,6 @@ def semantic_dedup_pairs(
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
-    return attach_caches(pairs, base)
 
 
 def _nearest_centroid(dv, cents) -> "F.Column":

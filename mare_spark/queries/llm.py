@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mare_spark.cache import cache_scope
 from mare_spark.operators.dedup import (
     embedding_cosine_pairs,
     exact_dedup,
@@ -270,24 +271,22 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs → duplicate clusters (connected components by
     min-label propagation); cluster id = canonical representative to keep."""
-    from mare_spark.operators.dedup import dedup_clusters, release_caches
+    from mare_spark.operators.dedup import dedup_clusters
 
     docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.8,
-        # cap stated explicitly (registry doctrine: caps are never
-        # silent library defaults). Candidate recall loses only
-        # pairs whose EVERY shared shingle is in >1000 docs; at the
-        # sf0.01 correctness gate N=500 < cap, so it provably
-        # cannot bind there.
-        max_shingle_freq=1000,
-    )
-    clusters = dedup_clusters(pairs)
-    # dedup_clusters materialized the edges (checkpoint/collect), so the
-    # pair-generation caches are droppable — without this, every
-    # invocation in a long session leaks a corpus-scale shingle persist
-    release_caches(pairs)
-    return clusters
+    # dedup_clusters materializes the edges (checkpoint/collect), so the
+    # pair-generation caches drop when the scope exits
+    with cache_scope():
+        pairs = ngram_jaccard_pairs(
+            docs, "text", "doc_id", n=3, threshold=0.8,
+            # cap stated explicitly (registry doctrine: caps are never
+            # silent library defaults). Candidate recall loses only
+            # pairs whose EVERY shared shingle is in >1000 docs; at the
+            # sf0.01 correctness gate N=500 < cap, so it provably
+            # cannot bind there.
+            max_shingle_freq=1000,
+        )
+        return dedup_clusters(pairs)
 
 
 @register("dedup_embedding_lsh", category="llm", oracle=None)
@@ -621,24 +620,24 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the common small-edge-set case, resolves by bounded driver
     union-find — see its tier docs), after which the keep-filter plan is
     again end-to-end Catalyst."""
-    from mare_spark.operators.dedup import dedup_clusters, release_caches
+    from mare_spark.operators.dedup import dedup_clusters
     from mare_spark.operators.text import tokens
 
     docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.8,
-        # cap stated explicitly (registry doctrine: caps are never
-        # silent library defaults). Candidate recall loses only
-        # pairs whose EVERY shared shingle is in >1000 docs; at the
-        # sf0.01 correctness gate N=500 < cap, so it provably
-        # cannot bind there.
-        max_shingle_freq=1000,
-    )
-    clusters = dedup_clusters(pairs)
     # dedup_clusters eagerly checkpoints its labels, so the pair-generation
-    # intermediates (shingle base + candidate caches) are droppable here —
-    # without this a long session leaks one cache set per pipeline run.
-    release_caches(pairs)
+    # intermediates (shingle base + candidate caches) drop when the scope
+    # exits
+    with cache_scope():
+        pairs = ngram_jaccard_pairs(
+            docs, "text", "doc_id", n=3, threshold=0.8,
+            # cap stated explicitly (registry doctrine: caps are never
+            # silent library defaults). Candidate recall loses only
+            # pairs whose EVERY shared shingle is in >1000 docs; at the
+            # sf0.01 correctness gate N=500 < cap, so it provably
+            # cannot bind there.
+            max_shingle_freq=1000,
+        )
+        clusters = dedup_clusters(pairs)
     drop = clusters.filter(F.col("member") != F.col("cluster")).select(
         F.col("member").alias("doc_id")
     )
@@ -711,7 +710,6 @@ def pipeline_clean_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (HUGEINT Horner, mod 2^31-1)."""
     from mare_spark.operators.dedup import (
         dedup_clusters,
-        release_caches,
         substring_overlap_candidates,
     )
     from mare_spark.operators.text import tokens
@@ -719,17 +717,17 @@ def pipeline_clean_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").filter(
         F.length("text") == F.octet_length("text")
     )
-    pairs = ngram_jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.8,
-        # cap stated explicitly (registry doctrine: caps are never
-        # silent library defaults). Candidate recall loses only
-        # pairs whose EVERY shared shingle is in >1000 docs; at the
-        # sf0.01 correctness gate N=500 < cap, so it provably
-        # cannot bind there.
-        max_shingle_freq=1000,
-    )
-    clusters = dedup_clusters(pairs)
-    release_caches(pairs)
+    with cache_scope():
+        pairs = ngram_jaccard_pairs(
+            docs, "text", "doc_id", n=3, threshold=0.8,
+            # cap stated explicitly (registry doctrine: caps are never
+            # silent library defaults). Candidate recall loses only
+            # pairs whose EVERY shared shingle is in >1000 docs; at the
+            # sf0.01 correctness gate N=500 < cap, so it provably
+            # cannot bind there.
+            max_shingle_freq=1000,
+        )
+        clusters = dedup_clusters(pairs)
     drop_dup = clusters.filter(F.col("member") != F.col("cluster")).select(
         F.col("member").alias("doc_id")
     )
@@ -740,17 +738,12 @@ def pipeline_clean_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_fp_freq=1000,
     )
     drop_sub = cand.select(F.col("doc_b").alias("doc_id")).distinct()
-    from mare_spark.operators.dedup import attach_caches
-
-    # propagate the fingerprint persist recorded by
-    # substring_overlap_candidates so release_caches(result) can drop it
-    return attach_caches(
+    return (
         docs.withColumn("n_tokens", F.size(tokens(F.col("text"))))
         .filter(F.col("n_tokens") >= 30)
         .join(drop_dup, "doc_id", "left_anti")
         .join(drop_sub, "doc_id", "left_anti")
-        .select("doc_id", "n_tokens"),
-        *getattr(cand, "_mare_caches", ()),
+        .select("doc_id", "n_tokens")
     )
 
 
@@ -769,19 +762,11 @@ def pipeline_clean_corpus_semantic(spark: SparkSession, sf_dir: str) -> DataFram
 
     base = pipeline_clean_corpus_v2(spark, sf_dir)
     emb = read_table(spark, sf_dir, "embeddings")
-    from mare_spark.operators.dedup import attach_caches
-
     sem = semantic_dedup_pairs(
         emb, "embedding", "vec_id", nlist=16, threshold=0.4, nprobe_assign=3
     )
     drop_sem = sem.select(F.col("id_b").alias("doc_id")).distinct()
-    # propagate the operator's persists so release_caches(result) can drop
-    # them (bench/composing pipelines) — v1/v2 release theirs explicitly
-    return attach_caches(
-        base.join(drop_sem, "doc_id", "left_anti"),
-        *getattr(sem, "_mare_caches", ()),
-        *getattr(base, "_mare_caches", ()),
-    )
+    return base.join(drop_sem, "doc_id", "left_anti")
 
 
 @register(

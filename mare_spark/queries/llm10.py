@@ -142,6 +142,7 @@ def rag_retrieval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns ``(qid, lang, rnk, doc_id, chunk_idx, adc_dist)`` — rnk
     1..k within each query's gate.
     """
+    from mare_spark.cache import persist
     from mare_spark.operators.pq import (
         ivfpq_topk_batch,
         pq_assign,
@@ -164,60 +165,60 @@ def rag_retrieval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") * F.lit(1_000_000) + F.col("chunk_idx"))
         .cast("long"),
     )
-    emb = hashing_embed(chunks, "chunk_text", dim=p["dim"]).persist()
-    try:
-        cents = train_ivf_centroids(emb, nlist=p["nlist"])
-        books = train_pq_codebooks(
-            emb, "embedding", "chunk_uid", m=p["m"], nbits=p["nbits"]
-        )
-        index = pq_assign(ivf_assign(emb, cents), "embedding", books)
+    # persisted in the caller's cache scope, not released here: the
+    # returned plan reads ``emb`` through ``index``, so the caller's
+    # action must still find it cached
+    emb = persist(hashing_embed(chunks, "chunk_text", dim=p["dim"]))
+    cents = train_ivf_centroids(emb, nlist=p["nlist"])
+    books = train_pq_codebooks(
+        emb, "embedding", "chunk_uid", m=p["m"], nbits=p["nbits"]
+    )
+    index = pq_assign(ivf_assign(emb, cents), "embedding", books)
 
-        # queries: doc's own first chunk, embedded by the same operator.
-        # NULL-lang docs are excluded from the QUERY set explicitly — a
-        # NULL gate value matches nothing under `==` and would also make
-        # the per-language grouping unsortable (the NULL-contract class
-        # the repo's review sweeps pin)
-        qrows = (
-            emb.filter(
-                (F.col("chunk_idx") == 0) & F.col("lang").isNotNull()
-            )
-            .select("doc_id", "lang", "embedding")
-            .orderBy("doc_id")
-            .limit(p["n_queries"])
-            .collect()
+    # queries: doc's own first chunk, embedded by the same operator.
+    # NULL-lang docs are excluded from the QUERY set explicitly — a
+    # NULL gate value matches nothing under `==` and would also make
+    # the per-language grouping unsortable (the NULL-contract class
+    # the repo's review sweeps pin)
+    qrows = (
+        emb.filter(
+            (F.col("chunk_idx") == 0) & F.col("lang").isNotNull()
         )
-        if not qrows:
-            raise ValueError(
-                "rag_retrieval_report: no chunk-0 rows with a non-NULL "
-                "lang — cannot form a query set"
-            )
-        by_lang: dict[str, list] = {}
-        for r in qrows:
-            by_lang.setdefault(r.lang, []).append(
-                (int(r.doc_id), [float(x) for x in r.embedding])
-            )
-        reports = []
-        for lang, qs in sorted(by_lang.items()):
-            qdf = spark.createDataFrame(
-                qs, "qid long, qvec array<double>"
-            )
-            gated = index.filter(F.col("lang") == lang)
-            topk = ivfpq_topk_batch(
-                qdf, gated, cents, books, p["k"],
-                nprobe=p["nprobe"], id_col="chunk_uid",
-            )
-            reports.append(topk.withColumn("lang", F.lit(lang)))
-        out = reports[0]
-        for r in reports[1:]:
-            out = out.unionByName(r)
-        return out.select(
-            "qid", "lang", "rnk",
-            # integer division, not `/`: double promotion loses exactness
-            # past 2^53 and could mis-attribute a hit to a neighbor doc
-            F.expr("chunk_uid div 1000000").alias("doc_id"),
-            F.pmod(F.col("chunk_uid"), F.lit(1_000_000)).cast("int")
-            .alias("chunk_idx"),
-            fround(F.col("adc_dist"), 6).alias("adc_dist"),
-        ).orderBy("qid", "rnk")
-    finally:
-        emb.unpersist()
+        .select("doc_id", "lang", "embedding")
+        .orderBy("doc_id")
+        .limit(p["n_queries"])
+        .collect()
+    )
+    if not qrows:
+        raise ValueError(
+            "rag_retrieval_report: no chunk-0 rows with a non-NULL "
+            "lang — cannot form a query set"
+        )
+    by_lang: dict[str, list] = {}
+    for r in qrows:
+        by_lang.setdefault(r.lang, []).append(
+            (int(r.doc_id), [float(x) for x in r.embedding])
+        )
+    reports = []
+    for lang, qs in sorted(by_lang.items()):
+        qdf = spark.createDataFrame(
+            qs, "qid long, qvec array<double>"
+        )
+        gated = index.filter(F.col("lang") == lang)
+        topk = ivfpq_topk_batch(
+            qdf, gated, cents, books, p["k"],
+            nprobe=p["nprobe"], id_col="chunk_uid",
+        )
+        reports.append(topk.withColumn("lang", F.lit(lang)))
+    out = reports[0]
+    for r in reports[1:]:
+        out = out.unionByName(r)
+    return out.select(
+        "qid", "lang", "rnk",
+        # integer division, not `/`: double promotion loses exactness
+        # past 2^53 and could mis-attribute a hit to a neighbor doc
+        F.expr("chunk_uid div 1000000").alias("doc_id"),
+        F.pmod(F.col("chunk_uid"), F.lit(1_000_000)).cast("int")
+        .alias("chunk_idx"),
+        fround(F.col("adc_dist"), 6).alias("adc_dist"),
+    ).orderBy("qid", "rnk")

@@ -577,11 +577,8 @@ def pipeline_clean_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     same stages a production pretraining pass chains, with the whole
     composition replayed in one SQL oracle."""
     from mare_spark.operators.corpus import repeated_chunk_scrub
-    from mare_spark.operators.dedup import (
-        dedup_clusters,
-        ngram_jaccard_pairs,
-        release_caches,
-    )
+    from mare_spark.cache import cache_scope
+    from mare_spark.operators.dedup import dedup_clusters, ngram_jaccard_pairs
     from mare_spark.operators.text import tokens
 
     docs = read_table(spark, sf_dir, "documents")
@@ -589,14 +586,14 @@ def pipeline_clean_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id",
         chunk_words=_CHUNK_WORDS, max_freq=_MAX_FREQ,
     ).select("doc_id", F.col("clean_text").alias("text"))
-    pairs = ngram_jaccard_pairs(
-        scrub, "text", "doc_id", n=3, threshold=0.8,
-        # cap stated explicitly (registry doctrine) — cannot bind at the
-        # sf0.01 gate (N=500 < 1000); see llm.py's jaccard call sites
-        max_shingle_freq=1000,
-    )
-    clusters = dedup_clusters(pairs)
-    release_caches(pairs)
+    with cache_scope():
+        pairs = ngram_jaccard_pairs(
+            scrub, "text", "doc_id", n=3, threshold=0.8,
+            # cap stated explicitly (registry doctrine) — cannot bind at the
+            # sf0.01 gate (N=500 < 1000); see llm.py's jaccard call sites
+            max_shingle_freq=1000,
+        )
+        clusters = dedup_clusters(pairs)
     drop = clusters.filter(F.col("member") != F.col("cluster")).select(
         F.col("member").alias("doc_id")
     )

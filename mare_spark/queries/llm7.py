@@ -402,16 +402,13 @@ def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked. Plan: the near-dup stack's plans unchanged + one
     broadcast-free aggregate over the (member, cluster) labels — the
     audit adds no corpus-scale work beyond what dedup already ran."""
-    from mare_spark.operators.dedup import (
-        dedup_clusters,
-        ngram_jaccard_pairs,
-        release_caches,
-    )
+    from mare_spark.cache import cache_scope
+    from mare_spark.operators.dedup import dedup_clusters, ngram_jaccard_pairs
 
     docs = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
-    clusters = dedup_clusters(pairs)
-    release_caches(pairs)
+    with cache_scope():
+        pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
+        clusters = dedup_clusters(pairs)
     from mare_spark.queries.llm5 import split_assignment
 
     split = split_assignment("member")

@@ -123,6 +123,7 @@ def sim_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     this row audits); the exact baseline here already runs as one
     batched job (:func:`_exact_l2_topk_batch`).
     """
+    from mare_spark.cache import cache_scope, persist
     from mare_spark.operators.pq import (
         fit_scalar_quantizer,
         ivfpq_topk_batch,
@@ -139,22 +140,18 @@ def sim_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # ONE materialization of the embeddings scan: the fits, both encodes,
-    # and the batched exact-baseline job all re-read it otherwise. Every
-    # persist happens INSIDE the try so a raised fit/assign can't leak a
-    # cached frame into the long-lived driver session.
-    emb = read_table(spark, sf_dir, "embeddings").persist()
-    sq = index = None
-    try:
+    # and the batched exact-baseline job all re-read it otherwise. The
+    # scope drops every persist on exit, also when a fit/assign raises.
+    with cache_scope():
+        emb = persist(read_table(spark, sf_dir, "embeddings"))
         queries = _audit_queries(emb)
         dim = len(queries[0][1])
 
         mins, maxs = fit_scalar_quantizer(emb, "embedding", dim)
-        sq = sq_encode(emb, "embedding", mins, maxs).persist()
+        sq = persist(sq_encode(emb, "embedding", mins, maxs))
         books = train_pq_codebooks(emb, "embedding", "vec_id", m=16, nbits=6)
         cents = train_ivf_centroids(emb, nlist=16)
-        index = pq_assign(
-            ivf_assign(emb, cents), "embedding", books
-        ).persist()
+        index = persist(pq_assign(ivf_assign(emb, cents), "embedding", books))
         qdf = spark.createDataFrame(
             [(qid, qv) for qid, qv in queries],
             "qid long, qvec array<double>",
@@ -183,12 +180,6 @@ def sim_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in rows:
                 by_q[r.qid].append(r.vec_id)
             got[tier] = by_q
-    finally:
-        if sq is not None:
-            sq.unpersist()
-        if index is not None:
-            index.unpersist()
-        emb.unpersist()
 
     report = []
     for tier in ("sq_int8", "pq_adc", "pq_rerank", "ivfpq_full", "ivfpq_n4"):

@@ -301,8 +301,9 @@ def read_with_quarantine(
     corrupt column during parsing only, so filtering on it alone over a
     fresh scan is unsupported (raises AnalysisException) — the cache
     materializes parse results once and both splits read from it. The
-    cache is SHARED: call ``release_caches`` only after BOTH splits are
-    consumed.
+    cache is shared and lives in the caller's
+    :func:`~mare_spark.cache.cache_scope`: consume BOTH splits before
+    that scope exits.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType
@@ -317,17 +318,14 @@ def read_with_quarantine(
         .option("columnNameOfCorruptRecord", corrupt)
         .schema(full)
     )
-    from mare_spark.operators.dedup import attach_caches
+    from mare_spark.cache import persist
 
-    df = getattr(reader, fmt)(path).cache()
+    df = persist(getattr(reader, fmt)(path))
     good = df.filter(F.col(corrupt).isNull()).drop(corrupt)
     bad = df.filter(F.col(corrupt).isNotNull()).select(
         F.col(corrupt).alias("raw_record")
     )
-    # ONE shared cache is recorded on both splits: release_caches(...)
-    # only after BOTH splits are fully consumed — releasing via one split
-    # while the other is still pending would send the other back to the
-    # raw scan, where a corrupt-column-only projection raises the very
-    # AnalysisException the cache exists to avoid (r8 review: the
-    # contract is shared, not per-split)
-    return attach_caches(good, df), attach_caches(bad, df)
+    # a split read after the scope exits goes back to the raw scan, where
+    # a corrupt-column-only projection raises the very AnalysisException
+    # the cache exists to avoid
+    return good, bad

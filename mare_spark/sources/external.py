@@ -1,10 +1,9 @@
 """External-system connectors.
 
-JDBC ships with Spark (wrapper below, parallel-read aware). Lakehouse
-formats (Delta/Iceberg/Hudi) need their runtime jars on the classpath —
-not present in this environment, so those connectors are import-gated
-stubs that fail with an actionable message rather than a class-not-found
-stack (per the engine's stub-or-gate policy for unavailable deps).
+JDBC ships with Spark (wrapper below, parallel-read aware). Delta needs
+its runtime jar on the classpath, so its connectors are gated: without
+the jar they fail with an actionable message rather than a
+class-not-found stack.
 """
 
 from __future__ import annotations
@@ -14,21 +13,12 @@ from pyspark.sql import functions as F
 
 _FORMAT_PROBE_CLASS = {
     "delta": "org.apache.spark.sql.delta.sources.DeltaDataSource",
-    "iceberg": "org.apache.iceberg.spark.source.IcebergSource",
-    "hudi": "org.apache.hudi.DefaultSource",
 }
 
 # Full Ivy coordinates (the form spark.jars.packages actually accepts —
-# a versionless groupId:artifactId is rejected by the coordinate parser,
-# and iceberg/hudi artifact ids are spark-/scala-suffixed)
+# a versionless groupId:artifactId is rejected by the coordinate parser)
 _FORMAT_PACKAGE_HINT = {
     "delta": "io.delta:delta-spark_2.13:<version>",
-    "iceberg": (
-        "org.apache.iceberg:iceberg-spark-runtime-"
-        "<spark.major.minor>_<scala>:<version>"
-    ),
-    "hudi": "org.apache.hudi:hudi-spark<spark.major.minor>-bundle_"
-            "<scala>:<version>",
 }
 
 
@@ -205,13 +195,3 @@ def merge_delta(
         .whenNotMatchedInsert(condition="s.`_op` = 'u'", values=data_cols)
         .execute()
     )
-
-
-def read_iceberg(spark: SparkSession, table: str) -> DataFrame:
-    _require_format(spark, "iceberg")
-    return spark.read.format("iceberg").load(table)
-
-
-def read_hudi(spark: SparkSession, path: str) -> DataFrame:
-    _require_format(spark, "hudi")
-    return spark.read.format("hudi").load(path)

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from mare_spark.numeric import VALUE4, davg, dsum
+from mare_spark.numeric import VALUE4, dsum
 
 
 def _infer_or_cold_start(
@@ -120,21 +120,6 @@ def tumbling_counts(
             "n",
             "total",
         )
-    )
-
-
-def sliding_avg(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Sliding-window average value per event_type."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(davg("value", VALUE4).alias("avg_value"), F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "avg_value", "n")
     )
 
 
@@ -663,11 +648,13 @@ def run_heavy_hitters_over_stream(
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark import StorageLevel
 
+        from mare_spark.cache import cache_scope, persist
+
         # two consumers (CMS build + exact top-N) — persist so the
         # micro-batch source isn't re-read per action (the scrub fold's
         # own pattern; r8 review)
-        batch_df = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+        with cache_scope():
+            batch_df = persist(batch_df, StorageLevel.MEMORY_AND_DISK)
             part = build_cms(
                 batch_df, key_col, width_bits=width_bits, depth=depth
             )
@@ -685,8 +672,6 @@ def run_heavy_hitters_over_stream(
                 .collect()
             )
             tracker.candidates.update(int(r[0]) for r in top_rows)
-        finally:
-            batch_df.unpersist()
 
     def _persist() -> None:
         save(
@@ -737,6 +722,7 @@ def scrub_corpus_stream(
     """
     from pyspark import StorageLevel
 
+    from mare_spark.cache import cache_scope, persist
     from mare_spark.operators.corpus import (
         _check_scrub_columns,
         _chunk_explode,
@@ -759,34 +745,34 @@ def scrub_corpus_stream(
         sketch.table = loaded["table"].copy()
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        ex = (
-            _chunk_explode(batch_df, text_col, id_col, chunk_words,
-                           keep_cols)
-            .withColumn("chunk_h", F.xxhash64("chunk"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        part = build_cms(ex, "chunk_h", width_bits=width_bits, depth=depth)
-        # merge_bytes invalidates the cached broadcast so the probe below
-        # ships the UPDATED table (raw += left it stale on a cluster)
-        sketch.merge_bytes(part.table.tobytes())
-        flagged = ex.withColumn(
-            "est", cms_probe_expr(F.col("chunk_h"), sketch,
-                                  batch_df.sparkSession)
-        )
-        cleaned = _chunk_reassemble(
-            flagged, id_col, keep_cols, F.col("est") <= max_freq
-        )
-        # Epoch-keyed subdirectory in OVERWRITE mode, not a flat append:
-        # a crash after a flat append but before the sketch save would
-        # make the restarted query re-run this epoch and append its rows
-        # a second time. Overwriting epoch=<id> makes the retry replace
-        # its own partial output — the sink is epoch-idempotent like the
-        # sketch fold, and readers see the epoch as a hive partition
-        # column.
-        cleaned.write.mode("overwrite").parquet(
-            f"{out_dir}/epoch={int(epoch_id)}"
-        )
-        ex.unpersist()
+        with cache_scope():
+            ex = persist(
+                _chunk_explode(batch_df, text_col, id_col, chunk_words,
+                               keep_cols)
+                .withColumn("chunk_h", F.xxhash64("chunk")),
+                StorageLevel.MEMORY_AND_DISK,
+            )
+            part = build_cms(ex, "chunk_h", width_bits=width_bits, depth=depth)
+            # merge_bytes invalidates the cached broadcast so the probe below
+            # ships the UPDATED table (raw += left it stale on a cluster)
+            sketch.merge_bytes(part.table.tobytes())
+            flagged = ex.withColumn(
+                "est", cms_probe_expr(F.col("chunk_h"), sketch,
+                                      batch_df.sparkSession)
+            )
+            cleaned = _chunk_reassemble(
+                flagged, id_col, keep_cols, F.col("est") <= max_freq
+            )
+            # Epoch-keyed subdirectory in OVERWRITE mode, not a flat append:
+            # a crash after a flat append but before the sketch save would
+            # make the restarted query re-run this epoch and append its rows
+            # a second time. Overwriting epoch=<id> makes the retry replace
+            # its own partial output — the sink is epoch-idempotent like the
+            # sketch fold, and readers see the epoch as a hive partition
+            # column.
+            cleaned.write.mode("overwrite").parquet(
+                f"{out_dir}/epoch={int(epoch_id)}"
+            )
 
     q = (
         stream_docs.writeStream.foreachBatch(

@@ -16,3 +16,8 @@ def spark():
     spark = get_spark("mare_spark_tests", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+def cached_entries(spark) -> int:
+    """Plans the session's cache manager currently holds."""
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()

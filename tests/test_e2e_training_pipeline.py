@@ -24,11 +24,8 @@ from mare_spark.operators.corpus import (
     epoch_shuffle,
     pack_sequences,
 )
-from mare_spark.operators.dedup import (
-    dedup_clusters,
-    ngram_jaccard_pairs,
-    release_caches,
-)
+from mare_spark.cache import cache_scope
+from mare_spark.operators.dedup import dedup_clusters, ngram_jaccard_pairs
 from mare_spark.operators.export import (
     export_training_shards,
     refresh_training_shards,
@@ -48,9 +45,9 @@ def cleaned(spark):
         F.col("n_tokens") >= 30
     )
 
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
-    clusters = dedup_clusters(pairs)
-    release_caches(pairs)
+    with cache_scope():
+        pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
+        clusters = dedup_clusters(pairs)
     drop = clusters.filter(F.col("member") != F.col("cluster")).select(
         F.col("member").alias("doc_id")
     )

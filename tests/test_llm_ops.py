@@ -30,7 +30,7 @@ from mare_spark.operators.similarity import (
     train_ivf_centroids,
 )
 from mare_spark.tables import read_table
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, cached_entries
 
 
 @pytest.fixture(scope="module")
@@ -137,51 +137,44 @@ def test_ivf_assignment_partitions_corpus(emb):
     assert assigned.exceptAll(again.select("vec_id", "ivf_cell")).count() == 0
 
 
-def test_release_caches_unpersists_intermediates(docs):
-    """Operators attach their internal persists to the result; release_caches
-    drops them once a consumer has materialized downstream state."""
+def test_release_caches_unpersists_intermediates(spark, docs):
+    """Built outside any cache scope, an operator's persists land in the
+    root scope and stay cached until release_caches empties it."""
     from mare_spark.operators.dedup import release_caches
 
+    release_caches()  # drop what earlier unscoped tests left behind
+    before = cached_entries(spark)
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
-    pairs.count()  # materialize → base + candidate caches are live
-    cached = pairs._mare_caches
-    assert cached and all(c.storageLevel.useMemory or c.storageLevel.useDisk
-                          for c in cached)
+    pairs.count()
+    # shingle base + candidate pairs + prefix index are live
+    assert cached_entries(spark) == before + 3
     release_caches(pairs)
-    assert pairs._mare_caches == ()
-    assert all(
-        not (c.storageLevel.useMemory or c.storageLevel.useDisk) for c in cached
-    )
+    assert cached_entries(spark) == before
 
 
-def test_simhash_and_embedding_lsh_attach_caches(docs, emb):
-    """Every persisting operator must route its result through attach_caches
-    so long-lived sessions can release the intermediates (simhash_pairs and
-    embedding_lsh_pairs leaked one cached base per call in r1)."""
+def test_simhash_and_embedding_lsh_scope_caches(spark, docs, emb):
+    """Every persisting operator registers its intermediates in the
+    caller's cache scope, so long-lived sessions release them
+    (simhash_pairs and embedding_lsh_pairs leaked one cached base per
+    call in r1)."""
+    from mare_spark.cache import cache_scope
     from mare_spark.operators.dedup import release_caches, simhash_pairs
     from mare_spark.operators.similarity import embedding_lsh_pairs
 
-    for pairs in (
-        simhash_pairs(docs, "text", "doc_id", max_hamming=3),
-        embedding_lsh_pairs(
-            emb,
-            "embedding",
-            "vec_id",
-            threshold=0.4,
-            dim=len(emb.head()["embedding"]),
+    release_caches()  # drop what earlier unscoped tests left behind
+    dim = len(emb.head()["embedding"])
+    for build in (
+        lambda: simhash_pairs(docs, "text", "doc_id", max_hamming=3),
+        lambda: embedding_lsh_pairs(
+            emb, "embedding", "vec_id", threshold=0.4, dim=dim
         ),
     ):
-        pairs.count()
-        cached = pairs._mare_caches
-        assert cached
-        assert all(
-            c.storageLevel.useMemory or c.storageLevel.useDisk for c in cached
-        )
-        release_caches(pairs)
-        assert all(
-            not (c.storageLevel.useMemory or c.storageLevel.useDisk)
-            for c in cached
-        )
+        before = cached_entries(spark)
+        with cache_scope() as held:
+            build().count()
+            assert held
+            assert cached_entries(spark) == before + len(held)
+        assert cached_entries(spark) == before
 
 
 def test_multimodal_decode_schema_and_determinism(docs):
@@ -832,18 +825,17 @@ def test_jaccard_uncapped_path_agrees_with_capped(spark):
     survivor window) must produce identical pairs whenever the cap never
     binds — which the fixture guarantees (densest 3-gram is far below
     1000 docs, pinned by the canary in test_queries_oracle)."""
-    from mare_spark.operators.dedup import release_caches
+    from mare_spark.cache import cache_scope
     from tests.conftest import SF_SMOKE
 
     docs = read_table(spark, SF_SMOKE, "documents")
-    capped = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
-    uncapped = ngram_jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.8, max_shingle_freq=None
-    )
-    got_c = {(r.doc_a, r.doc_b, r.jaccard) for r in capped.collect()}
-    got_u = {(r.doc_a, r.doc_b, r.jaccard) for r in uncapped.collect()}
-    release_caches(capped)
-    release_caches(uncapped)
+    with cache_scope():
+        capped = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
+        uncapped = ngram_jaccard_pairs(
+            docs, "text", "doc_id", n=3, threshold=0.8, max_shingle_freq=None
+        )
+        got_c = {(r.doc_a, r.doc_b, r.jaccard) for r in capped.collect()}
+        got_u = {(r.doc_a, r.doc_b, r.jaccard) for r in uncapped.collect()}
     assert got_c, "fixture should contain seeded near-dups"
     assert got_c == got_u
 
@@ -855,7 +847,8 @@ def test_lsh_bucket_cap_drops_saturated_groups(spark):
     With the cap disabled the same corpus yields the full k*(k-1)/2
     duplicate pairs — pinning that the cap (and only the cap) removed
     them."""
-    from mare_spark.operators.dedup import minhash_lsh_pairs, release_caches
+    from mare_spark.cache import cache_scope
+    from mare_spark.operators.dedup import minhash_lsh_pairs
 
     boiler = "the quick brown fox jumps over the lazy dog again and again"
     rows = [(i, boiler) for i in range(20)]
@@ -865,21 +858,21 @@ def test_lsh_bucket_cap_drops_saturated_groups(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    capped = minhash_lsh_pairs(
-        df, "text", "doc_id", num_perm=16, bands=4, threshold=0.5,
-        bucket_cap=10,
-    )
-    got = {(r.doc_a, r.doc_b) for r in capped.collect()}
-    release_caches(capped)
+    with cache_scope():
+        capped = minhash_lsh_pairs(
+            df, "text", "doc_id", num_perm=16, bands=4, threshold=0.5,
+            bucket_cap=10,
+        )
+        got = {(r.doc_a, r.doc_b) for r in capped.collect()}
     assert (100, 101) in got
     assert not any(a < 20 and b < 20 for a, b in got), got
 
-    uncapped = minhash_lsh_pairs(
-        df, "text", "doc_id", num_perm=16, bands=4, threshold=0.5,
-        bucket_cap=None,
-    )
-    got_u = {(r.doc_a, r.doc_b) for r in uncapped.collect()}
-    release_caches(uncapped)
+    with cache_scope():
+        uncapped = minhash_lsh_pairs(
+            df, "text", "doc_id", num_perm=16, bands=4, threshold=0.5,
+            bucket_cap=None,
+        )
+        got_u = {(r.doc_a, r.doc_b) for r in uncapped.collect()}
     assert sum(1 for a, b in got_u if a < 20 and b < 20) == 20 * 19 // 2
     assert (100, 101) in got_u
 
@@ -1835,27 +1828,29 @@ def test_lsh_bucket_tables_are_materialized_once(docs):
     bucket/chunk table (exchange reuse does not fire across deduplicated
     self-join sides, so an unpersisted bucket subtree would be recomputed
     — band projection plus cap anti-join — once per join side)."""
+    from mare_spark.cache import cache_scope
     from mare_spark.operators.dedup import (
         minhash_lsh_pairs,
         release_caches,
         simhash_pairs,
     )
 
-    mh = minhash_lsh_pairs(
-        docs, "text", "doc_id", num_perm=64, bands=16, threshold=0.8,
-        bucket_cap=10_000,
-    )
-    # base + bucket table + candidates, all storage-backed at build time
-    assert len(mh._mare_caches) == 3, mh._mare_caches
-    assert all(
-        c.storageLevel.useMemory or c.storageLevel.useDisk
-        for c in mh._mare_caches
-    )
-    release_caches(mh)
-
-    sh = simhash_pairs(docs, "text", "doc_id", max_hamming=3)
-    assert len(sh._mare_caches) == 2, sh._mare_caches  # base + chunk table
-    release_caches(sh)
+    spark = docs.sparkSession
+    release_caches()  # drop what earlier unscoped tests left behind
+    before = cached_entries(spark)
+    with cache_scope() as held:
+        minhash_lsh_pairs(
+            docs, "text", "doc_id", num_perm=64, bands=16, threshold=0.8,
+            bucket_cap=10_000,
+        )
+        # base + bucket table + candidates, all cached at build time
+        assert len(held) == 3, held
+        assert cached_entries(spark) == before + 3
+    with cache_scope() as held:
+        simhash_pairs(docs, "text", "doc_id", max_hamming=3)
+        assert len(held) == 2, held  # base + chunk table
+        assert cached_entries(spark) == before + 2
+    assert cached_entries(spark) == before
 
 
 def test_minhash_grid_chunking_is_bit_identical(docs):

@@ -410,13 +410,15 @@ def test_jaccard_windows_are_cap_bounded_only(spark):
     appear."""
     import re
 
-    from mare_spark.operators.dedup import ngram_jaccard_pairs, release_caches
+    from mare_spark.cache import cache_scope
+    from mare_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = read_table(spark, SF_ORACLE, "documents")
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
-    # unpersist FIRST so no subtree renders as InMemoryRelation and the
-    # window specs are always visible in the formatted plan
-    release_caches(pairs)
+    # exit the scope (unpersist) FIRST so no subtree renders as
+    # InMemoryRelation and the window specs are always visible in the
+    # formatted plan
+    with cache_scope():
+        pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
     plan = P.formatted_plan(pairs)
     # Node counts vary with cache substitution (persisted subtrees render
     # as InMemoryRelation or inline depending on suite order), so assert

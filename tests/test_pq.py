@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 
 from mare_spark.tables import read_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, cached_entries
 
 
 @pytest.fixture(scope="module")
@@ -461,6 +461,7 @@ def test_rag_retrieval_report_equals_stepwise_composition(spark):
     so anything else means the spaces drifted)."""
     from pyspark.sql import functions as F
 
+    from mare_spark.cache import cache_scope, persist, release_caches
     from mare_spark.operators.pq import (
         ivfpq_topk_batch,
         pq_assign,
@@ -471,12 +472,14 @@ def test_rag_retrieval_report_equals_stepwise_composition(spark):
     from mare_spark.queries.llm10 import _RAG
     from mare_spark.registry import all_queries
 
-    got = [
-        tuple(r)
-        for r in all_queries()["rag_retrieval_report"]
-        .fn(spark, SF_SMOKE)
-        .collect()
-    ]
+    release_caches()  # drop what earlier unscoped tests left behind
+    with cache_scope():
+        before = cached_entries(spark)
+        out = all_queries()["rag_retrieval_report"].fn(spark, SF_SMOKE)
+        # the returned plan reads the chunk embeddings through the index,
+        # so they stay cached until the caller's scope exits
+        assert cached_entries(spark) == before + 1
+        got = [tuple(r) for r in out.collect()]
 
     p = _RAG
     docs = read_table(spark, SF_SMOKE, "documents")
@@ -489,8 +492,8 @@ def test_rag_retrieval_report_equals_stepwise_composition(spark):
         (F.col("doc_id") * F.lit(1_000_000) + F.col("chunk_idx"))
         .cast("long"),
     )
-    emb = hashing_embed(chunks, "chunk_text", dim=p["dim"]).persist()
-    try:
+    with cache_scope():
+        emb = persist(hashing_embed(chunks, "chunk_text", dim=p["dim"]))
         cents = train_ivf_centroids(emb, nlist=p["nlist"])
         books = train_pq_codebooks(
             emb, "embedding", "chunk_uid", m=p["m"], nbits=p["nbits"]
@@ -526,8 +529,6 @@ def test_rag_retrieval_report_equals_stepwise_composition(spark):
                 )
                 for r in rows
             )
-    finally:
-        emb.unpersist()
     assert sorted(got) == sorted(want)
     top1 = {r[0]: (r[3], r[4]) for r in got if r[2] == 1}
     assert top1 == {qid: (qid, 0) for qid in top1}

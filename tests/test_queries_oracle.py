@@ -5,8 +5,9 @@ from __future__ import annotations
 
 import pytest
 
+from mare_spark.cache import cache_scope
 from mare_spark.registry import all_queries
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE, cached_entries
 from tests.oracle import compare
 
 QUERIES = all_queries()
@@ -17,17 +18,24 @@ ROWS_ONLY = sorted(n for n, q in QUERIES.items() if not q.oracle)
 @pytest.mark.parametrize("name", ORACLE_CHECKED)
 def test_oracle_match(spark, name):
     q = QUERIES[name]
-    df = q.fn(spark, SF_ORACLE)
-    compare(df, q.oracle, SF_ORACLE)
+    with cache_scope():
+        compare(q.fn(spark, SF_ORACLE), q.oracle, SF_ORACLE)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_not_hollow(spark, name):
     """A 0-row result hash-matches a 0-row oracle, so an over-restrictive
     predicate passes the gate while checking nothing. Every declared query
-    must select actual rows at the oracle SF."""
-    df = QUERIES[name].fn(spark, SF_ORACLE)
-    assert df.count() > 0, f"{name} returns 0 rows at sf0.01 — hollow check"
+    must select actual rows at the oracle SF.
+
+    Built and counted inside a cache scope, which must leave the cache
+    manager as it found it: a persist that escapes the scope is a leak
+    that accumulates across invocations in a long-lived session."""
+    before = cached_entries(spark)
+    with cache_scope():
+        n = QUERIES[name].fn(spark, SF_ORACLE).count()
+    assert n > 0, f"{name} returns 0 rows at sf0.01 — hollow check"
+    assert cached_entries(spark) == before, f"{name} leaks a cache"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)

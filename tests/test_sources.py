@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from mare_spark import sources as src
 from mare_spark.tables import read_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, cached_entries
 
 
 def test_csv_roundtrip(spark, tmp_path):
@@ -273,15 +273,21 @@ def test_sources_review_guards_r8(spark, tmp_path):
     # --- quarantine via public DDL parse
     feed = tmp_path / "feed.csv"
     feed.write_text("a,b\n1,2\nbadrow\n")
+    from mare_spark.cache import cache_scope
     from mare_spark.sources import read_with_quarantine
 
-    good, bad = read_with_quarantine(
-        spark, str(feed), "a int, b int", fmt="csv", header=True
-    )
-    assert good.count() == 1 and bad.count() == 1
-    from mare_spark.operators.dedup import release_caches
-
-    release_caches(good)
+    before = cached_entries(spark)
+    with cache_scope():
+        good, bad = read_with_quarantine(
+            spark, str(feed), "a int, b int", fmt="csv", header=True
+        )
+        # ONE parse cache shared by both splits; it survives until both
+        # are consumed
+        assert cached_entries(spark) == before + 1
+        assert good.count() == 1
+        assert cached_entries(spark) == before + 1
+        assert bad.count() == 1
+    assert cached_entries(spark) == before
 
 
 def test_read_table_pre_epoch_nanos_floor(spark, tmp_path):

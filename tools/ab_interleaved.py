@@ -41,7 +41,7 @@ def main() -> None:
             )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from mare_spark.operators.dedup import release_caches
+    from mare_spark.cache import cache_scope
     from mare_spark.registry import all_queries
     from mare_spark.session import get_spark
 
@@ -49,12 +49,10 @@ def main() -> None:
     q = all_queries()[qname]
 
     def run_once():
-        t0 = time.perf_counter()
-        df = q.fn(spark, sf_dir)
-        df.count()
-        dt = time.perf_counter() - t0
-        release_caches(df)
-        return dt
+        with cache_scope():
+            t0 = time.perf_counter()
+            q.fn(spark, sf_dir).count()
+            return time.perf_counter() - t0
 
     # warm-up one run per variant
     samples: dict[str, list[float]] = {lab: [] for lab, _ in variants}

@@ -19,7 +19,7 @@ def main() -> None:
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from mare_spark.operators.dedup import release_caches
+    from mare_spark.cache import cache_scope
     from mare_spark.registry import all_queries
     from mare_spark.session import get_spark
 
@@ -28,17 +28,13 @@ def main() -> None:
     for name in names:
         q = qs[name]
         samples = []
-        dfs = []
-        for i in range(1 + n):
-            t0 = time.perf_counter()
-            df = q.fn(spark, sf_dir)
-            df.count()
-            dt = time.perf_counter() - t0
-            dfs.append(df)
-            if i > 0:
-                samples.append(dt)
-        for df in dfs:
-            release_caches(df)
+        with cache_scope():
+            for i in range(1 + n):
+                t0 = time.perf_counter()
+                q.fn(spark, sf_dir).count()
+                dt = time.perf_counter() - t0
+                if i > 0:
+                    samples.append(dt)
         print(f"{name}: min {min(samples):.3f} med "
               f"{statistics.median(samples):.3f} all "
               f"{[round(s,3) for s in samples]}")

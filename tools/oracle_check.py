@@ -51,7 +51,7 @@ def main() -> None:
     import duckdb
 
     import __spark_entry__ as e
-    from mare_spark.operators.dedup import release_caches
+    from mare_spark.cache import cache_scope
     from mare_spark.session import get_spark
 
     spark = get_spark("oracle_check")
@@ -68,10 +68,10 @@ def main() -> None:
             if name not in os_:
                 print(f"{name} @ {sf_dir}: NO ORACLE (rows-only row)")
                 continue
-            df = qs[name](spark, sf_dir)
-            cols = sorted(df.columns)
-            got = canon(df.collect(), cols)
-            release_caches(df)
+            with cache_scope():
+                df = qs[name](spark, sf_dir)
+                cols = sorted(df.columns)
+                got = canon(df.collect(), cols)
             odf = con.execute(os_[name]).df()
             want = canon(odf.to_dict("records"), cols)
             ok = got == want

@@ -47,7 +47,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     only = set(sys.argv[1].split(",")) if len(sys.argv) > 1 else None
 
-    from mare_spark.operators.dedup import release_caches
+    from mare_spark.cache import cache_scope
     from mare_spark.registry import all_queries
     from mare_spark.session import get_spark
 
@@ -57,9 +57,8 @@ def main() -> None:
 
     for name, q in queries.items():
         # cold run not counted (codegen/JIT warm-up)
-        df0 = q.fn(spark, sf_dir)
-        df0.count()
-        release_caches(df0)
+        with cache_scope():
+            q.fn(spark, sf_dir).count()
 
         holder = {}
 
@@ -67,9 +66,9 @@ def main() -> None:
             holder["df"] = q.fn(spark, sf_dir)
             return None
 
-        b = census(spark, f"{name}:build", build)
-        c = census(spark, f"{name}:count", lambda: holder["df"].count())
-        release_caches(holder["df"])
+        with cache_scope():
+            b = census(spark, f"{name}:build", build)
+            c = census(spark, f"{name}:count", lambda: holder["df"].count())
         print(
             f"{name}: build jobs={b['jobs']} stages={b['stages']} "
             f"tasks={b['tasks']} sec={b['sec']} | count jobs={c['jobs']} "

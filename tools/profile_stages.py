@@ -28,7 +28,7 @@ def main() -> None:
     action = sys.argv[2] if len(sys.argv) > 2 else "count"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from mare_spark.operators.dedup import release_caches
+    from mare_spark.cache import cache_scope
     from mare_spark.registry import all_queries
     from mare_spark.session import get_spark
 
@@ -41,12 +41,12 @@ def main() -> None:
     q = all_queries()[name]
 
     def run():
-        df = q.fn(spark, sf_dir)
-        if action == "noop":
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.count()
-        release_caches(df)
+        with cache_scope():
+            df = q.fn(spark, sf_dir)
+            if action == "noop":
+                df.write.format("noop").mode("overwrite").save()
+            else:
+                df.count()
 
     run()  # warm-up
     port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
