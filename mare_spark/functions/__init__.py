@@ -13,7 +13,6 @@ from mare_spark.operators.dedup import (
     hashed_word_shingles,
     minhash_signature,
     normalize_text,
-    simhash64,
     word_shingles,
 )
 from mare_spark.operators.similarity import (
@@ -36,7 +35,6 @@ __all__ = [
     "cosine_similarity",
     "minhash_signature",
     "normalize_text",
-    "simhash64",
     "word_shingles",
     "hyperplane_signature",
     "token_count",

@@ -91,45 +91,34 @@ def ngram_partial_counts(df: DataFrame, text_col: str, n: int) -> DataFrame:
     ``_WS_RE``/``_ASCII_WS`` contract from operators.dedup), so counts
     hash-match the ``string_split`` SQL oracles.
     """
-    import hashlib
     from itertools import chain
 
     import numpy as np
     import pandas as pd
 
     from mare_spark.operators import dedup as _dedup
-    from mare_spark.operators.dedup import (
-        _fan_out,
-        _gram_coeffs,
-        _mix64,
-        py_tokens,
-    )
+    from mare_spark.operators.dedup import _fan_out, py_tokens
 
     # fan out a narrow scan (r9 measure-first pass: the fixture corpus is
     # one 128 MB-split partition, so the Counter pass ran single-threaded
     # — 2.4 s vs 1.5 s fanned at sf0.1); no-op on an at-scale wide scan
     df = _fan_out(df)
 
-    # r9 optimization pass (guide §4.2): counting now runs on the shared
-    # token-combine gram hashes (see hashed_word_shingles — per-distinct-
-    # token blake2b + numpy window combine over ONE flat per-batch array),
-    # with np.unique(return_counts) as the per-batch combine; the gram
-    # STRING is materialized only once per DISTINCT gram per batch, at its
+    # Counting runs on the shared token-combine gram hashes
+    # (dedup._gram_hashes over ONE flat per-batch array), with
+    # np.unique(return_counts) as the per-batch combine; the gram STRING
+    # is materialized only once per DISTINCT gram per batch, at its
     # first-occurrence window (Zipf: distinct ≈ 10% of total at n=3).
     # Identical partials to the Counter tier modulo 64-bit in-batch hash
     # collisions (~|batch grams|²/2⁶⁵ — the repo-standard negligible-
     # collision argument; the hash never leaves the batch, strings do).
     # Measured 1.5× on the pass single-threaded, differential-identical
     # on the full fixture corpus.
-    C = _gram_coeffs(n)
 
     def gen(batches):
-        # shared per-worker token cache (same "big"-unsigned blake2b-8
-        # convention as hashed_word_shingles): referenced through the
-        # dedup MODULE so the pickled closure resolves the worker's one
-        # shared dict, not a per-task copy (ADVICE r9; dedup.py has the
-        # full rationale)
-        token_cache = _dedup._TOKEN_HASH_CACHE
+        # the kernel is reached through the dedup MODULE so the pickled
+        # closure uses the worker's one shared token cache, not a
+        # per-task copy (dedup.py has the rationale)
         for pdf in batches:
             tok = []
             for t in pdf[text_col]:
@@ -150,29 +139,7 @@ def ngram_partial_counts(df: DataFrame, text_col: str, n: int) -> DataFrame:
             lens = np.fromiter(
                 (len(ws) for ws in tok), dtype=np.int64, count=len(tok)
             )
-            flat = list(chain.from_iterable(tok))
-            gi = token_cache.__getitem__
-            try:
-                TH = np.fromiter(
-                    map(gi, flat), dtype=np.uint64, count=len(flat)
-                )
-            except KeyError:
-                _dedup._hash_cache_room(token_cache)
-                for w in flat:
-                    if w not in token_cache:
-                        token_cache[w] = int.from_bytes(
-                            hashlib.blake2b(
-                                w.encode("utf-8"), digest_size=8
-                            ).digest(),
-                            "big",
-                        )
-                TH = np.fromiter(
-                    map(gi, flat), dtype=np.uint64, count=len(flat)
-                )
-            ACC = C[0] * TH[:nwin]
-            for i in range(1, n):
-                ACC = ACC + C[i] * TH[i : i + nwin]
-            G = _mix64(ACC)
+            G = _dedup._gram_hashes(list(chain.from_iterable(tok)), n)
             did = np.repeat(np.arange(len(tok)), lens)
             valid = did[:nwin] == did[n - 1 : n - 1 + nwin]
             pos = np.nonzero(valid)[0]
@@ -431,28 +398,22 @@ def cross_source_overlap(
     the observed gram set (the same collision contract every hashed-
     shingle join in operators.dedup runs under).
     """
-    import hashlib
     from itertools import chain
 
     import numpy as np
     import pandas as pd
 
     from mare_spark.operators import dedup as _dedup
-    from mare_spark.operators.dedup import _gram_coeffs, _mix64, py_tokens
+    from mare_spark.operators.dedup import py_tokens
 
-    # r9 optimization pass (guide §4.2): gram hashing moved off the
-    # per-gram blake2b+string-join loop onto the shared token-combine
-    # scheme (see hashed_word_shingles) — one flat per-batch token-hash
-    # array, per-doc windows sliced out (cross-doc windows never emitted),
-    # per-source distinct via np.unique. Values change from blake2b-8 to
-    # token-combine ids, which nothing observes: the hashes only feed the
-    # internal distinct/self-join, and the oracle counts gram STRINGS —
-    # the same injective-modulo-collisions contract as before.
-    C = _gram_coeffs(n)
+    # Gram hashes are the shared token-combine ids (dedup._gram_hashes,
+    # one flat per-batch array), per-doc windows sliced out (cross-doc
+    # windows never emitted), per-source distinct via np.unique. The
+    # hashes only feed the internal distinct/self-join and the oracle
+    # counts gram STRINGS: the injective-modulo-collisions contract.
 
     def gen(batches):
-        # shared per-worker token cache — see ngram_partial_counts
-        token_cache = _dedup._TOKEN_HASH_CACHE
+        # module-attribute access to the kernel — see ngram_partial_counts
         for pdf in batches:
             tok, srcs = [], []
             for src, t in zip(pdf[source_col], pdf[text_col]):
@@ -469,29 +430,9 @@ def cross_source_overlap(
                      "gram": pd.Series([], dtype="int64")}
                 )
                 continue
-            flat = list(chain.from_iterable(tok))
-            gi = token_cache.__getitem__
-            try:
-                TH = np.fromiter(
-                    map(gi, flat), dtype=np.uint64, count=len(flat)
-                )
-            except KeyError:
-                _dedup._hash_cache_room(token_cache)
-                for w in flat:
-                    if w not in token_cache:
-                        token_cache[w] = int.from_bytes(
-                            hashlib.blake2b(
-                                w.encode("utf-8"), digest_size=8
-                            ).digest(),
-                            "big",
-                        )
-                TH = np.fromiter(
-                    map(gi, flat), dtype=np.uint64, count=len(flat)
-                )
-            ACC = C[0] * TH[:nwin]
-            for i in range(1, n):
-                ACC = ACC + C[i] * TH[i : i + nwin]
-            G = _mix64(ACC).view(np.int64)
+            G = _dedup._gram_hashes(
+                list(chain.from_iterable(tok)), n
+            ).view(np.int64)
             by_src: dict = {}
             pos = 0
             for ws, src in zip(tok, srcs):
@@ -693,22 +634,22 @@ def ngram_novelty(
     """
     from pyspark import StorageLevel
 
-    from mare_spark.cache import persist
-    from mare_spark.operators.dedup import _materialize, hashed_word_shingles
+    from mare_spark.cache import materialize
+    from mare_spark.operators.dedup import hashed_word_shingles
 
     # the Arrow shingle hasher is the dominant cost and feeds BOTH the
     # doc-frequency aggregate and the join-back — persist it once
     # (spillable) instead of hashing the corpus twice. Eager build
-    # (_materialize): the aggregate branch and the join probe launch
+    # (materialize): the aggregate branch and the join probe launch
     # concurrently under AQE and would race the shingle UDF through
     # twice on a cold cache.
-    ex = _materialize(persist(
+    ex = materialize(
         df.select(
             F.col(id_col), *[F.col(c) for c in keep_cols],
             F.explode(hashed_word_shingles(F.col(text_col), n)).alias("gh"),
         ),
         StorageLevel.MEMORY_AND_DISK,
-    ))
+    )
     shared = (
         ex.select("gh").groupBy("gh").agg(F.count("*").alias("gram_df"))
         .filter(F.col("gram_df") >= 2)

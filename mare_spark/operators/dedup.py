@@ -29,6 +29,7 @@ import logging
 import os
 import random
 import re
+from functools import lru_cache, reduce
 
 # whitespace-run collapse shared by the UDF shingle path — must mirror
 # normalize_text EXACTLY: Java \s (Spark) and RE2 \s (DuckDB oracle) are
@@ -45,7 +46,7 @@ from pyspark.storagelevel import StorageLevel
 
 _log = logging.getLogger("mare_spark.dedup")
 
-from mare_spark.cache import persist, release_caches  # noqa: F401
+from mare_spark.cache import materialize, release_caches  # noqa: F401
 from mare_spark.numeric import fround
 
 # Mersenne prime 2^31 - 1 — the MinHash permutation modulus. It must match
@@ -163,8 +164,11 @@ def _fan_out(df: DataFrame) -> DataFrame:
     return df
 
 
-def _candidate_shingles(base: DataFrame, cand: DataFrame) -> DataFrame:
-    """Shingle sets restricted to docs that appear in a candidate pair.
+def _candidate_shingles(
+    base: DataFrame, cand: DataFrame, ids: tuple[str, ...] = ("doc_a", "doc_b")
+) -> DataFrame:
+    """``base``'s (doc, shingles) rows restricted to the docs named in
+    ``cand``'s ``ids`` columns.
 
     The verify stage only needs shingles for candidate docs — a small
     fraction of the corpus at any sane threshold. Semi-joining the shingle
@@ -172,11 +176,8 @@ def _candidate_shingles(base: DataFrame, cand: DataFrame) -> DataFrame:
     candidate subset; AQE broadcasts the tiny candidate-doc list into the
     semi-join, so the full corpus is never shuffled for verification at all.
     """
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc"))
-        .union(cand.select(F.col("doc_b").alias("doc")))
-        .distinct()
-    )
+    docs = [cand.select(F.col(c).alias("doc")) for c in ids]
+    cand_docs = reduce(DataFrame.union, docs).distinct()
     return base.select("doc", "shingles").join(cand_docs, "doc", "left_semi")
 
 
@@ -202,32 +203,25 @@ def _verified_jaccard(sh_a: str, sh_b: str) -> Column:
     return fround(inter / union, 6)
 
 
-def _persisted_candidates(cand: DataFrame) -> DataFrame:
-    """Persist the candidate-pair set: it feeds both the verify joins and the
-    :func:`_candidate_shingles` semi-join, and without a persist the expensive
-    candidate-generation self-join would run once per consumer. Materialized
-    eagerly (see :func:`_materialize`): the verify action launches its join
-    exchanges concurrently and a cold cache would be raced through once per
-    exchange."""
-    return _materialize(persist(cand, StorageLevel.MEMORY_AND_DISK))
+def _jaccard_verify(
+    base: DataFrame, cand: DataFrame, threshold: float
+) -> DataFrame:
+    """Verify candidate pairs ``cand`` (doc_a, doc_b) by exact Jaccard
+    over ``base``'s (doc, shingles) sets: (doc_a, doc_b, jaccard) with
+    jaccard ≥ ``threshold``.
 
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Build a persisted DataFrame's cache NOW (one job) and return it.
-
-    A lazy persist is built by whichever consumer iterates it first — but
-    AQE submits the shuffle-stage jobs of a downstream join's two sides
-    CONCURRENTLY, and when both sides read the same cold cache each stage
-    races through the full upstream compute before any cache block exists
-    (measured on the jaccard path: the shingle pandas-UDF subtree executed
-    2-3x per invocation, visible as stage pairs with identical shuffle
-    write sizes). One cheap count() per persist serializes the cache build,
-    so every consumer — concurrent or not — reads warm blocks. The same
-    stampede happens on a cluster; this is a compute-once guarantee, not a
-    local-mode tweak (measured interleaved: the barrier costs ≤0.2 s on the
-    local bench while removing 2-3x duplicate executor work)."""
-    df.count()
-    return df
+    ``cand`` is materialized first: it feeds both verify joins and the
+    :func:`_candidate_shingles` semi-join, and unpersisted the expensive
+    candidate generation would run once per consumer."""
+    cand = materialize(cand, StorageLevel.MEMORY_AND_DISK)
+    sh = _candidate_shingles(base, cand)
+    return (
+        cand.join(sh.withColumnsRenamed({"doc": "doc_a", "shingles": "sh_a"}), "doc_a")
+        .join(sh.withColumnsRenamed({"doc": "doc_b", "shingles": "sh_b"}), "doc_b")
+        .withColumn("jaccard", _verified_jaccard("sh_a", "sh_b"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
 
 
 def normalize_text(col: Column) -> Column:
@@ -284,6 +278,7 @@ def word_shingles(text_col: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+@lru_cache(maxsize=None)
 def _gram_coeffs(n: int):
     """Per-position odd 64-bit combination constants for the token-combine
     gram hash (deterministic: derived from blake2b of the position label, so
@@ -321,6 +316,51 @@ def _mix64(x):
     return x
 
 
+def _gram_hashes(flat: list, n: int):
+    """uint64 hash of every ``n``-token window of ``flat`` — one Arrow
+    batch's tokens, all documents concatenated — as a numpy array of
+    ``len(flat) - n + 1`` entries (empty when shorter than ``n``).
+    Windows that straddle a document boundary are hashed too; callers
+    slice out their per-document windows.
+
+    Scheme (token-combine): each DISTINCT token is blake2b-8-hashed
+    ("big", unsigned) once per worker via ``_TOKEN_HASH_CACHE`` (Zipf
+    token reuse makes hashlib calls rare), and a gram's hash is
+    ``mix64(Σ_i C_i · t_{j+i} mod 2⁶⁴)`` with fixed odd per-position
+    constants, so a batch costs three numpy vector ops per position
+    instead of one hashlib call per gram (measured 2.2× faster end to end
+    on the fixture corpus). Position-distinct constants keep the
+    combination order-sensitive: gram equality ↔ token-tuple equality,
+    up to 64-bit collisions. UDF bodies must call this as
+    ``_D._gram_hashes`` so the worker's one shared cache is used (see
+    the cache note above)."""
+    import hashlib
+
+    import numpy as np
+
+    cache = _TOKEN_HASH_CACHE
+    gi = cache.__getitem__
+    try:
+        TH = np.fromiter(map(gi, flat), dtype=np.uint64, count=len(flat))
+    except KeyError:
+        _hash_cache_room(cache)
+        for w in flat:
+            if w not in cache:
+                cache[w] = int.from_bytes(
+                    hashlib.blake2b(w.encode("utf-8"), digest_size=8).digest(),
+                    "big",
+                )
+        TH = np.fromiter(map(gi, flat), dtype=np.uint64, count=len(flat))
+    nwin = len(flat) - n + 1
+    if nwin <= 0:
+        return np.empty(0, dtype=np.uint64)
+    C = _gram_coeffs(n)
+    ACC = C[0] * TH[:nwin]
+    for i in range(1, n):
+        ACC = ACC + C[i] * TH[i : i + nwin]
+    return _mix64(ACC)
+
+
 def hashed_word_shingles(text_col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles as 64-bit hashes (sorted), via an
     Arrow-batched pandas UDF.
@@ -334,73 +374,32 @@ def hashed_word_shingles(text_col: Column, n: int = 3) -> Column:
     * **pandas UDF, not expression code** — Spark's higher-order array
       functions (``transform``/``filter`` lambdas) are CodegenFallback:
       they evaluate on the interpreted path row-at-a-time, measured ~2 ms
-      per document for the shingle pipeline — the same trap simhash64 hit
-      (see ``_simhash_pudf``). The Arrow-batched Python loop is ~50×
-      faster and scales per-core.
+      per document for the shingle pipeline. The Arrow-batched Python
+      loop is ~50× faster and scales per-core.
 
-    Hash scheme (r9 optimization pass — guide §4.2, vectorize the per-task
-    work): each DISTINCT token is blake2b-8-hashed once per task (dict
-    cache — Zipf token reuse makes hashlib calls rare), and a gram's hash
-    is the splitmix64-finalized linear combination
-    ``mix64(Σ_i C_i · t_{j+i} mod 2⁶⁴)`` of its n token hashes with fixed
-    odd per-position constants. The whole Arrow batch is processed as ONE
-    flat token-hash array (per-doc windows are slices of it; windows that
-    would cross a document boundary are simply never sliced out), so the
-    per-gram cost is three numpy vector ops across the batch instead of
-    one hashlib call per gram — measured 2.2× faster end-to-end on the
-    fixture corpus (3× on the hash work; tokenization now dominates).
-    Gram equality ↔ token-tuple equality is preserved exactly
-    (position-distinct constants keep the combination order-sensitive);
-    only the 64-bit values differ from the old per-gram blake2b, which no
-    output or oracle observes — oracles compare string grams / verified
-    Jaccard values, both invariant under any injective-modulo-collisions
-    hash. In-document dedup + signed-order sort come out of one
-    ``np.unique`` over the int64 view.
+    Gram hashes come from :func:`_gram_hashes` over the whole batch; the
+    values differ from a per-gram blake2b, which no output or oracle
+    observes — oracles compare string grams / verified Jaccard values,
+    both invariant under any injective-modulo-collisions hash. In-document
+    dedup + signed-order sort come out of one ``np.unique`` over the int64
+    view.
 
     NB: the MinHash tier (:func:`_minhash_base_udf`) deliberately KEEPS
     per-gram blake2b-8 — its signature values gate LSH candidate recall,
     so its hash convention is output-visible and pinned.
     """
-    import hashlib
     from itertools import chain
 
     import numpy as np
     import pandas as pd
 
-    C = _gram_coeffs(n)
-    blake2b = hashlib.blake2b
-
     def shingle_batch(texts):
-        # The shared per-worker cache MUST be reached through the
-        # worker's imported module object: cloudpickle pickles a nested
-        # function's bare-global references BY VALUE (a per-task snapshot
-        # copy — verified empirically: a bare-global dict never advanced
-        # its state across tasks, while the module-attribute form is the
-        # worker module's one dict), so only the attribute access shares
-        # across tasks under worker reuse.
+        # module-attribute access: a bare global would be pickled by
+        # value, a per-task copy of the shared token cache
         import mare_spark.operators.dedup as _D
 
-        cache = _D._TOKEN_HASH_CACHE
         tok = [py_tokens(t) for t in texts]
-        flat = list(chain.from_iterable(tok))
-        gi = cache.__getitem__
-        try:
-            TH = np.fromiter(map(gi, flat), dtype=np.uint64, count=len(flat))
-        except KeyError:
-            _hash_cache_room(cache)
-            for w in flat:
-                if w not in cache:
-                    cache[w] = int.from_bytes(
-                        blake2b(w.encode("utf-8"), digest_size=8).digest(),
-                        "big",
-                    )
-            TH = np.fromiter(map(gi, flat), dtype=np.uint64, count=len(flat))
-        nwin = len(flat) - n + 1
-        if nwin > 0:
-            ACC = C[0] * TH[:nwin]
-            for i in range(1, n):
-                ACC = ACC + C[i] * TH[i : i + nwin]
-            G = _mix64(ACC).view(np.int64)
+        G = _D._gram_hashes(list(chain.from_iterable(tok)), n).view(np.int64)
         out = []
         pos = 0
         for ws in tok:
@@ -444,13 +443,13 @@ def ngram_jaccard_pairs(
     """
     from pyspark.sql import Window as W
 
-    base = _materialize(persist(
+    base = materialize(
         _fan_out(df).select(
             F.col(id_col).alias("doc"),
             hashed_word_shingles(F.col(text_col), n).alias("shingles"),
         ),
         StorageLevel.MEMORY_AND_DISK,
-    ))
+    )
 
     inv = base.select("doc", F.size("shingles").alias("n_sh"),
                       F.explode("shingles").alias("shingle"))
@@ -500,12 +499,12 @@ def ngram_jaccard_pairs(
     # The prefix is the SMALL end of the index — ~(1-t) of the exploded
     # shingles — and disk-backed, so this is the standard "index once,
     # probe twice" materialization, not a corpus-sized cache.
-    prefix = _materialize(persist(
+    prefix = materialize(
         inv.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= prefix_len)
         .select("shingle", "doc", "n_sh", "rn"),
         StorageLevel.MEMORY_AND_DISK,
-    ))
+    )
 
     # Jaccard ≥ t additionally implies (both exact, cheap row predicates):
     # * length filter — min(|a|,|b|) ≥ t · max(|a|,|b|);
@@ -527,16 +526,7 @@ def ngram_jaccard_pairs(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
-
-    cand = _persisted_candidates(cand)
-    sh = _candidate_shingles(base, cand)
-    return (
-        cand.join(sh.withColumnsRenamed({"doc": "doc_a", "shingles": "sh_a"}), "doc_a")
-        .join(sh.withColumnsRenamed({"doc": "doc_b", "shingles": "sh_b"}), "doc_b")
-        .withColumn("jaccard", _verified_jaccard("sh_a", "sh_b"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_verify(base, cand, threshold)
 
 
 def _perm_coeffs(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -719,10 +709,11 @@ def _mh_base(
 ) -> DataFrame:
     """Persisted (doc, shingles, sig) signature table — the shared
     materialization point of the LSH tiers (see the plan discussion in
-    :func:`minhash_lsh_pairs`). Built eagerly (:func:`_materialize`): the
-    band-bucket self-join's two exchange sides launch concurrently and
-    would otherwise race the signature UDF through twice."""
-    return _materialize(persist(
+    :func:`minhash_lsh_pairs`). Built eagerly (see
+    :func:`mare_spark.cache.materialize`): the band-bucket self-join's two
+    exchange sides launch concurrently and would otherwise race the
+    signature UDF through twice."""
+    return materialize(
         _fan_out(df)
         .select(
             F.col(id_col).alias("doc"),
@@ -736,7 +727,7 @@ def _mh_base(
             F.col("mh.sig").alias("sig"),
         ),
         StorageLevel.MEMORY_AND_DISK,
-    ))
+    )
 
 
 def _mh_buckets(base: DataFrame, bands: int, r: int) -> DataFrame:
@@ -757,13 +748,16 @@ def _mh_buckets(base: DataFrame, bands: int, r: int) -> DataFrame:
 
 
 def _drop_over_full_buckets(
-    buckets: DataFrame, cap: int, keys: tuple[str, str] = ("band_idx", "band_hash")
+    buckets: DataFrame, cap: int, keys: tuple[str, ...] = ("band_idx", "band_hash")
 ) -> DataFrame:
     """Drop every bucket (keyed by ``keys``) holding more than ``cap``
-    docs — the quadratic-candidate guard for bucketed LSH joins, in the
-    hot-head shape: partial-combined count (skew-immune), tiny >cap head,
-    broadcast/skew-splittable anti-join. Never a count window (WindowExec
-    would colocate the hot bucket's rows in one un-splittable task)."""
+    rows — the quadratic-candidate guard for every bucketed self-join, in
+    the hot-head shape: partial-combined count (hot keys combine
+    map-side, skew-immune), tiny >cap head (at most rows/cap keys),
+    anti-join that AQE broadcasts when small and skew-splits otherwise.
+    Never a count window: WindowExec would put a hot bucket's every row
+    into one un-splittable task just to count and discard it. Buckets
+    left are ≤ cap by construction."""
     over_full = (
         buckets.groupBy(*keys)
         .agg(F.count("*").alias("_n"))
@@ -771,6 +765,45 @@ def _drop_over_full_buckets(
         .select(*keys)
     )
     return buckets.join(over_full, list(keys), "left_anti")
+
+
+def _bucket_self_join(
+    buckets: DataFrame,
+    keys: tuple[str, ...],
+    id_col: str,
+    cap: int | None = None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Distinct pairs of ``buckets`` rows sharing a bucket ``keys`` with
+    ``x.<id_col> < y.<id_col>``: columns ``<id_col>_a, <id_col>_b``, then
+    ``<c>_a, <c>_b`` for each ``carry`` column. ``cap`` first drops
+    buckets over ``cap`` rows (:func:`_drop_over_full_buckets`).
+
+    The (post-cap) bucket table is materialized before the join because
+    exchange reuse does not fire across the two sides of a deduplicated
+    self-join (forced-SMJ plans show one hash-partitioning exchange per
+    side and no ReusedExchange): unpersisted, each side recomputes the
+    whole bucket subtree — band projection, any signature UDF behind it,
+    and the cap aggregate with its anti-join. A bucket table is a few
+    fixed-width columns, cheap to encode; on the minhash path at sf0.1
+    the persist cut invocation CPU from 9.7-10.0 s to 7.1-7.8 s for one
+    barrier job."""
+    if cap is not None:
+        buckets = _drop_over_full_buckets(buckets, cap, keys)
+    buckets = materialize(buckets, StorageLevel.MEMORY_AND_DISK)
+    on = [F.col(f"x.{k}") == F.col(f"y.{k}") for k in keys]
+    on.append(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+    cols = [
+        F.col(f"{side}.{c}").alias(f"{c}_{suffix}")
+        for c in (id_col, *carry)
+        for side, suffix in (("x", "a"), ("y", "b"))
+    ]
+    return (
+        buckets.alias("x")
+        .join(buckets.alias("y"), reduce(Column.__and__, on))
+        .select(*cols)
+        .distinct()
+    )
 
 
 def minhash_lsh_pairs(
@@ -831,43 +864,10 @@ def minhash_lsh_pairs(
     # standard "signature table" materialization point (disk-backed so it
     # spills instead of OOMing).
     base = _mh_base(df, text_col, id_col, num_perm, shingle_n, seed)
-    buckets = _mh_buckets(base, bands, r)
-    if bucket_cap is not None:
-        buckets = _drop_over_full_buckets(buckets, bucket_cap)
-    # Materialize the (post-cap) bucket table once (r10 — guide §2.4,
-    # compute-once): the candidate self-join's two exchange sides each
-    # recompute this whole subtree otherwise — band projection PLUS the
-    # cap aggregate and its anti-join — because exchange reuse does not
-    # fire across the deduplicated self-join sides (verified empirically:
-    # forced-SMJ plans show 4 hashpartitioning(band_idx, band_hash)
-    # exchanges and 0 ReusedExchange). The table is three fixed-width
-    # columns (no arrays — cheap columnar encode, unlike `base`); census
-    # at sf0.1: invocation CPU 9.7-10.0 s → 7.1-7.8 s, executorRunTime
-    # 25-26 s → 20-22 s, at +1 barrier job. At corpus scale the saved
-    # duplicate is a corpus-sized projection + aggregate per side.
-    buckets = _materialize(persist(buckets, StorageLevel.MEMORY_AND_DISK))
-
-    cand = (
-        buckets.alias("x")
-        .join(
-            buckets.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band_hash") == F.col("y.band_hash"))
-            & (F.col("x.doc") < F.col("y.doc")),
-        )
-        .select(F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b"))
-        .distinct()
+    cand = _bucket_self_join(
+        _mh_buckets(base, bands, r), ("band_idx", "band_hash"), "doc", bucket_cap
     )
-
-    cand = _persisted_candidates(cand)
-    sh = _candidate_shingles(base, cand)
-    return (
-        cand.join(sh.withColumnsRenamed({"doc": "doc_a", "shingles": "sh_a"}), "doc_a")
-        .join(sh.withColumnsRenamed({"doc": "doc_b", "shingles": "sh_b"}), "doc_b")
-        .withColumn("jaccard", _verified_jaccard("sh_a", "sh_b"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_verify(base, cand, threshold)
 
 
 def minhash_lsh_join(
@@ -929,27 +929,14 @@ def minhash_lsh_join(
         )
         .distinct()
     )
-    cand = _persisted_candidates(cand)
-    # per-side verify-set restriction (the _candidate_shingles shape, one
-    # side each): semi-join the signature table down to candidate docs so
-    # the pair-joins shuffle only the candidate subset
-    sh_l = (
-        base_l.select("doc", "shingles")
-        .join(
-            cand.select(F.col("id_left").alias("doc")).distinct(),
-            "doc",
-            "left_semi",
-        )
-        .withColumnsRenamed({"doc": "id_left", "shingles": "sh_l"})
+    # materialized for the same reason as in _jaccard_verify; each side's
+    # verify set is restricted to its own candidate docs
+    cand = materialize(cand, StorageLevel.MEMORY_AND_DISK)
+    sh_l = _candidate_shingles(base_l, cand, ("id_left",)).withColumnsRenamed(
+        {"doc": "id_left", "shingles": "sh_l"}
     )
-    sh_r = (
-        base_r.select("doc", "shingles")
-        .join(
-            cand.select(F.col("id_right").alias("doc")).distinct(),
-            "doc",
-            "left_semi",
-        )
-        .withColumnsRenamed({"doc": "id_right", "shingles": "sh_r"})
+    sh_r = _candidate_shingles(base_r, cand, ("id_right",)).withColumnsRenamed(
+        {"doc": "id_right", "shingles": "sh_r"}
     )
     return (
         cand.join(sh_l, "id_left")
@@ -958,33 +945,6 @@ def minhash_lsh_join(
         .filter(F.col("jaccard") >= threshold)
         .select("id_left", "id_right", "jaccard")
     )
-
-
-def simhash64(text_col: Column, shingle_n: int = 2) -> Column:
-    """64-bit SimHash of the normalized text, as a bigint — pure expression
-    code: per-shingle xxhash64, per-bit weighted votes, sign → bit.
-
-    Implementation: for each bit position we sum ``±1`` votes across
-    shingles (aggregate over the shingle array) and set the bit when the sum
-    is positive. 64 aggregate expressions — verbose but codegen'd; no UDF.
-    """
-    shingles = word_shingles(text_col, shingle_n)
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-    bits = []
-    for i in range(64):
-        vote = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        # bit 63 is the sign bit: 1<<63 overflows signed long, use Long.MIN
-        bit_val = (1 << i) if i < 63 else -(1 << 63)
-        bits.append(F.when(vote > 0, F.lit(bit_val).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
 
 
 def _simhash_pudf(shingle_n: int):
@@ -1093,13 +1053,14 @@ def simhash_pairs(
     # chunk bit-boundaries: spread 64 bits as evenly as possible
     bounds = [round(i * 64 / n_chunks) for i in range(n_chunks + 1)]
     # Signature via a vectorized numpy pandas UDF. The expression-code
-    # alternative (64 bit-vote aggregates — see simhash64) exceeds janino's
-    # 64 KB codegen limit, falls back to interpreted eval and runs ~10×
-    # slower; the 64×n bit-vote matrix is exactly the shape numpy is good
-    # at. This is the sanctioned UDF case: built-ins can't express it fast.
-    # eager (see _materialize): the chunk self-join's two exchange sides
-    # launch concurrently and would race the simhash UDF twice
-    base = _materialize(persist(
+    # alternative (64 bit-vote aggregates over the shingle array) exceeds
+    # janino's 64 KB codegen limit, falls back to interpreted eval and
+    # runs ~10× slower; the 64×n bit-vote matrix is exactly the shape
+    # numpy is good at. This is the sanctioned UDF case: built-ins can't
+    # express it fast. Eager (see materialize): the chunk self-join's two
+    # exchange sides launch concurrently and would race the simhash UDF
+    # twice
+    base = materialize(
         _fan_out(df)
         .select(
             F.col(id_col).alias("doc"),
@@ -1109,7 +1070,7 @@ def simhash_pairs(
         # same contract as the MinHash tier's size(shingles) > 0 filter
         .filter(F.col("sh").isNotNull()),
         StorageLevel.MEMORY_AND_DISK,
-    ))
+    )
     chunk_cols = [
         # a 64-bit-wide chunk (max_hamming=0) IS the signature: the full
         # mask literal (2^64-1) would overflow LongType
@@ -1125,32 +1086,8 @@ def simhash_pairs(
         "sh",
         F.posexplode(F.array(*chunk_cols)).alias("chunk_idx", "chunk"),
     )
-    if bucket_cap is not None:
-        chunks = _drop_over_full_buckets(
-            chunks, bucket_cap, keys=("chunk_idx", "chunk")
-        )
-    # Materialize the (post-cap) chunk table once (r10 — guide §2.4): the
-    # chunk self-join's two exchange sides otherwise each recompute the
-    # chunk projection plus, when capped, the bucket-cap aggregate and
-    # anti-join (exchange reuse does not fire across deduplicated
-    # self-join sides — see minhash_lsh_pairs). Four fixed-width columns,
-    # cheap encode; same census evidence as the minhash bucket persist.
-    chunks = _materialize(persist(chunks, StorageLevel.MEMORY_AND_DISK))
-    cand = (
-        chunks.alias("x")
-        .join(
-            chunks.alias("y"),
-            (F.col("x.chunk_idx") == F.col("y.chunk_idx"))
-            & (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.doc") < F.col("y.doc")),
-        )
-        .select(
-            F.col("x.doc").alias("doc_a"),
-            F.col("y.doc").alias("doc_b"),
-            F.col("x.sh").alias("sh_a"),
-            F.col("y.sh").alias("sh_b"),
-        )
-        .distinct()
+    cand = _bucket_self_join(
+        chunks, ("chunk_idx", "chunk"), "doc", bucket_cap, carry=("sh",)
     )
     return (
         cand.withColumn(
@@ -1417,11 +1354,10 @@ def embedding_cosine_pairs(
         if n_probe > exact_max_rows:
             from mare_spark.operators.similarity import embedding_lsh_pairs
 
-            if dim is None:
-                # the probe row is already on the driver conceptually; one
-                # bounded fetch beats failing the scale-tier handoff
-                # a NULL vector in the probe row would TypeError; take
-                # the first NON-NULL vector's length
+            if dim is None and "dim" not in (df.schema[vec_col].metadata or {}):
+                # neither passed nor tagged (with_dim_metadata): one
+                # bounded fetch of the first NON-NULL vector's length
+                # beats failing the scale-tier handoff
                 dim = len(
                     df.select(vec_col)
                     .filter(F.col(vec_col).isNotNull())
@@ -1491,25 +1427,15 @@ def substring_overlap_candidates(
     # its UDF is the expensive part; it feeds the frequency aggregate and
     # both sides of the self-join, so persist it rather than recompute —
     # cheap at any scale precisely because it is k hashes per document,
-    # not the exploded index. Eager (see _materialize): the self-join's
+    # not the exploded index. Eager (see materialize): the self-join's
     # exchange sides launch concurrently and would race the UDF through
     # once per side on a cold cache.
-    fp = _materialize(persist(fp, StorageLevel.MEMORY_AND_DISK))
+    fp = materialize(fp, StorageLevel.MEMORY_AND_DISK)
     inv = fp.select(F.col(id_col).alias("doc"), F.explode("fingerprint").alias("fp"))
     if max_fp_freq is not None:
-        # Frequency cap via the hot-key HEAD set, not a count window:
-        # fingerprints of corpus-wide boilerplate runs are Zipf-hot, and a
-        # window would funnel every row of a hot fingerprint into one
-        # un-splittable task just to count-then-discard it. The aggregate
-        # partial-combines hot keys map-side; the >cap head (≤ N/cap keys)
-        # is anti-joined away — AQE broadcasts it when small, skew-splits
-        # the probe otherwise. The self-join below then has buckets ≤ cap
-        # by construction.
-        hot = (
-            inv.groupBy("fp").agg(F.count("*").alias("_fp_freq"))
-            .filter(F.col("_fp_freq") > max_fp_freq).select("fp")
-        )
-        inv = inv.join(hot, "fp", "left_anti")
+        # boilerplate fingerprints are Zipf-hot: cap them in the hot-head
+        # shape, so the self-join's buckets are ≤ cap
+        inv = _drop_over_full_buckets(inv, max_fp_freq, keys=("fp",))
     return (
         inv.alias("a")
         .join(inv.alias("b"), "fp")
@@ -1565,19 +1491,9 @@ def edit_distance_pairs(
     t = _fan_out(df).select(
         F.col(id_col).alias("_id"), s.alias("_s"), pk.alias("_pk")
     )
-    # Bucket cap via the hot-key HEAD set, not a count window: a hot
-    # prefix digest (short/templated openings shared by millions of docs)
-    # would put its every row — full text included — into one
-    # un-splittable window task just to be counted and discarded. The
-    # aggregate branch projects the digest only (no text moves), partial-
-    # combines map-side, and the tiny >cap head anti-joins away (AQE
-    # broadcast). Buckets entering the a×b self-join are ≤ cap by
-    # construction.
-    hot = (
-        t.select("_pk").groupBy("_pk").agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > bucket_cap).select("_pk")
-    )
-    t = t.join(hot, "_pk", "left_anti")
+    # a hot prefix digest (templated openings) is capped in the hot-head
+    # shape; the count branch projects the digest only, no text moves
+    t = _drop_over_full_buckets(t, bucket_cap, keys=("_pk",))
     a = t.select(
         F.col("_pk"), F.col("_id").alias("doc_a"), F.col("_s").alias("_sa")
     )

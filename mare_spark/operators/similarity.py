@@ -20,13 +20,13 @@
 from __future__ import annotations
 
 import numpy as np
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mare_spark.numeric import fround
 
-from mare_spark.cache import persist
+from mare_spark.cache import materialize
+from mare_spark.operators.dedup import _bucket_self_join
 
 
 def cosine_to_query(vec_col, query_vec: list[float]):
@@ -267,47 +267,28 @@ def embedding_lsh_pairs(
     planes_per_band = [
         rng.standard_normal((bits_per_band, dim)) for _ in range(bands)
     ]
-    from mare_spark.operators.dedup import _materialize
-
-    # eager build (dedup._materialize): the bucket self-join's exchange
+    # eager build (see materialize): the bucket self-join's exchange
     # sides launch concurrently and would race a cold cache twice
-    base = _materialize(
-        persist(df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")))
+    base = materialize(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     )
     buckets = base.select(
-        "vid",
+        "id",
         F.posexplode(
             hyperplane_signatures(F.col("v"), planes_per_band)
         ).alias("band", "bucket"),
     )
-    if bucket_cap is not None:
-        from mare_spark.operators.dedup import _drop_over_full_buckets
+    cand = _bucket_self_join(buckets, ("band", "bucket"), "id", bucket_cap)
+    return _cosine_verify(cand, base, threshold)
 
-        buckets = _drop_over_full_buckets(
-            buckets, bucket_cap, keys=("band", "bucket")
-        )
-    # Materialize the (post-cap) bucket table once (r10 — guide §2.4,
-    # compute-once): exchange reuse does not fire across deduplicated
-    # self-join sides (verified on the minhash twin of this shape), so
-    # each candidate-join side otherwise re-runs the hyperplane-signature
-    # pandas UDF — the most expensive step of this operator — plus the
-    # cap aggregate/anti-join. Three fixed-width columns, cheap encode.
-    buckets = _materialize(persist(buckets, StorageLevel.MEMORY_AND_DISK))
-    cand = (
-        buckets.alias("x")
-        .join(
-            buckets.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.vid") < F.col("y.vid")),
-        )
-        .select(F.col("x.vid").alias("id_a"), F.col("y.vid").alias("id_b"))
-        .distinct()
-    )
-    v = base
+
+def _cosine_verify(cand: DataFrame, vecs: DataFrame, threshold: float) -> DataFrame:
+    """Verify candidate pairs ``cand`` (id_a, id_b) by exact cosine over
+    ``vecs``' two columns (id, vector): (id_a, id_b, cosine) with cosine
+    ≥ ``threshold``, scored by the numpy :func:`pairwise_cosine`."""
     return (
-        cand.join(v.withColumnsRenamed({"vid": "id_a", "v": "v_a"}), "id_a")
-        .join(v.withColumnsRenamed({"vid": "id_b", "v": "v_b"}), "id_b")
+        cand.join(vecs.toDF("id_a", "v_a"), "id_a")
+        .join(vecs.toDF("id_b", "v_b"), "id_b")
         .withColumn(
             "cosine", fround(pairwise_cosine(F.col("v_a"), F.col("v_b")), 6)
         )
@@ -651,16 +632,14 @@ def semantic_dedup_pairs(
     cells.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
     cells_udf = F.pandas_udf(cells, "array<int>")
 
-    from mare_spark.operators.dedup import _materialize
-
-    # eager build (dedup._materialize): the cell self-join's exchange
+    # eager build (see materialize): the cell self-join's exchange
     # sides launch concurrently and would race the cell UDF twice
-    base = _materialize(persist(
+    base = materialize(
         df.select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("v"),
             cells_udf(F.col(vec_col)).alias("cells"),
         )
-    ))
+    )
     blocked = base.select("vid", F.explode("cells").alias("cell"))
     cand = (
         blocked.alias("a")
@@ -672,16 +651,7 @@ def semantic_dedup_pairs(
         .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"))
         .distinct()
     )
-    v = base.select("vid", "v")
-    return (
-        cand.join(v.withColumnsRenamed({"vid": "id_a", "v": "v_a"}), "id_a")
-        .join(v.withColumnsRenamed({"vid": "id_b", "v": "v_b"}), "id_b")
-        .withColumn(
-            "cosine", fround(pairwise_cosine(F.col("v_a"), F.col("v_b")), 6)
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    return _cosine_verify(cand, base.select("vid", "v"), threshold)
 
 
 def _nearest_centroid(dv, cents) -> "F.Column":

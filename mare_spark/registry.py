@@ -58,197 +58,9 @@ def register(
     return deco
 
 
-# Driver-facing enumeration order. The driver's correctness gate records
-# rows for the FIRST 50 registry entries (dict order), so this list decides
-# which queries gain driver evidence each round.
-#
-# ROUND-4 ROTATION (executes the plan written here in round 3 and confirmed
-# by VERDICT r3 "Next round" #2): front-load
-#   1. the 21 round-3 registrations with no driver row across r1-r3
-#      (every other registered query has at least one green row already);
-#   2. the rows changed THIS round, which therefore need fresh evidence:
-#      q_correlated_scalar (BroadcastNestedLoopJoin domain join rewritten
-#      as a p_brand window — VERDICT r3 "What's wrong" #1) and
-#      dedup_edit_distance (threshold-form levenshtein — both already in
-#      set 1), plus any round-4 registrations (kept to a minimum per the
-#      check-before-register budget rule: new names enter the first-50
-#      only by displacing an already-green anchor);
-#   3. high-value anchors with older green rows to fill the 50 budget —
-#      cheap insurance that the decimal/oracle conventions stayed stable.
-# Everything else follows in registration order. After r4 the
-# never-checked backlog is exactly the set registered in r4 (rule:
-# never-checked at end-of-round <= registered-this-round). All 5 round-4
-# registrations sit in section 2 below, inside the first-50 window, so
-# the backlog after CORRECTNESS_r04 is zero.
-#
-# ROUND-6 ROTATION (executes the plan written here in round 5 and
-# VERDICT r5 "Next round" #1): the staleness ledger after r5 is
-# 19 rows last-green in ROUND 2, 33 in round 3, 45 in round 4, 50 in
-# round 5 —
-#   1. queries whose operator path the round-6 diff touched:
-#      corpus_epoch_shuffle (shard now derived from 60 hash bits, oracle
-#      updated in lockstep), the BPE rows (learn_bpe_merges gained the
-#      driver-side merge loop that corpus_bpe_segment_report executes),
-#      and corpus_train_val_split (same 60-bit-prefix fix as the shuffle,
-#      oracle in lockstep);
-#   2. round-6 registrations (check-before-register): the capped-contract
-#      simhash row (VERDICT r5 #6) and the live-streaming sessionize
-#      replay (VERDICT r5 #7);
-#   3. the q1/q5/pipeline anchors — convention canaries in every round;
-#   4. ALL 19 round-2-stale rows (the oldest evidence in the ledger:
-#      multimodal_decode, text_pii_scrub, the UDF-surface rows, the
-#      r2-only TPC-H bodies), in registration order;
-#   5. round-3-stale rows in registration order to fill the 50 budget,
-#      with events_sessionize swapped in for q14 (its gaps-and-islands
-#      construction is the oracle template the new replay row reuses —
-#      refreshing both in one round pins the convention from both ends);
-#      ten r3-stale fill rows (q_subquery_above_avg,
-#      q_sql_returned_items, q_intersect_all, q_having, q_pivot,
-#      q_join_range_band, q_join_left_outer, corpus_lang_confusion,
-#      corpus_vocab_stats, sample_apply_mixture) displaced by the ten r6
-#      registrations (corpus_dsir_weights, sample_dsir_gumbel,
-#      multimodal_sniff_report, embedding_covariance,
-#      embedding_pca_variance, text_bigram_logprob, sim_hard_negatives,
-#      dedup_split_leakage, maintenance_merge_report, text_nfc_report —
-#      check-before-register), q_except_all by the r6-touched
-#      corpus_train_val_split, embedding_norm_stats by the 11th r6
-#      registration corpus_export_shards (the export family's
-#      hash-checked row — it exercises the real write path), and
-#      text_rolling_fingerprint by the 12th, events_gapfill_locf
-#      (time-bucket LOCF gap-fill — the new time-series family row),
-#      and three more fill rows (text_tfidf_keywords,
-#      corpus_length_histogram, cross_source_contamination) by the
-#      session-2 r6 registrations pack_token_ids_tape (materialized
-#      token-tape packing — the real dataloader artifact, arrays
-#      digested to scalars for the hash gate), sample_cluster_balanced
-#      (embedding-cluster-balanced diversity sampling) and
-#      corpus_column_profile (ANALYZE-style stats), and a fourth —
-#      sample_temperature_rates by text_intra_doc_dedup (within-doc
-#      chunk dedup, the per-doc complement of the corpus scrub), and a
-#      fifth — corpus_mix_report by events_quantile_sketch (the
-#      mergeable bottom-k quantile tables' exact-merge property
-#      hash-checked end-to-end: per-day sketches rolled up ≡ the
-#      oracle's single global bottom-k) — each oracle verified at all
-#      3 SFs before entering the window.
-# ROUND-7 ROTATION (executes the plan written here in round 6 and
-# VERDICT r6 "Next round" #1): the staleness ledger after r6 is 28 rows
-# last-green in ROUND 3, 44 in round 4, 44 in round 5, 50 in round 6 —
-#   1. queries whose operator path (or oracle text) the round-7 diff
-#      touched: the DSIR rows (gumbel log(0) clamp — oracle updated in
-#      lockstep), text_bigram_logprob (explicit complement-weight
-#      double), events_quantile_sketch (trim tiebreak now (h, v)),
-#      maintenance_merge_report (merge IO through the Hadoop FS API +
-#      Observation-based empty check), corpus_export_shards (manifest
-#      layer ported to the FS API), and dedup_cluster_stats
-#      (dedup_clusters' driver-tier gate is now byte-aware);
-#   2. round-7 registrations (check-before-register):
-#      streaming_quantile_replay (live micro-batch bottom-k replay vs
-#      the exact SQL oracle — VERDICT r6 #6), sim_pq_recall_report
-#      (quantization-tier recall audit, rows-only + self-consistency
-#      pytest — VERDICT r6 #7), sim_topk_whitened (PCA-whitening ∘
-#      similarity composition, rows-only + numpy end-to-end pytest —
-#      VERDICT r6 #8);
-#   3. the q1/q5/pipeline anchors — convention canaries in every round
-#      (pipeline_clean_corpus also exercises the re-routed
-#      dedup_clusters path);
-#   4. ALL 28 round-3-stale rows (the oldest evidence in the ledger), in
-#      registration order;
-#   5. nine r4-stale fill rows in registration order (dedup_exact,
-#      dedup_ngram_jaccard, sim_topk_cosine, pipeline_clean_corpus_v2,
-#      decontaminate_overlap_report, dedup_substring_candidates,
-#      multimodal_frame_sample, text_chunk_dedup,
-#      text_quality_classifier — dedup_cluster_stats would be next in
-#      that order but already sits in section 1).
-# After r7 no row's evidence is older than round 4; the remaining 34
-# r4-stale rows (44 minus the 9 fills minus dedup_cluster_stats in
-# section 1) head the r8 rotation.
-# ROUND-8 ROTATION (executes the plan written here in round 7 and
-# VERDICT r7 "Next round" #1): the staleness ledger after r7 is 34 rows
-# last-green in ROUND 4, 44 in round 5, 41 in round 6, 50 in round 7 —
-#   1. queries whose operator path (or oracle text) the round-8 diff
-#      touched: events_quantile_sketch + streaming_quantile_replay (the
-#      quantile trim is now dedup-before-trim — bottom-k DISTINCT
-#      hashes, min value per hash — making the build associative with
-#      its own merge; both oracles updated in lockstep),
-#      streaming_sessionize_replay (read_events_stream now bootstraps
-#      through the shared _infer_or_cold_start helper),
-#      sim_pq_recall_report (the exact baseline is one batched Arrow
-#      job instead of 5 sequential actions), multimodal_decode
-#      (decode_features routes through the _REAL_DECODERS table), and
-#      q_udtf_word_positions (oracle gained the NULL-text guard —
-#      DuckDB least() ignores NULL; also r4-stale, counted here), and
-#      the DSIR rows corpus_dsir_weights + sample_dsir_gumbel (empty-
-#      corpus totals coalesce, checked 2^53 product guard, NULL-id
-#      exclusion from the gumbel draw — oracle in lockstep), the three
-#      pipe differentials (oracles now model the TOOLS: byte-wise ASCII
-#      tr via translate(), awk blank-splitting; codec record domain
-#      pinned on both sides), and corpus_epoch_shuffle (NULL-id
-#      exclusion, oracle in lockstep).
-#      multimodal_sniff_report's builder gained only the additive bmp24
-#      branch (existing kinds byte-identical, pytest-pinned) and stays
-#      on its r6 evidence.
-#   2. round-8 registrations (check-before-register):
-#      multimodal_media_stats (REAL BMP-pixel/WAV-PCM decode vs an
-#      arithmetic oracle — VERDICT r7 #4) and rag_retrieval_report
-#      (chunk -> hashing-embed -> IVF-PQ -> language-gated retrieval,
-#      rows-only + step-replay pytest — VERDICT r7 #8).
-#   3. the q1/q5/pipeline anchors — convention canaries in every round;
-#   4. the 33 remaining round-4-stale rows (the whole sub-r5 ledger
-#      except q_udtf_word_positions, already in section 1), in
-#      registration order — streaming_heavy_hitters_replay's operator
-#      path also changed this round (sorted tie-break, persisted
-#      micro-batch), so its refresh is load-bearing twice over;
-#   NOTE on value-identical r8 refactors NOT rotated (window full):
-#      the three hash-checked cosine rows (dedup_embedding_cosine,
-#      sim_topk_cosine, sim_filtered_topk) now score with the SEQUENTIAL
-#      expression fold their oracles replay bit-for-bit (hard_negatives'
-#      convention — numpy's pairwise sums could snap differently at a
-#      6dp grid boundary), with a zero-vector guard mirrored in a shared
-#      _sql_cosine fragment; the jaccard CTE chain, the stoplist /
-#      language-marker literals and the word-split fragment collapsed to
-#      single definitions generated from the operator constants; the
-#      substring call sites state max_fp_freq=1000 explicitly. All
-#      eleven touched rows re-verified green at all 3 SFs in-session
-#      (values identical — the swap is parity hardening, not a change);
-#      they head the r9 rotation together with the llm3/llm4 sweep's
-#      value-identical guards (NULL-vector seed/assignment exclusion in
-#      embedding_cluster_assign + kmeans — oracle in lockstep; NULL-text
-#      exclusion in dedup_cluster_stats matching exact_dedup; empty-
-#      vector NULL norms in embedding_norm_stats; corpus_quality_funnel
-#      collapsed to ONE scan via quality_gates keep_cols; classifier-
-#      weight SQL + edit-distance constants single-definition), the
-#      llm7/llm8/streaming lockstep closures (sim_hard_negatives +
-#      dedup_split_leakage oracles now compose the shared guarded
-#      _sql_cosine / snapped _jaccard_edges_ctes instead of forked
-#      copies; sample_cluster_balanced's oracle gained the NULL-vector
-#      exclusions its engine applies; tumbling/sliding window oracles
-#      mirror F.window's implicit isnotnull(ts); corpus_dsir_weights
-#      excludes NULL ids from its limit tie-break on both sides) — all
-#      re-verified green at 3 SFs — plus the relational-body closures
-#      (q_agg_stats moments now BIT-identical: exact integer cents →
-#      one correctly-rounded double conversion on both engines — the
-#      old DECIMAL(38,4)→DOUBLE cast double-rounded past 2^53 on DuckDB
-#      only, verified live; as-of oracles share ONE template and pin
-#      the equal-timestamp tie winner; q_correlated_scalar's NULL-price
-#      count is 0 on both sides) — and TWO deferred findings for r9:
-#      (a) sample_temperature_rates / sample_apply_mixture use
-#      pow(x, 0.7) with no pinned cross-engine parity convention —
-#      rewrite as the snapped exp/ln chain, oracles in lockstep;
-#      (b) the libm-ln parity assumption is weaker than documented
-#      (Java Math.log vs DuckDB ln bit-differ on ~0.8% of doubles,
-#      measured r8) — every hash-green ln row (q_math_conditional,
-#      DSIR, unigram/bigram logprob) rides the 6dp snap margin, which
-#      absorbs 1-ulp diffs except within ~1 ulp of a boundary; audit
-#      whether any fixture value sits near a boundary, or snap the ln
-#      INPUT first.
-#   5. no fill rows — the twelve touched rows + two registrations +
-#      three anchors + thirty-three r4-stale rows fill the window
-#      exactly (the pipe/epoch touches displaced the last four r5-stale
-#      fills; four of the twelve touched rows are themselves r5-stale).
-# After r8 the oldest evidence in the ledger is round 5: 41 r5-stale
-# rows remain (44 minus pipe_gc_count/pipe_map_upper/pipe_token_total,
-# refreshed here as touched rows; corpus_epoch_shuffle was r6) and head
-# the r9 rotation.
+# Driver-facing enumeration order: the driver's correctness gate records
+# rows for the FIRST 50 entries of all_queries(), and this tuple decides
+# which queries those are (the rest follow in registration order).
 DRIVER_PRIORITY: tuple[str, ...] = (
     # -- 1. round-8-touched operator paths / oracles --
     "events_quantile_sketch", "streaming_quantile_replay",

@@ -1824,8 +1824,9 @@ def test_hash_cache_room_evicts_oldest_half():
 
 
 def test_lsh_bucket_tables_are_materialized_once(docs):
-    """r10 §2.4 pin: the candidate self-joins must read a PERSISTED
-    bucket/chunk table (exchange reuse does not fire across deduplicated
+    """r10 §2.4 pin: the candidate self-joins of all three banded tiers
+    (minhash, simhash, embedding LSH) must read a PERSISTED bucket/chunk
+    table (exchange reuse does not fire across deduplicated
     self-join sides, so an unpersisted bucket subtree would be recomputed
     — band projection plus cap anti-join — once per join side)."""
     from mare_spark.cache import cache_scope
@@ -1834,6 +1835,7 @@ def test_lsh_bucket_tables_are_materialized_once(docs):
         release_caches,
         simhash_pairs,
     )
+    from mare_spark.operators.similarity import embedding_lsh_pairs
 
     spark = docs.sparkSession
     release_caches()  # drop what earlier unscoped tests left behind
@@ -1849,6 +1851,13 @@ def test_lsh_bucket_tables_are_materialized_once(docs):
     with cache_scope() as held:
         simhash_pairs(docs, "text", "doc_id", max_hamming=3)
         assert len(held) == 2, held  # base + chunk table
+        assert cached_entries(spark) == before + 2
+    with cache_scope() as held:
+        embedding_lsh_pairs(
+            read_table(spark, SF_ORACLE, "embeddings"), "embedding", "vec_id",
+            0.4, dim=64,
+        )
+        assert len(held) == 2, held  # base + bucket table
         assert cached_entries(spark) == before + 2
     assert cached_entries(spark) == before
 

@@ -91,6 +91,37 @@ def test_embedding_cosine_pairs_guarded_routing(spark):
     assert routed_set and routed_set <= exact_set
 
 
+def test_embedding_cosine_pairs_routing_reads_dim_metadata(spark):
+    """The scale-tier handoff takes the dim from with_dim_metadata's
+    column tag when present: a tagged input builds with exactly one job
+    fewer than an untagged one, whose dim needs the one-row probe."""
+    from mare_spark.cache import cache_scope, release_caches
+    from mare_spark.operators.similarity import with_dim_metadata
+
+    release_caches()  # a cached base left by an unscoped test skips jobs
+    emb = read_table(spark, SF_ORACLE, "embeddings")
+    tagged = with_dim_metadata(emb, "embedding", 64)
+    sc = spark.sparkContext
+
+    def build_jobs(df, group):
+        sc.setJobGroup(group, "routed embedding_cosine_pairs build")
+        try:
+            with cache_scope():
+                embedding_cosine_pairs(
+                    df, "embedding", "vec_id", 0.4, exact_max_rows=10
+                )
+        finally:
+            sc.setJobGroup("", "")
+        # job events reach the status tracker through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    build_jobs(tagged, "dim-warm")  # first build pays one-off scan jobs
+    untagged_jobs = build_jobs(emb, "dim-untagged")
+    tagged_jobs = build_jobs(tagged, "dim-tagged")
+    assert tagged_jobs == untagged_jobs - 1, (untagged_jobs, tagged_jobs)
+
+
 def test_hyperplane_signature_realistic_dim(spark):
     """1536-dim embeddings × 48 planes: the signature must stay a compact
     higher-order-function expression (planes as one array literal), agree
@@ -132,7 +163,7 @@ def test_hyperplane_signature_realistic_dim(spark):
 
 def test_embedding_lsh_pairs_no_job_before_signature_stage(spark):
     """With an explicit dim, building the LSH-pairs plan runs ONLY the
-    deliberate cache-materialization barriers (dedup._materialize — one
+    deliberate cache-materialization barriers (cache.materialize — one
     count() each for the base persist and, since r10, the bucket-table
     persist that stops the candidate self-join's sides re-running the
     signature UDF), never a dim probe; without dim and without schema
