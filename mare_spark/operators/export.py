@@ -193,10 +193,8 @@ def refresh_training_shards(
     slim = df.select(id_col, token_col, *keep_cols)
     sharded = slim.withColumn("shard", _shard_col(id_col, n_shards))
     _check_refresh_columns(sharded, manifest, path)
-    bad = sharded.filter(
-        F.col(id_col).isNull() | F.col(token_col).isNull()
-    ).limit(1)
-    if bad.count() > 0:
+    bad = sharded.filter(F.col(id_col).isNull() | F.col(token_col).isNull())
+    if not bad.isEmpty():
         raise ValueError(
             f"NULL {id_col!r}/{token_col!r} rows cannot be exported — "
             "filter or fill them first"
@@ -343,16 +341,15 @@ def _check_export_input(slim: DataFrame, id_col: str, token_col: str) -> None:
     after the (destructive, mode=overwrite) write: an empty frame would
     delete the previous export and leave an unreadable tree; NULL ids
     land in __HIVE_DEFAULT_PARTITION__ and break refresh; NULL tokens
-    null out a shard's fingerprint sum. One early-exit limit(1) probe."""
-    bad = slim.filter(
-        F.col(id_col).isNull() | F.col(token_col).isNull()
-    ).limit(1)
-    if bad.count() > 0:
+    null out a shard's fingerprint sum. Each check is an early-exit
+    ``isEmpty()`` probe."""
+    bad = slim.filter(F.col(id_col).isNull() | F.col(token_col).isNull())
+    if not bad.isEmpty():
         raise ValueError(
             f"NULL {id_col!r}/{token_col!r} rows cannot be exported — "
             "filter or fill them first"
         )
-    if slim.limit(1).count() == 0:
+    if slim.isEmpty():
         raise ValueError(
             "refusing to export an EMPTY DataFrame (mode=overwrite would "
             "destroy any previous export at this path)"

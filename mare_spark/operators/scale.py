@@ -14,6 +14,9 @@ broadcast selection aren't enough.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -427,40 +430,53 @@ def _check_merge_inputs(
       silently ignoring the delete — SQL MERGE treats update+delete on
       one row as a defined conflict, so we do too).
     """
+
+    def any_null(cols: list[str]):
+        return reduce(operator.or_, [F.col(c).isNull() for c in cols])
+
+    def null_key_error(label: str) -> ValueError:
+        return ValueError(
+            f"{op}: NULL merge key in {label} — keys must be non-NULL (the "
+            "anti-join cannot match NULL, so the row would duplicate on "
+            "update or silently no-op on delete)"
+        )
+
+    # Every check is an aggregate over the batch, never a LIMIT probe:
+    # a LIMIT is pushed into each branch of a union (and through the
+    # semi-join below into them) and codegen'd under a counter name that
+    # is new on every call, so a warm session would recompile it. A valid
+    # batch is scanned in full either way.
     # NULL identities first: non-null-safe joins can't match them, so a
     # NULL-key update would DUPLICATE instead of replace and a NULL-key
-    # delete would silently no-op (and evade the both-check below)
-    null_pred = None
-    for k in keys:
-        c = F.col(k).isNull()
-        null_pred = c if null_pred is None else (null_pred | c)
-    frames = [("updates", updates)] + (
-        [("delete_keys", delete_keys)] if delete_keys is not None else []
+    # delete would silently no-op (and evade the both-check below). The
+    # update-side aggregate names its own columns, so no key name
+    # (``count``, say) can collide with them.
+    ids = updates.select(*[F.col(k).alias(f"_k{i}") for i, k in enumerate(keys)])
+    upd = (
+        ids.groupBy(*ids.columns)
+        .agg(F.count("*").alias("_n"))
+        .agg(
+            F.bool_or(any_null(ids.columns)).alias("null_key"),
+            F.bool_or(F.col("_n") > 1).alias("dup_key"),
+        )
+        .first()
     )
-    for label, frame in frames:
-        if frame.filter(null_pred).limit(1).count():
-            raise ValueError(
-                f"{op}: NULL merge key in {label} — keys must "
-                "be non-NULL (the anti-join cannot match NULL, so the "
-                "row would duplicate on update or silently no-op on "
-                "delete)"
-            )
-    dup = (
-        updates.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-    )
-    if dup:
+    if upd["null_key"]:
+        raise null_key_error("updates")
+    if delete_keys is not None and delete_keys.agg(
+        F.bool_or(any_null(keys))
+    ).first()[0]:
+        raise null_key_error("delete_keys")
+    if upd["dup_key"]:
         raise ValueError(
             f"{op}: updates contain duplicate keys — dedupe to "
             "last-wins upstream before merging"
         )
     if delete_keys is not None:
-        both = (
-            updates.select(*[F.col(k) for k in keys])
-            .join(delete_keys.select(*[F.col(k) for k in keys]), keys, "left_semi")
-            .limit(1)
-            .count()
+        both = updates.select(*keys).join(
+            delete_keys.select(*keys), keys, "left_semi"
         )
-        if both:
+        if both.agg(F.count("*")).first()[0]:
             raise ValueError(
                 f"{op}: key appears in both updates and "
                 "delete_keys — update+delete on one row is a conflict; "

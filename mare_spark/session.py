@@ -18,6 +18,20 @@ Design notes for 100 TB scale
   and let AQE coalesce.
 * ``maxPartitionBytes`` keeps scan partitions bounded so a 100 TB scan
   fans out instead of producing giant tasks.
+* ``spark.sql.codegen.cache.maxEntries`` (static, default 100) bounds the
+  JVM's cache of compiled generated classes. Measured at 4 vCPU, one
+  session running every registered query at sf0.01 compiles 1,173
+  distinct classes (1,868 with stage ids in class names, below), and one
+  round of the 5-query ``corpus_floor`` workload compiles 102, so under
+  the default every read of a cycle misses and a warm session recompiles
+  (janino, then JIT of the new class) on every invocation. 4096 entries
+  hold the registry with room to spare; 2,000 cached classes cost ~9 MB
+  of Metaspace and ~2 MB of class space.
+* ``spark.sql.codegen.useIdInClassName=false``: the cache key is the
+  generated source, and a whole-stage class name would carry its stage
+  id, which depends on where the pipeline sits in the plan and, under
+  AQE, on the order stages are re-planned. Without it the same pipeline
+  is one cached class (the id stays in explain output).
 """
 
 from __future__ import annotations
@@ -43,6 +57,14 @@ def host_driver_mem() -> str:
     with open("/proc/meminfo") as fh:
         kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
     return f"{max(kib // (2 << 20), 1)}g"
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes the session's JVM has compiled so far (janino);
+    a warm invocation that adds to it emitted source the cache had not
+    seen."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def get_spark(
@@ -85,6 +107,10 @@ def get_spark(
             "true",
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # -- generated-code cache (sized in the module docstring) ---------
+        # Static: takes effect only when this builder starts the JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # -- scan sizing ------------------------------------------------
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # -- python <-> JVM data path ------------------------------------

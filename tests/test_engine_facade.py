@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from mare_spark.codecs import TextFile
 from mare_spark.engine import Engine
 from mare_spark.sources.external import read_delta, read_jdbc
+from mare_spark.session import codegen_compiles
 from tests.conftest import SF_SMOKE
 
 
@@ -57,6 +58,34 @@ def test_session_defaults_are_host_sized(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert (host_cpus(), host_driver_mem()) == (3, "2g")
+
+
+def test_codegen_cache_holds_a_warm_round(spark):
+    """A warm session recompiles nothing: the generated-class cache holds
+    a cycle of 150 distinct plans, more than Spark's default 100-entry
+    LRU, which would miss on every read of the second cycle."""
+    plans = [spark.range(4).selectExpr(f"id * 3 + {i} AS x") for i in range(150)]
+    for df in plans:
+        df.collect()
+    before = codegen_compiles(spark)
+    for df in plans:
+        df.collect()
+    assert codegen_compiles(spark) == before
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 2048
+
+
+def test_codegen_class_reused_across_stage_ids(spark):
+    """One pipeline compiles once wherever it sits in a plan: generated
+    class names carry no stage id, so the same code under stage 2 of one
+    plan and stage 1 of the next is one cache entry."""
+
+    def pipeline():
+        return spark.range(4).selectExpr("id * 7 + 1000 AS x")
+
+    spark.range(3).selectExpr("id + 2000 AS x").union(pipeline()).collect()
+    before = codegen_compiles(spark)
+    pipeline().collect()
+    assert codegen_compiles(spark) == before
 
 
 def test_jdbc_requires_bounds_with_partition_column(spark):

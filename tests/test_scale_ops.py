@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from mare_spark.operators.dedup import embedding_cosine_pairs
 from mare_spark.operators.scale import bucketed_table, join_bucketed, salted_join
 from mare_spark.operators.similarity import embedding_lsh_pairs
+from mare_spark.session import codegen_compiles
 from mare_spark.tables import read_table
 from tests.conftest import SF_ORACLE
 
@@ -438,6 +439,49 @@ def test_merge_parquet_rejects_duplicate_update_keys(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="duplicate keys"):
         merge_parquet(spark, path, dup_updates, "id")
+
+
+def test_merge_parquet_on_key_named_count(spark, tmp_path):
+    """A key column named ``count`` merges like any other: the duplicate
+    check names its own columns, so none can collide with a key."""
+    from mare_spark.operators.scale import merge_parquet
+
+    path = str(tmp_path / "tbl_count")
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "count long, v string"
+    ).write.parquet(path)
+    updates = spark.createDataFrame([(2, "B2"), (3, "c")], "count long, v string")
+    merge_parquet(spark, path, updates, "count")
+    got = {r["count"]: r.v for r in spark.read.parquet(path).collect()}
+    assert got == {1: "a", 2: "B2", 3: "c"}
+
+    dup = spark.createDataFrame([(1, "x"), (1, "y")], "count long, v string")
+    with pytest.raises(ValueError, match="duplicate keys"):
+        merge_parquet(spark, path, dup, "count")
+
+
+def test_eager_validators_compile_nothing_when_warm(spark):
+    """A second call of the merge and export preconditions on the same
+    frames reuses every compiled class. The merge checks are aggregates:
+    a LIMIT probe over a union (``updates`` here) is pushed into each
+    branch and codegen'd under a counter name that is new on every call."""
+    from mare_spark.operators.export import _check_export_input
+    from mare_spark.operators.scale import _check_merge_inputs
+
+    updates = spark.range(2).selectExpr("id", "'x' AS v").union(
+        spark.range(5, 7).selectExpr("id", "'y' AS v")
+    )
+    deletes = spark.range(10, 11)
+    slim = spark.range(3).selectExpr("id AS doc_id", "id + 5 AS n_tokens")
+
+    def validate():
+        _check_merge_inputs(updates, ["id"], deletes)
+        _check_export_input(slim, "doc_id", "n_tokens")
+
+    validate()
+    before = codegen_compiles(spark)
+    validate()
+    assert codegen_compiles(spark) == before
 
 
 def test_compact_heals_crashed_swap(spark, tmp_path):

@@ -1,13 +1,22 @@
 #!/usr/bin/env python
-"""Per-query job/stage/task census for the bench set.
+"""Per-query job/stage/task and codegen census for the bench set.
 
-For each bench query, runs build + count (the bench's timed action) under a
-job group and reports how many Spark jobs, stages, and tasks one invocation
-costs. Job count is load-independent: it exposes scheduler-round overheads
-(probes, eager checkpoints, persists) that wall-clock timing conflates with
-compute. Usage:
+For each query, runs build + count (the bench's timed action) under a job
+group and reports how many Spark jobs, stages and tasks one warm invocation
+costs, and how many classes janino compiled for it. Job count is
+load-independent: it exposes scheduler-round overheads (probes, eager
+checkpoints, persists) that wall-clock timing conflates with compute. A warm
+invocation that compiles anything emits generated source the session has
+not seen before (a plan that differs per call, or a generated-code cache
+too small for the working set), so the warm compile count should be 0.
 
-    python tools/profile_jobs.py [query1,query2,...]
+The queries run in one session as whole rounds, like a warm service: one
+cold round and one warm round, uncounted, then the counted round. Usage:
+
+    python tools/profile_jobs.py [query1,query2,...|all]
+
+With no argument it profiles the bench set; ``all`` profiles the registry.
+Tables come from ``$SPARK_GRAFT_SF_DIR`` (default sf0.1).
 """
 
 from __future__ import annotations
@@ -20,13 +29,18 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 
 def census(spark, tag, fn):
+    from mare_spark.session import codegen_compiles
+
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     sc.setJobGroup(tag, tag)
+    c0 = codegen_compiles(spark)
     t0 = time.perf_counter()
     out = fn()
     dt = time.perf_counter() - t0
+    n_compiles = codegen_compiles(spark) - c0
     sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     job_ids = tracker.getJobIdsForGroup(tag) or []
     n_stages = 0
     n_tasks = 0
@@ -40,12 +54,12 @@ def census(spark, tag, fn):
                 n_stages += 1
                 n_tasks += si.numTasks
     return {"jobs": len(job_ids), "stages": n_stages, "tasks": n_tasks,
-            "sec": round(dt, 3), "out": out}
+            "compiles": n_compiles, "sec": round(dt, 3), "out": out}
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    only = set(sys.argv[1].split(",")) if len(sys.argv) > 1 else None
+    arg = sys.argv[1] if len(sys.argv) > 1 else None
 
     from mare_spark.cache import cache_scope
     from mare_spark.registry import all_queries
@@ -53,13 +67,16 @@ def main() -> None:
 
     spark = get_spark("profile_jobs")
     queries = {n: q for n, q in sorted(all_queries().items())
-               if (q.bench if only is None else n in only)}
+               if (q.bench if arg is None
+                   else arg == "all" or n in arg.split(","))}
+
+    # cold round (codegen/JIT warm-up), then one warm round: not counted
+    for _ in range(2):
+        for q in queries.values():
+            with cache_scope():
+                q.fn(spark, sf_dir).count()
 
     for name, q in queries.items():
-        # cold run not counted (codegen/JIT warm-up)
-        with cache_scope():
-            q.fn(spark, sf_dir).count()
-
         holder = {}
 
         def build():
@@ -73,7 +90,8 @@ def main() -> None:
             f"{name}: build jobs={b['jobs']} stages={b['stages']} "
             f"tasks={b['tasks']} sec={b['sec']} | count jobs={c['jobs']} "
             f"stages={c['stages']} tasks={c['tasks']} sec={c['sec']} "
-            f"rows={c['out']}"
+            f"rows={c['out']} | compiles={b['compiles'] + c['compiles']}",
+            flush=True,
         )
     spark.stop()
 
