@@ -29,6 +29,9 @@ reference's unit of work is the partition, MaRe.scala:69-96), writes it to a
 temp mount under ``$TMPDIR`` (tmpfs recommended, reference README.md:25),
 runs the command, reads the output mount back and hands it to the next
 command in the pass, or yields it as Arrow batches after the last one.
+Each partition's pass is one Python task, forked from the engine's worker
+daemon (``mare_spark.worker_daemon``), with a fixed start-up cost of about
+0.05 CPU-s (Arrow set-up, reads from the JVM) before it sees a row.
 
 Scale posture: the per-partition temp file bounds memory exactly like the
 reference (MountPoint.scala:90 reads whole files); at 100 TB you size

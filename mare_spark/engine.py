@@ -46,6 +46,14 @@ class Engine:
 
     # -- registered corpus --------------------------------------------------
     def run_query(self, name: str) -> DataFrame:
+        """Build the registered query ``name`` over the engine's tables.
+
+        The result is unscoped: caches its operators persist while
+        building it register in the caller's innermost ``cache_scope()``,
+        or in the root scope outside any. A caller running many queries
+        should build and consume each one inside its own
+        ``with cache_scope():`` so its caches are released when done.
+        """
         if self.sf_dir is None:
             raise ValueError("Engine was built without an sf_dir")
         qs = all_queries()

@@ -9,6 +9,10 @@ checkpoints, persists) that wall-clock timing conflates with compute. A warm
 invocation that compiles anything emits generated source the session has
 not seen before (a plan that differs per call, or a generated-code cache
 too small for the working set), so the warm compile count should be 0.
+It also prints the process tree's CPU seconds over the invocation by role
+(``perfbench/probes.tree_cpu``): the driver, the JVM, the Python workers
+and their children (piped commands), so a fixed cost per Python task
+shows next to the task count.
 
 The queries run in one session as whole rounds, like a warm service: one
 cold round and one warm round, uncounted, then the counted round. Usage:
@@ -25,19 +29,24 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+ROOT = os.path.join(os.path.dirname(__file__), "..")
+sys.path.insert(0, ROOT)
+sys.path.append(os.path.join(ROOT, "perfbench"))
 
 
 def census(spark, tag, fn):
     from mare_spark.session import codegen_compiles
+    from probes import tree_cpu
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     sc.setJobGroup(tag, tag)
     c0 = codegen_compiles(spark)
+    cpu0 = tree_cpu()
     t0 = time.perf_counter()
     out = fn()
     dt = time.perf_counter() - t0
+    cpu = {r: s - cpu0[r] for r, s in tree_cpu().items()}
     n_compiles = codegen_compiles(spark) - c0
     sc.setJobGroup(None, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
@@ -54,7 +63,8 @@ def census(spark, tag, fn):
                 n_stages += 1
                 n_tasks += si.numTasks
     return {"jobs": len(job_ids), "stages": n_stages, "tasks": n_tasks,
-            "compiles": n_compiles, "sec": round(dt, 3), "out": out}
+            "compiles": n_compiles, "sec": round(dt, 3), "cpu": cpu,
+            "out": out}
 
 
 def main() -> None:
@@ -86,11 +96,13 @@ def main() -> None:
         with cache_scope():
             b = census(spark, f"{name}:build", build)
             c = census(spark, f"{name}:count", lambda: holder["df"].count())
+        cpu = " ".join(f"{r}={b['cpu'][r] + c['cpu'][r]:.2f}" for r in b["cpu"])
         print(
             f"{name}: build jobs={b['jobs']} stages={b['stages']} "
             f"tasks={b['tasks']} sec={b['sec']} | count jobs={c['jobs']} "
             f"stages={c['stages']} tasks={c['tasks']} sec={c['sec']} "
-            f"rows={c['out']} | compiles={b['compiles'] + c['compiles']}",
+            f"rows={c['out']} | compiles={b['compiles'] + c['compiles']} "
+            f"| cpu_s {cpu}",
             flush=True,
         )
     spark.stop()
