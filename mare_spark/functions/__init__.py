@@ -1,23 +1,22 @@
 """Column-level function library — the reusable expression builders behind
 the operator modules, exposed as a flat namespace.
 
-Two tiers, named explicitly because the difference is measured (see
-operators.text module docstring): the expression tier is JVM code
-(higher-order lambdas in it evaluate interpreted — fine for composition,
-small arrays, and oracle parity), while the ``*_udf``/vectorized tier is
-Arrow-batched numpy — the hot-path form the operators actually run.
+Each function here has one implementation, the one the operators run. Some
+are JVM expression code (tokenizing, shingling, normalization: plain
+expressions fuse into codegen stages; higher-order lambdas evaluate
+interpreted, which is fine for small arrays and composition). The rest are
+Arrow-batched numpy UDFs — the hashed shingles, the sign-bit signatures, the
+token stats, and the cosines, which share one kernel whose left-to-right
+sums the DuckDB oracles replay bit for bit.
 """
 
 from mare_spark.operators.dedup import (
-    cosine_similarity,
     hashed_word_shingles,
-    minhash_signature,
     normalize_text,
     word_shingles,
 )
 from mare_spark.operators.similarity import (
     cosine_to_query,
-    hyperplane_signature,
     hyperplane_signatures,
     pairwise_cosine,
 )
@@ -31,18 +30,15 @@ from mare_spark.operators.text import (
 )
 
 __all__ = [
-    # expression tier
-    "cosine_similarity",
-    "minhash_signature",
+    # JVM expressions
     "normalize_text",
     "word_shingles",
-    "hyperplane_signature",
     "token_count",
     "tokens",
     "bpe_ish_token_count",
     "deterministic_uniform",
     "word_ngrams",
-    # vectorized (Arrow-batched) tier
+    # Arrow-batched UDFs
     "hashed_word_shingles",
     "cosine_to_query",
     "pairwise_cosine",

@@ -50,7 +50,6 @@ __all__ = [
     "repeated_chunk_scrub",
     "repeated_chunk_scrub_cms",
     "hashed_quality_classifier",
-    "hashed_quality_classifier_udf",
     "group_fixed_k_sample",
     "token_budget_sample",
     "snapshot_diff",
@@ -1039,9 +1038,8 @@ def repeated_chunk_scrub_cms(
 
 
 # Knuth multiplicative constant for the hashed classifier's synthetic
-# weights — ONE definition shared by the expression tier, the UDF tier
-# and the SQL fragment generator below (r8 review: llm4's oracle carried
-# a hand-copied twin of the formula).
+# weights — ONE definition shared by the classifier and the SQL fragment
+# generator below, so the oracle carries no hand-copied twin.
 _KNUTH = 2654435761
 
 
@@ -1089,9 +1087,7 @@ def hashed_quality_classifier(
     whatever scan precedes it. The scoring Project itself runs
     INTERPRETED (``F.aggregate`` and every higher-order function is
     CodegenFallback in Spark, so it cannot join a WholeStageCodegen
-    stage — plan-pinned in tests/test_plans.py); this tier is the
-    oracle-exact reference, and the Arrow tier
-    (:func:`hashed_quality_classifier_udf`) is the hot path at 100 TB.
+    stage — plan-pinned in tests/test_plans.py).
     The weight sum is a left fold (F.aggregate) in exact int64: |sum| <=
     scale · n_tokens, overflow needs a 9-petatoken document.
     """
@@ -1266,92 +1262,6 @@ def snapshot_diff(
         .otherwise(F.lit("unchanged"))
     )
     return j.select(F.col(id_col), change.alias("change"))
-
-
-def hashed_quality_classifier_udf(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    keep_cols: tuple[str, ...] = (),
-    buckets: int = 4096,
-    weight_scale: int = 1000,
-    threshold: float = 0.0,
-) -> DataFrame:
-    """Arrow-batched hot tier of :func:`hashed_quality_classifier` —
-    IDENTICAL scores (same md5 → bucket → weight arithmetic, pinned by a
-    tier-equality test), computed in one Python pass per batch instead of
-    an interpreted per-token higher-order lambda (F.aggregate is
-    CodegenFallback: one expression-tree interpretation per token — the
-    same hot-path class the heavy-hitter counter moved to Arrow, measured
-    18× there). Same zero-shuffle single-scan plan; prefer this tier for
-    full-corpus scoring, the expression tier for SQL-oracle parity."""
-    import hashlib
-    import math
-
-    import pandas as pd
-
-    modulus = 2 * weight_scale + 1
-
-    def gen(batches):
-        from mare_spark.operators.dedup import py_tokens
-
-        wcache: dict[str, int] = {}  # token -> weight; Zipf streams make
-        # the distinct-token set far smaller than the occurrence count, so
-        # memoizing kills most md5 calls (same batch-local reuse as the
-        # heavy-hitter Counter tier)
-
-        def weight_of(t: str) -> int:
-            w = wcache.get(t)
-            if w is None:
-                b = int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % buckets
-                w = (b * _KNUTH) % modulus - weight_scale
-                wcache[t] = w
-            return w
-
-        for pdf in batches:
-            ids, keeps, ns, scores, flags = [], [], [], [], []
-            # column access by NAME (itertuples renames non-identifier
-            # columns like 'doc-id' to positional _1 and getattr breaks)
-            for txt, rid, *kvals in zip(
-                pdf[text_col], pdf[id_col],
-                *[pdf[c] for c in keep_cols],
-            ):
-                ids.append(rid)
-                keeps.append(list(kvals))
-                if txt is None:
-                    # expression-tier contract: NULL text -> NULL outputs
-                    ns.append(None)
-                    scores.append(None)
-                    flags.append(None)
-                    continue
-                ws = py_tokens(txt)
-                s = sum(weight_of(t) for t in ws)
-                n = len(ws)
-                score = (
-                    math.floor(s / (weight_scale * n) * 1e6 + 0.5) / 1e6
-                )
-                ns.append(n)
-                scores.append(score)
-                flags.append(1 if score >= threshold else 0)
-            out = {id_col: ids}
-            for j, c in enumerate(keep_cols):
-                out[c] = [kr[j] for kr in keeps]
-            out.update(
-                n_tokens=ns, quality_score=scores, keep_flag=flags
-            )
-            yield pd.DataFrame(out)
-
-    in_cols = [id_col, *keep_cols, text_col]
-    # carry the INPUT types for id/keep columns (string ids, int metadata
-    # etc. must round-trip the hot tier unchanged — tier equivalence is a
-    # contract, not a fixture accident)
-    in_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    schema = ", ".join(
-        [f"{c} {in_types[c]}" for c in (id_col, *keep_cols)]
-        + ["n_tokens int", "quality_score double", "keep_flag int"]
-    )
-    return df.select(*in_cols).mapInPandas(gen, schema)
 
 
 def epoch_shuffle(

@@ -10,7 +10,8 @@ Four tiers, all shuffle-disciplined for the 100 TB case:
   stop-shingles that would create quadratic buckets.
 * :func:`minhash_lsh_pairs` — MinHash signatures + banded LSH. The scale
   path: candidate generation touches only same-band-bucket pairs; signature
-  math is pure JVM expression code (xxhash64 + universal hashing), no UDF.
+  math is one Arrow-batched numpy pass (blake2b-8 shingle hashes +
+  universal hashing).
 * :func:`simhash_pairs` — 64-bit SimHash with chunk-banding for candidate
   generation + popcount verify (Hamming ≤ k).
 * :func:`embedding_cosine_pairs` — near-dup by embedding cosine; brute
@@ -26,7 +27,6 @@ ANSI.
 from __future__ import annotations
 
 import logging
-import os
 import random
 import re
 from functools import lru_cache, reduce
@@ -92,18 +92,15 @@ _MH_GRAM_CACHE: dict = {}     # gram  -> blake2b-8 ("big", SIGNED) — MinHash t
 _SH_GRAM_CACHE: dict = {}     # gram  -> blake2b-8 ("little")      — SimHash tier
 
 # Per-cache entry cap. ~200 B/entry (short-token key + int + dict slot),
-# so the 1M default bounds each cache near ~200 MB per worker — sized for
-# the default spark.executor.pyspark/memoryOverhead headroom; raise via
-# MARE_HASH_CACHE_CAP on workers provisioned with more Python memory
-# (the r8/r9 closures used a 4M cap PER CLOSURE, which ADVICE r9 flagged
-# as unbounded in aggregate).
-_HASH_CACHE_CAP = int(os.environ.get("MARE_HASH_CACHE_CAP", "1000000"))
+# so 1M entries bound each cache near ~200 MB per worker — sized for the
+# default spark.executor.pyspark/memoryOverhead headroom.
+_HASH_CACHE_CAP = 1_000_000
 
 # Cell budget for the MinHash affine signature grid (num_perm × grams
 # uint64 — see _minhash_base_udf): 32M cells ≈ 256 MB per in-flight
 # grid per worker. Arrow's maxRecordsPerBatch caps rows, not grams/row,
 # so without this a batch of long documents can demand a multi-GB grid.
-_MH_GRID_ELEMS = int(os.environ.get("MARE_MH_GRID_ELEMS", str(32_000_000)))
+_MH_GRID_ELEMS = 32_000_000
 
 
 def _hash_cache_room(cache: dict) -> None:
@@ -537,36 +534,6 @@ def _perm_coeffs(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(
-    text_col: Column, num_perm: int = 32, shingle_n: int = 3, seed: int = 42
-) -> Column:
-    """MinHash signature as an ``array<bigint>`` of length ``num_perm``.
-
-    Base shingle hash: 31 high bits of xxhash64 (shiftrightunsigned 33) so
-    ``a*h + b < 2^62`` — ANSI-overflow-safe; per-permutation universal hash
-    ``(a*h + b) mod (2^31-1)`` (the modulus must sit at the universe size —
-    see ``_MERSENNE31``); min over shingles.
-
-    NB: expression-code tier for API completeness/composability — the
-    higher-order ``transform`` lambdas here are CodegenFallback
-    (interpreted); the hot path (:func:`minhash_lsh_pairs`) uses the
-    vectorized ``_minhash_base_udf`` instead.
-
-    CROSS-TIER INCOMPATIBILITY: this tier's base shingle hash is xxhash64;
-    the UDF tier's is blake2b-8. The two tiers agree on the Jaccard
-    ESTIMATOR (same permutation family, same modulus) but NOT on signature
-    values — never compare/join signatures produced by different tiers."""
-    shingles = word_shingles(text_col, shingle_n)
-    h31 = F.transform(shingles, lambda s: F.shiftrightunsigned(F.xxhash64(s), 33))
-    sig = [
-        F.array_min(
-            F.transform(h31, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE31))
-        )
-        for a, b in _perm_coeffs(num_perm, seed)
-    ]
-    return F.array(*sig)
-
-
 def _minhash_base_udf(num_perm: int, shingle_n: int, seed: int):
     """Arrow-batched UDF: per document, the sorted distinct 64-bit shingle
     hashes AND the ``num_perm`` MinHash signature, in one pass.
@@ -584,10 +551,6 @@ def _minhash_base_udf(num_perm: int, shingle_n: int, seed: int):
     ``(a*h + b) mod (2^31-1)`` (modulus at the universe size — see
     ``_MERSENNE31``), minimized over shingles — the whole
     (num_perm × |shingles|) grid is one numpy broadcast per document.
-
-    CROSS-TIER INCOMPATIBILITY: :func:`minhash_signature` (expression tier)
-    hashes shingles with xxhash64, not blake2b-8 — same estimator, different
-    signature values. Never mix signatures across tiers.
     """
     import hashlib
 
@@ -1306,28 +1269,6 @@ def dedup_clusters(
     return labels.select(F.col("node").alias("member"), F.col("label").alias("cluster"))
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float array columns via the SEQUENTIAL
-    expression fold — summation order matches a SQL oracle's list_sum
-    bit-for-bit (numpy's pairwise-blocked sums round differently at the
-    ulp level, which can flip a 6dp grid snap; hash-checked rows use
-    THIS, scale tiers use the vectorized numpy UDFs). Degenerate (zero)
-    vectors score 0.0 on both engines by an explicit guard — the raw
-    division is NaN in Spark but NULL in DuckDB (r8 review)."""
-    # denominator spelled EXACTLY as the oracles spell it —
-    # sqrt(Σa²)·sqrt(Σb²), never sqrt(Σa²·Σb²), which rounds differently
-    den = F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))
-    return F.when(den == 0.0, F.lit(0.0)).otherwise(_dot(a, b) / den)
-
-
 def embedding_cosine_pairs(
     df: DataFrame,
     vec_col: str,
@@ -1335,7 +1276,6 @@ def embedding_cosine_pairs(
     threshold: float = 0.95,
     exact_max_rows: int | None = 100_000,
     dim: int | None = None,
-    scoring: str = "numpy",
 ) -> DataFrame:
     """Embedding near-dup pairs: cosine ≥ threshold.
 
@@ -1367,26 +1307,16 @@ def embedding_cosine_pairs(
             return embedding_lsh_pairs(
                 df, vec_col=vec_col, id_col=id_col, threshold=threshold, dim=dim
             )
-    # scoring tiers (r8 review — hard_negatives' convention): "fold" is
-    # the sequential expression fold whose summation order matches a SQL
-    # oracle's list_sum bit-for-bit (hash-checked rows); "numpy" is the
-    # vectorized Arrow scale path (pairwise-blocked sums — ulp-different
-    # near a 6dp grid boundary, fine when no oracle replays the value)
-    if scoring == "fold":
-        pair_cos = cosine_similarity
-    elif scoring == "numpy":
-        from mare_spark.operators.similarity import pairwise_cosine
-
-        pair_cos = pairwise_cosine
-    else:
-        raise ValueError(f"scoring must be 'numpy' or 'fold', got {scoring!r}")
+    from mare_spark.operators.similarity import pairwise_cosine
 
     base = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     a = base.withColumnsRenamed({"vid": "id_a", "v": "v_a"})
     b = base.withColumnsRenamed({"vid": "id_b", "v": "v_b"})
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", fround(pair_cos(F.col("v_a"), F.col("v_b")), 6))
+        .withColumn(
+            "cosine", fround(pairwise_cosine(F.col("v_a"), F.col("v_b")), 6)
+        )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

@@ -1,10 +1,10 @@
 """Similarity search over embedding columns (``array<float>``).
 
 * :func:`brute_force_topk` — exact top-k cosine against a query vector.
-  The baseline: one map-only pass (dot products in JVM expression code) +
-  ``TakeOrderedAndProject`` (per-partition heap, no global sort). At 100 TB
-  this is a full scan but zero shuffle — often the right answer for a single
-  ad-hoc query.
+  The baseline: one map-only pass (one Arrow UDF stage scoring each batch)
+  + ``TakeOrderedAndProject`` (per-partition heap, no global sort). At
+  100 TB this is a full scan but zero shuffle — often the right answer for
+  a single ad-hoc query.
 * :func:`ann_lsh_topk` — approximate top-k via signed-random-projection
   (hyperplane) LSH: bucket the corpus by sign-bit signature, search only
   buckets within a Hamming radius of the query's signature. The scale path
@@ -15,11 +15,18 @@
   only the ``nprobe`` nearest cells. At 100 TB the cell id becomes a
   partition column, so a probe is a partition-pruned scan of nprobe/nlist of
   the data.
+
+Every cosine here — exact scans, the LSH/IVF verifies, the exact and IVF
+hard-negative tiers — goes through one kernel (:func:`_cosine_kernel`),
+whose left-to-right sums are the order the DuckDB oracles' ``list_sum``
+folds in, so the oracles check the scale paths too.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,70 +36,98 @@ from mare_spark.cache import materialize
 from mare_spark.operators.dedup import _bucket_self_join
 
 
+def _list_columns(arr, rows: np.ndarray, d: int) -> np.ndarray:
+    """The ``rows`` of a list array whose vectors all hold ``d`` elements,
+    as a (d × len(rows)) float64 matrix: column i is row ``rows[i]``."""
+    x = pc.fill_null(arr.values, 0).to_numpy()
+    starts = arr.offsets.to_numpy()[rows]
+    n = len(starts)
+    if n and (starts == starts[0] + d * np.arange(n)).all():
+        m = x[starts[0] : starts[0] + n * d].reshape(n, d)  # no gather
+    else:
+        m = x[starts[:, None] + np.arange(d)]
+    return np.ascontiguousarray(m.T, dtype=np.float64)
+
+
+def _usable_rows(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(length, usable) per row of a list array: usable rows are
+    non-NULL and hold no NULL element."""
+    ok = arr.is_valid().to_numpy(zero_copy_only=False)
+    if arr.values.null_count:
+        nulls = arr.values.is_null().to_numpy(zero_copy_only=False)
+        seen = np.concatenate([[0], np.cumsum(nulls)])
+        offs = arr.offsets.to_numpy()
+        ok &= seen[offs[1:]] == seen[offs[:-1]]
+    return pc.fill_null(pc.list_value_length(arr), -1).to_numpy(), ok
+
+
+def _fold_sum(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Σ x·y down axis 0, one float64 accumulator per column, added left
+    to right — a SQL ``list_sum``'s order (numpy's own sums pair terms
+    up, which rounds differently)."""
+    acc = np.zeros(np.broadcast_shapes(x.shape[1:], y.shape[1:]))
+    for xj, yj in zip(x, y):
+        acc += xj * yj
+    return acc
+
+
+def _cosine_kernel(va, vb=None, q: np.ndarray | None = None) -> pa.Array:
+    """The one cosine: row i of list array ``va`` against row i of ``vb``,
+    or against the fixed vector ``q``. Per row, left-to-right float64
+    sums of a·b, a·a and b·b; ``sqrt(Σa²)·sqrt(Σb²)`` as the denominator;
+    0.0 when that is 0. NULL when a vector is NULL, holds a NULL element,
+    or the lengths differ. Vectorized across the rows of the batch, one
+    pass per dimension."""
+    len_a, ok = _usable_rows(va)
+    if vb is None:
+        ok &= len_a == len(q)
+    else:
+        len_b, ok_b = _usable_rows(vb)
+        ok &= ok_b & (len_a == len_b)
+    out = np.zeros(len(va))
+    for d in np.unique(len_a[ok]):
+        rows = np.flatnonzero(ok & (len_a == d))
+        a = _list_columns(va, rows, int(d))
+        b = q[:, None] if vb is None else _list_columns(vb, rows, int(d))
+        den = np.sqrt(_fold_sum(a, a)) * np.sqrt(_fold_sum(b, b))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            out[rows] = np.where(den == 0.0, 0.0, _fold_sum(a, b) / den)
+    return pa.array(out, mask=~ok)
+
+
 def cosine_to_query(vec_col, query_vec: list[float]):
     """Cosine of every row's vector against one fixed query vector, as an
-    Arrow-batched numpy UDF: one (batch × dim) @ dim matvec per batch.
-
-    This is the hot loop of every similarity scan. The expression-code
-    alternative (``zip_with``/``aggregate``) is a higher-order function —
-    CodegenFallback, interpreted per row per element — and an unrolled
-    per-element expression tree blows past janino limits at realistic dims
-    (1536+). BLAS through numpy is the scale answer for both."""
-    import pandas as pd
-
+    Arrow UDF over :func:`_cosine_kernel` — the summation the DuckDB
+    oracles replay, so exact and approximate scans score alike."""
     q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
 
-    def cos(vecs):
-        if len(vecs) == 0:
-            return pd.Series([], dtype="float64")
-        m = np.array(list(vecs), dtype=np.float64)
-        # clamp the PRODUCT (as pairwise_cosine does): clamping the two
-        # factors separately underflows to 0.0 when both are degenerate
-        # (1e-300 * 1e-300) and still yields NaN — degenerate vectors must
-        # score cosine 0, never NaN (NaN sorts above every real value)
-        den = np.maximum(np.linalg.norm(m, axis=1) * qn, 1e-300)
-        return pd.Series((m @ q) / den)
+    def cos(vecs: pa.Array) -> pa.Array:
+        return _cosine_kernel(vecs, q=q)
 
-    cos.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(cos, "double")(vec_col)
+    return F.arrow_udf(cos, "double")(vec_col)
 
 
 def pairwise_cosine(col_a, col_b):
-    """Row-wise cosine of two vector columns (candidate-pair verify),
-    vectorized: stack both sides and compute ``(A*B).sum(1)`` per batch."""
-    import pandas as pd
+    """Row-wise cosine of two vector columns (candidate-pair verify), as
+    an Arrow UDF over :func:`_cosine_kernel`."""
 
-    def cos(va, vb):
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        a = np.array(list(va), dtype=np.float64)
-        b = np.array(list(vb), dtype=np.float64)
-        num = (a * b).sum(axis=1)
-        den = np.maximum(
-            np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1), 1e-300
-        )
-        return pd.Series(num / den)
+    def cos(va: pa.Array, vb: pa.Array) -> pa.Array:
+        return _cosine_kernel(va, vb)
 
-    cos.__annotations__ = {"va": pd.Series, "vb": pd.Series, "return": pd.Series}
-    return F.pandas_udf(cos, "double")(col_a, col_b)
+    return F.arrow_udf(cos, "double")(col_a, col_b)
 
 
 def hyperplane_signatures(vec_col, planes_per_band: list[np.ndarray]):
     """All band signatures of a vector column at once, as an
     ``array<bigint>`` (one packed sign-bit signature per band), via one
-    Arrow-batched matmul against the stacked plane matrix.
-
-    The expression tier (:func:`hyperplane_signature`) stays O(1) in plan
-    size but evaluates interpreted (higher-order functions are
-    CodegenFallback); this UDF is the hot-path form: (batch × dim) @
+    Arrow-batched matmul against the stacked plane matrix: (batch × dim) @
     (dim × total_bits), signs packed per band with one dot against the bit
     weights."""
     import pandas as pd
 
     if any(len(p) > 63 for p in planes_per_band):
-        # same contract as the expression tier: bit 63 would wrap the
-        # int64 signature negative (silently, in the numpy pack)
+        # bit 63 would wrap the int64 signature negative (silently, in
+        # the numpy pack)
         raise ValueError("at most 63 planes per band (int64 signature)")
     P = np.vstack(planes_per_band).T.astype(np.float64)  # dim × total_bits
     sizes = [len(p) for p in planes_per_band]
@@ -126,80 +161,15 @@ def brute_force_topk(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    scoring: str = "numpy",
 ) -> DataFrame:
     """Exact top-k cosine. Deterministic tie-break on the id column.
-
-    ``scoring="numpy"`` (default) is the scale path — one BLAS matvec
-    per Arrow batch. ``scoring="fold"`` scores with the sequential
-    expression fold (``dedup.cosine_similarity``) whose summation order
-    matches a SQL oracle's list_sum bit-for-bit — the hash-checked
-    registered rows use it (hard_negatives' convention; numpy's
-    pairwise-blocked sums can snap differently within ~1 ulp of a 6dp
-    grid boundary, r8 review). NULL vectors fold to NULL cosine and
-    sort after every real value under DESC on both engines."""
-    if scoring == "fold":
-        import math
-
-        from mare_spark.operators.dedup import _dot
-
-        # query-side specialization: Σq² is a constant, folded HERE with
-        # the same sequential left-to-right order the oracle's list_sum
-        # uses (bit-identical double), so each row pays two folds, not
-        # three; den multiplication order stays sqrt(Σv²)·sqrt(Σq²)
-        q = [float(x) for x in query_vec]
-        qd = 0.0
-        for x in q:
-            qd += x * x
-        v = F.col(vec_col)
-        den = F.sqrt(_dot(v, v)) * F.lit(math.sqrt(qd))
-        score = F.when(den == 0.0, F.lit(0.0)).otherwise(
-            _dot(v, F.lit(q)) / den
-        )
-    elif scoring == "numpy":
-        score = cosine_to_query(F.col(vec_col), query_vec)
-    else:
-        raise ValueError(f"scoring must be 'numpy' or 'fold', got {scoring!r}")
+    NULL vectors score NULL and sort after every real value under DESC
+    on both engines."""
+    score = cosine_to_query(F.col(vec_col), query_vec)
     return (
         df.select(F.col(id_col), fround(score, 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
-    )
-
-
-def hyperplane_signature(
-    vec_col, planes: np.ndarray
-):
-    """Sign-bit signature (as one bigint) of a vector against fixed random
-    hyperplanes — JVM expression code, dim-scalable.
-
-    The planes ship as ONE ``array<array<double>>`` literal (constant data,
-    not an expression tree), and the per-plane dot products run through
-    ``transform``/``zip_with``/``aggregate`` higher-order functions — so the
-    expression size is O(1) in both embedding dim and plane count. The
-    earlier unrolled form (one multiply-add node per element per plane) blew
-    past janino's 64 KB codegen limit at realistic dims (1536 × 64 planes ≈
-    98k nodes → interpreted eval)."""
-    n_planes = len(planes)
-    if n_planes > 63:
-        raise ValueError("at most 63 planes per signature (signed long bits)")
-    planes_lit = F.lit([[float(w) for w in p] for p in planes])
-    bit_lits = F.lit([1 << i for i in range(n_planes)])
-    dots = F.transform(
-        planes_lit,
-        lambda p: F.aggregate(
-            F.zip_with(p, vec_col, lambda w, x: w * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    signed = F.zip_with(
-        dots,
-        bit_lits,
-        lambda d, bv: F.when(d > 0, bv).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(
-        signed, F.lit(0).cast("long"), lambda acc, b: acc.bitwiseOR(b)
     )
 
 
@@ -285,7 +255,7 @@ def embedding_lsh_pairs(
 def _cosine_verify(cand: DataFrame, vecs: DataFrame, threshold: float) -> DataFrame:
     """Verify candidate pairs ``cand`` (id_a, id_b) by exact cosine over
     ``vecs``' two columns (id, vector): (id_a, id_b, cosine) with cosine
-    ≥ ``threshold``, scored by the numpy :func:`pairwise_cosine`."""
+    ≥ ``threshold``, scored by :func:`pairwise_cosine`."""
     return (
         cand.join(vecs.toDF("id_a", "v_a"), "id_a")
         .join(vecs.toDF("id_b", "v_b"), "id_b")
@@ -664,7 +634,7 @@ def _nearest_centroid(dv, cents) -> "F.Column":
     for i, c in enumerate(cents):
         # ONE literal node per centroid (element-wise F.lit unrolling
         # builds k·dim expression nodes — minutes of driver analysis at
-        # k=256, dim=1536; see hyperplane_signature's array-literal form)
+        # k=256, dim=1536)
         lit_c = F.lit([float(x) for x in c])
         d2 = F.aggregate(
             F.zip_with(dv, lit_c, lambda x, y: (x - y) * (x - y)),
@@ -829,22 +799,11 @@ def hard_negatives(
     w = Window.partitionBy("anchor_id").orderBy(
         F.desc("cosine"), F.asc("neg_id")
     )
-    # The EXACT tier scores with the sequential expression fold
-    # (cosine_similarity: zip_with + aggregate), not the numpy UDF:
-    # numpy's pairwise-blocked summation accumulates DIFFERENT rounding
-    # than a SQL oracle's sequential list_sum, so a cosine within ~1 ulp
-    # of a 6dp grid boundary could snap differently engine-to-engine.
-    # The fold matches the oracle's summation order bit-for-bit — the
-    # same convention every other hash-checked cosine row uses. The
-    # size-guarded tier can afford expression-interpreted scoring; the
-    # IVF scale tier keeps the vectorized numpy verify.
-    from mare_spark.operators.dedup import cosine_similarity
-
     return (
         a.join(b, F.col("anchor_label") != F.col("neg_label"))
         .withColumn(
             "cosine",
-            fround(cosine_similarity(F.col("v_a"), F.col("v_b")), 6),
+            fround(pairwise_cosine(F.col("v_a"), F.col("v_b")), 6),
         )
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)

@@ -34,10 +34,11 @@ _SHINGLES3 = (
 
 
 def _sql_cosine(av: str, bv: str) -> str:
-    """ONE definition of the oracle-side cosine (single-definition rule,
-    r8 review): dot/(sqrt·sqrt) spelled exactly as the engine's
-    sequential fold evaluates it, with the degenerate-vector guard the
-    fold applies (raw 0/0 is NaN in Spark but NULL in DuckDB)."""
+    """ONE definition of the oracle-side cosine: dot/(sqrt·sqrt) spelled
+    exactly as the engine's cosine kernel (``similarity._cosine_kernel``)
+    evaluates it, left-to-right sums included, with the kernel's
+    degenerate-vector guard (raw 0/0 is NaN in numpy but NULL in
+    DuckDB)."""
     dot = f"list_sum(list_transform(range(1, 65), i -> {av}[i] * {bv}[i]))"
     den = (f"(sqrt(list_sum(list_transform({av}, x -> x*x)))"
            f" * sqrt(list_sum(list_transform({bv}, x -> x*x))))")
@@ -249,13 +250,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure at a bigger SF. The scale tier has its own registered row
     (``dedup_embedding_lsh``)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    # scoring="fold": the hash-checked row scores with the sequential
-    # expression fold the oracle replays bit-for-bit (r8 review — numpy's
-    # pairwise-blocked sums can snap differently at a 6dp grid boundary);
-    # the scale tier (dedup_embedding_lsh) keeps the numpy verify
     return embedding_cosine_pairs(
-        emb, "embedding", "vec_id", threshold=0.4, exact_max_rows=None,
-        scoring="fold",
+        emb, "embedding", "vec_id", threshold=0.4, exact_max_rows=None
     )
 
 
@@ -341,9 +337,7 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 cosine against the vec_id=0 probe — brute-force scan +
     TakeOrderedAndProject (per-partition heap, no global sort)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    return brute_force_topk(
-        emb, _query_vector(spark, sf_dir), k=10, scoring="fold"
-    )
+    return brute_force_topk(emb, _query_vector(spark, sf_dir), k=10)
 
 
 @register(
@@ -384,9 +378,7 @@ def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("lang") == "en") & (F.size(tokens(F.col("text"))) >= 30)
     ).select(F.col("doc_id").alias("vec_id"))
     gated = emb.join(kept, "vec_id", "left_semi")
-    return brute_force_topk(
-        gated, _query_vector(spark, sf_dir), k=10, scoring="fold"
-    )
+    return brute_force_topk(gated, _query_vector(spark, sf_dir), k=10)
 
 
 @register("sim_ann_lsh", category="llm", oracle=None)

@@ -439,7 +439,7 @@ def q_udf_python_rowwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     the slow path; the pandas variants above are the production shape)."""
     s = _t(spark, sf_dir, "supplier")
 
-    @F.udf(T.StringType())
+    @F.udf(T.StringType(), useArrow=False)
     def classify(bal: float) -> str:
         if bal is None:  # None < 0 is a TypeError, not a CASE branch
             return None

@@ -457,10 +457,22 @@ def streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         landing = f"{scratch}/landing"
         # time-range split: sessions crossing the 4 range boundaries can
-        # only be recovered by cross-batch session-window state merging
-        read_table(spark, sf_dir, "events").repartitionByRange(
-            4, "ts"
-        ).write.parquet(landing)
+        # only be recovered by cross-batch session-window state merging.
+        # The cut points are fixed by the table's ts span and the files
+        # land one after another (the stream replays them in mtime
+        # order), so every run replays the same files in the same order:
+        # each micro-batch's watermark literal repeats and a warm run
+        # compiles nothing.
+        events = read_table(spark, sf_dir, "events")
+        us = F.unix_micros(F.col("ts").cast("timestamp"))
+        lo, hi = events.agg(F.min(us), F.max(us)).first()
+        lo, hi = (lo, hi) if lo is not None else (0, 0)
+        # NULL-ts rows go to the first file: the split drops no row
+        part = F.coalesce(((us - lo) * 4 / (hi - lo + 1)).cast("int"), F.lit(0))
+        for i in range(4):
+            events.filter(part == i).coalesce(1).write.mode("append").parquet(
+                landing
+            )
         stream = S.session_aggregate(
             S.read_events_stream(spark, landing),
             gap="1 hour",

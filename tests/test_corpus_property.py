@@ -380,38 +380,6 @@ def test_snapshot_diff_classes(spark):
                    5: "unchanged", 6: "changed"}
 
 
-def test_classifier_udf_tier_equals_expression_tier(spark):
-    """The Arrow hot tier reproduces the expression tier byte-for-byte
-    on the fixture corpus (same md5→bucket→weight math)."""
-    from mare_spark.operators.corpus import (
-        hashed_quality_classifier,
-        hashed_quality_classifier_udf,
-    )
-    from mare_spark.tables import read_table
-    from tests.conftest import SF_ORACLE
-
-    from pyspark.sql import functions as _F
-
-    docs = read_table(spark, SF_ORACLE, "documents").withColumn(
-        # plant a NULL-text row: both tiers must emit NULL outputs for it
-        "text",
-        _F.when(_F.col("doc_id") == 0, _F.lit(None)).otherwise(_F.col("text")),
-    )
-    a = {
-        r.doc_id: (r.lang, r.n_tokens, r.quality_score, r.keep_flag)
-        for r in hashed_quality_classifier(
-            docs, "text", "doc_id", keep_cols=("lang",)
-        ).collect()
-    }
-    b = {
-        r.doc_id: (r.lang, r.n_tokens, r.quality_score, r.keep_flag)
-        for r in hashed_quality_classifier_udf(
-            docs, "text", "doc_id", keep_cols=("lang",)
-        ).collect()
-    }
-    assert a == b
-
-
 def test_repeated_chunk_scrub_null_text_drops(spark):
     """NULL-text documents drop from the scrub output on the engine side
     (tokenize(NULL) -> NULL -> no chunks) — the documented contract the

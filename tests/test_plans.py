@@ -310,12 +310,10 @@ def test_quality_classifier_zero_shuffle_interpreted_hof(spark):
     """The hashed linear classifier is a zero-exchange single pass, but
     its Project CANNOT whole-stage-codegen: ``F.aggregate`` (all
     higher-order functions) is CodegenFallback in Spark, so the scoring
-    Project runs interpreted — the Arrow tier
-    (``hashed_quality_classifier_udf``) is the hot path at scale, and
-    this expression tier is the oracle-exact reference. Pin BOTH facts:
-    if Spark ever codegens HOFs, the second assert flips and the claim
-    can be upgraded (r9: the r8 ``codegen_covers(df, "Project")`` assert
-    was structurally unsatisfiable — an overclaim, not a plan bug)."""
+    Project runs interpreted. Pin BOTH facts: if Spark ever codegens
+    HOFs, the second assert flips and the claim can be upgraded (a
+    ``codegen_covers(df, "Project")`` assert is structurally
+    unsatisfiable today)."""
     from mare_spark.operators.corpus import hashed_quality_classifier
 
     docs = read_table(spark, SF_ORACLE, "documents")

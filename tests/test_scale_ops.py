@@ -123,45 +123,6 @@ def test_embedding_cosine_pairs_routing_reads_dim_metadata(spark):
     assert tagged_jobs == untagged_jobs - 1, (untagged_jobs, tagged_jobs)
 
 
-def test_hyperplane_signature_realistic_dim(spark):
-    """1536-dim embeddings × 48 planes: the signature must stay a compact
-    higher-order-function expression (planes as one array literal), agree
-    with numpy, and not blow codegen — the unrolled form was ~74k expression
-    nodes at this shape."""
-    import numpy as np
-
-    from mare_spark.operators.similarity import hyperplane_signature
-
-    dim, n_planes, n_rows = 1536, 48, 20
-    rng = np.random.default_rng(7)
-    planes = rng.standard_normal((n_planes, dim))
-    vecs = rng.standard_normal((n_rows, dim))
-
-    expected = {}
-    for i, v in enumerate(vecs):
-        sig = 0
-        for p in range(n_planes):
-            if float(planes[p] @ v) > 0:
-                sig |= 1 << p
-        expected[i] = sig
-
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id int, embedding array<double>",
-    )
-    got = {
-        r.vec_id: r.sig
-        for r in df.select(
-            "vec_id",
-            hyperplane_signature(F.col("embedding"), planes).alias("sig"),
-        ).collect()
-    }
-    assert got == expected
-
-    with pytest.raises(ValueError):
-        hyperplane_signature(F.col("embedding"), np.zeros((64, 4)))
-
-
 def test_embedding_lsh_pairs_no_job_before_signature_stage(spark):
     """With an explicit dim, building the LSH-pairs plan runs ONLY the
     deliberate cache-materialization barriers (cache.materialize — one
@@ -257,6 +218,79 @@ def test_vectorized_similarity_udfs_realistic_dim(spark):
         assert r.sigs == want_sigs
         assert r.cq == round(float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q))), 8)
         assert r.cp == round(float(v @ w / (np.linalg.norm(v) * np.linalg.norm(w))), 8)
+
+    with pytest.raises(ValueError):  # bit 63 would wrap the int64 sign
+        hyperplane_signatures(F.col("a"), [np.zeros((64, dim))])
+
+
+def test_cosine_kernel_equals_left_to_right_fold(spark):
+    """pairwise_cosine and cosine_to_query equal a pure-Python
+    left-to-right fold EXACTLY (== on doubles) at dim 64 (array<float>,
+    the fixture's type) and dim 1536 (array<double>) — the summation
+    order the DuckDB oracles' list_sum replays. Degenerate rows: a zero
+    vector scores 0.0; a NULL vector, a NULL element or a length
+    mismatch scores NULL; an empty batch returns an empty result."""
+    import math
+
+    import numpy as np
+    import pyarrow as pa
+
+    from mare_spark.operators.similarity import (
+        _cosine_kernel,
+        cosine_to_query,
+        pairwise_cosine,
+    )
+
+    def fold(a, b):
+        if a is None or b is None or len(a) != len(b):
+            return None
+        if any(x is None for x in a) or any(y is None for y in b):
+            return None
+        ab = aa = bb = 0.0
+        for x, y in zip(a, b):
+            ab += x * y
+        for x in a:
+            aa += x * x
+        for y in b:
+            bb += y * y
+        den = math.sqrt(aa) * math.sqrt(bb)
+        return 0.0 if den == 0.0 else ab / den
+
+    rng = np.random.default_rng(5)
+    for dim, elem, n in ((64, "float", 300), (1536, "double", 40)):
+        vecs = rng.standard_normal((n + 1, dim))
+        if elem == "float":  # the values Spark will hold, as doubles
+            vecs = vecs.astype(np.float32).astype(np.float64)
+        rows = [[float(x) for x in v] for v in vecs]
+        q = rows[-1]
+        a = rows[:n]
+        b = rows[1:]
+        a[0] = [0.0] * dim                        # zero vector
+        a[1] = None                               # NULL vector
+        b[2] = b[2][:5] + [None] + b[2][6:]       # NULL element
+        a[3] = a[3][:-1]                          # length mismatch
+        df = spark.createDataFrame(
+            list(zip(range(n), a, b)),
+            f"i int, a array<{elem}>, b array<{elem}>",
+        )
+        got = sorted(
+            (r.i, r.cp, r.cq)
+            for r in df.select(
+                "i",
+                pairwise_cosine(F.col("a"), F.col("b")).alias("cp"),
+                cosine_to_query(F.col("a"), q).alias("cq"),
+            ).collect()
+        )
+        want = [(i, fold(a[i], b[i]), fold(a[i], q)) for i in range(n)]
+        assert got == want
+        assert got[0][1:] == (0.0, 0.0)
+        assert got[1][1:] == (None, None)
+        assert got[2][1] is None and got[3][1:] == (None, None)
+
+    assert df.limit(0).select(pairwise_cosine("a", "b")).collect() == []
+    empty = pa.array([], pa.list_(pa.float32()))
+    assert len(_cosine_kernel(empty, empty)) == 0
+    assert len(_cosine_kernel(empty, q=np.ones(4))) == 0
 
 
 def test_embedding_lsh_dim_from_column_metadata(spark):

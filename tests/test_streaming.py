@@ -706,3 +706,19 @@ def test_heavy_hitters_top_is_restart_order_independent():
         est = sk.estimate(vals)
         order = np.argsort(-est.astype(np.int64), kind="stable")
         assert int(vals[order[0]]) == 5  # always the smaller key
+
+
+def test_sessionize_replay_warm_run_compiles_nothing(spark):
+    """streaming_sessionize_replay splits its landing files on fixed ts
+    cut points and writes them in replay order, so each micro-batch's
+    watermark literal repeats run to run: a warm run compiles 0 classes
+    and returns the same sessions."""
+    from mare_spark.registry import all_queries
+    from mare_spark.session import codegen_compiles
+
+    q = all_queries()["streaming_sessionize_replay"]
+    first = sorted(q.fn(spark, SF_SMOKE).collect())
+    before = codegen_compiles(spark)
+    second = sorted(q.fn(spark, SF_SMOKE).collect())
+    assert codegen_compiles(spark) == before
+    assert second == first
