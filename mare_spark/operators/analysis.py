@@ -99,9 +99,9 @@ def ngram_partial_counts(df: DataFrame, text_col: str, n: int) -> DataFrame:
     from mare_spark.operators import dedup as _dedup
     from mare_spark.operators.dedup import _fan_out, py_tokens
 
-    # fan out a narrow scan (r9 measure-first pass: the fixture corpus is
-    # one 128 MB-split partition, so the Counter pass ran single-threaded
-    # — 2.4 s vs 1.5 s fanned at sf0.1); no-op on an at-scale wide scan
+    # fan out a narrow scan (the fixture corpus is one 128 MB-split
+    # partition, so the pass ran single-threaded — 2.4 s vs 1.5 s fanned
+    # at sf0.1); no-op on an at-scale wide scan
     df = _fan_out(df)
 
     # Counting runs on the shared token-combine gram hashes
@@ -213,15 +213,14 @@ def tfidf_keywords(
     # plain length/IN predicates stay inside whole-stage codegen, where an
     # array-lambda filter (higher-order function) would be interpreted
     # per document.
-    # r10 measure-first pass (VERDICT r9 #6) — NEGATIVE result, recorded
-    # so the fan-out is not re-tried blind: the sf0.1 profile shows ~1.4 s
+    # No _fan_out here, by measurement: the sf0.1 profile shows ~1.4 s
     # CPU across single-task stages (narrow scan), but a 6-rep interleaved
     # A/B of `_fan_out(df)` vs plain came out SLOWER fanned (min 1.90 s /
     # med 2.30 vs min 1.16 / med 2.13): this pipeline is all codegen
     # (split+explode+hash-agg) with map-side partial aggregation, so the
     # added RoundRobin exchange of the full text column plus 32-task
     # overhead exceeds the parallelism win — unlike the Python-UDF
-    # operators where _fan_out pays (r9 #7). The same A/B logic applies
+    # operators where _fan_out pays. The same A/B logic applies
     # at scale only to the narrow-scan case, which a wide corpus scan
     # never hits.
     terms = (
@@ -357,8 +356,8 @@ def dedup_cluster_stats(
     # pass this audit sizes): md5(NULL) is NULL on both engines, and
     # both group NULLs, so unfiltered they'd form one phantom
     # "duplicate cluster" of every extraction failure, inflating the
-    # reported yield over what the cleaning pass would remove
-    # (r8 review; oracle in lockstep).
+    # reported yield over what the cleaning pass would remove (the
+    # oracle filters in lockstep).
     keyed = df.filter(F.col(text_col).isNotNull()).select(
         F.md5(normalize_text(F.col(text_col))).alias("exact_digest"),
         F.when(
@@ -389,69 +388,40 @@ def cross_source_overlap(
     Shape: Arrow-batched per-batch-distinct (source, gram-hash) pairs (the
     same Python-side map-combine pattern as ``ngram_partial_counts`` —
     repeated grams collapse inside the task and the exchange carries
-    fixed-width int64 blake2b-8 keys, the hashing contract of
-    ``operators.dedup``) -> global distinct -> self-join on the hash with
-    ``source_a < source_b`` (each gram contributes at most sources²/2
-    pairs, and sources are a small fixed set) -> one count aggregate.
-    Exact integer counts; deterministic — the oracle counts the distinct
-    gram STRINGS, which matches as long as the 64-bit hash is injective on
-    the observed gram set (the same collision contract every hashed-
-    shingle join in operators.dedup runs under).
+    fixed-width int64 keys: the per-document gram sets of
+    ``dedup._doc_gram_hashes``, the shingle ids of every hashed tier) ->
+    global distinct -> self-join on the hash with ``source_a < source_b``
+    (each gram contributes at most sources²/2 pairs, and sources are a
+    small fixed set) -> one count aggregate. Exact integer counts;
+    deterministic — the oracle counts the distinct gram STRINGS, which
+    matches as long as the 64-bit hash is injective on the observed gram
+    set (the same collision contract every hashed-shingle join in
+    operators.dedup runs under).
     """
-    from itertools import chain
-
     import numpy as np
     import pandas as pd
 
     from mare_spark.operators import dedup as _dedup
-    from mare_spark.operators.dedup import py_tokens
-
-    # Gram hashes are the shared token-combine ids (dedup._gram_hashes,
-    # one flat per-batch array), per-doc windows sliced out (cross-doc
-    # windows never emitted), per-source distinct via np.unique. The
-    # hashes only feed the internal distinct/self-join and the oracle
-    # counts gram STRINGS: the injective-modulo-collisions contract.
 
     def gen(batches):
         # module-attribute access to the kernel — see ngram_partial_counts
         for pdf in batches:
-            tok, srcs = [], []
-            for src, t in zip(pdf[source_col], pdf[text_col]):
-                ws = py_tokens(t)
-                if ws == [""]:
-                    continue  # same contentless-doc guard as above: two
-                    # sources of NULL docs must not "share" a '' gram
-                tok.append(ws)
-                srcs.append(src)
-            nwin = sum(len(ws) for ws in tok) - n + 1
-            if not tok or nwin <= 0:
-                yield pd.DataFrame(
-                    {"src": pd.Series([], dtype="str"),
-                     "gram": pd.Series([], dtype="int64")}
-                )
-                continue
-            G = _dedup._gram_hashes(
-                list(chain.from_iterable(tok)), n
-            ).view(np.int64)
             by_src: dict = {}
-            pos = 0
-            for ws, src in zip(tok, srcs):
-                m = len(ws) - n + 1
-                if m > 0:
-                    by_src.setdefault(src, []).append(G[pos : pos + m])
-                pos += len(ws)
-            out_src: list = []
-            out_gram: list = []
-            for src, chunks in by_src.items():
-                u = np.unique(np.concatenate(chunks))
-                out_src.extend([src] * len(u))
-                out_gram.append(u)
+            for src, h in zip(
+                pdf[source_col], _dedup._doc_gram_hashes(pdf[text_col], n)
+            ):
+                if len(h):
+                    by_src.setdefault(src, []).append(h)
+            srcs: list = []
+            grams = [np.empty(0, dtype=np.int64)]
+            for src, hs in by_src.items():
+                u = np.unique(np.concatenate(hs))
+                srcs += [src] * len(u)
+                grams.append(u)
             yield pd.DataFrame(
                 {
-                    "src": out_src,
-                    "gram": np.concatenate(out_gram)
-                    if out_gram
-                    else np.array([], dtype=np.int64),
+                    "src": pd.Series(srcs, dtype=object),
+                    "gram": np.concatenate(grams),
                 }
             )
 
@@ -572,8 +542,8 @@ def embedding_norm_stats(
         lambda acc, x: acc + x * x,
     )
     # EMPTY arrays score NULL, not 0.0: DuckDB's list_sum([]) is NULL, so
-    # a Spark 0.0-norm row would be counted/averaged on one engine only
-    # (r8 review); a zero-LENGTH vector is a broken row either way and
+    # a Spark 0.0-norm row would be counted/averaged on one engine only;
+    # a zero-LENGTH vector is a broken row either way and
     # belongs outside the stats, like NULL vectors
     sq = F.when(F.size(F.col(vec_col)) > 0, sq)
     norm = fround(F.sqrt(sq), 6)

@@ -1,6 +1,6 @@
 """Deduplication operators for large text corpora.
 
-Four tiers, all shuffle-disciplined for the 100 TB case:
+Five tiers, all shuffle-disciplined for the 100 TB case:
 
 * :func:`exact_dedup` — hash-groupBy on a normalized digest. One shuffle on
   the digest; no row ever meets a non-identical row.
@@ -10,8 +10,8 @@ Four tiers, all shuffle-disciplined for the 100 TB case:
   stop-shingles that would create quadratic buckets.
 * :func:`minhash_lsh_pairs` — MinHash signatures + banded LSH. The scale
   path: candidate generation touches only same-band-bucket pairs; signature
-  math is one Arrow-batched numpy pass (blake2b-8 shingle hashes +
-  universal hashing).
+  math is one Arrow-batched numpy pass (the shared token-combine shingle
+  hashes of :func:`_doc_gram_hashes` + universal hashing).
 * :func:`simhash_pairs` — 64-bit SimHash with chunk-banding for candidate
   generation + popcount verify (Hamming ≤ k).
 * :func:`embedding_cosine_pairs` — near-dup by embedding cosine; brute
@@ -67,32 +67,24 @@ def py_tokens(t):
     return _WS_RE.sub(" ", (t or "").strip(_ASCII_WS).lower()).split(" ")
 
 
-# Shared per-WORKER hash caches (r10, ADVICE r9). The vectorizing UDFs
-# used to carry one up-to-4M-entry dict per CLOSURE, and a pickled
-# closure cell is deserialized per task — several operators in one
-# pipeline could hold multiple hundreds-of-MB dicts per Python worker,
-# every task restarted its warm-up from zero, and overflow handling was a
-# full clear() that rehashed the entire working set. One module-level
-# dict per hash CONVENTION instead, reached inside the UDF bodies as an
-# ATTRIBUTE of the imported module (``import mare_spark.operators.dedup
-# as _D; _D._TOKEN_HASH_CACHE``) — NOT as a bare global: cloudpickle
-# pickles a nested function's bare-global references by VALUE, giving
-# every task its own snapshot copy (verified empirically; a bare-global
-# dict never carried state across tasks), while the module import
-# resolves to the worker process's ONE dict. A reused Python worker
-# (``spark.python.worker.reuse``, default true) thus keeps one warm
-# cache per convention across batches, tasks, operators and queries
-# (guide §4.5).
+# The per-WORKER token hash cache behind every Python-side gram hash
+# (:func:`_gram_hashes`). A dict carried in a UDF closure is deserialized
+# per task, so each task would restart its warm-up from zero and several
+# operators in one pipeline would each hold their own copy. UDF bodies
+# therefore reach the kernels as ATTRIBUTES of the imported module
+# (``import mare_spark.operators.dedup as _D; _D._doc_gram_hashes``), NOT
+# as bare globals: cloudpickle pickles a nested function's bare-global
+# dict references by VALUE, giving every task its own snapshot copy,
+# while the module import resolves to the worker process's ONE dict. A
+# reused Python worker (``spark.python.worker.reuse``, default true) thus
+# keeps one warm cache across batches, tasks, operators and queries.
 # Overflow evicts the oldest HALF (insertion order ≈ first-seen order;
 # the Zipf head re-enters on the next batch) instead of clear()ing.
-# Values are pure functions of the key, so staleness cannot exist; the
-# three conventions never share a dict (signed/endian differences).
+# Values are pure functions of the key, so staleness cannot exist.
 _TOKEN_HASH_CACHE: dict = {}  # token -> blake2b-8 ("big", unsigned)
-_MH_GRAM_CACHE: dict = {}     # gram  -> blake2b-8 ("big", SIGNED) — MinHash tier
-_SH_GRAM_CACHE: dict = {}     # gram  -> blake2b-8 ("little")      — SimHash tier
 
-# Per-cache entry cap. ~200 B/entry (short-token key + int + dict slot),
-# so 1M entries bound each cache near ~200 MB per worker — sized for the
+# Cache entry cap. ~200 B/entry (short-token key + int + dict slot),
+# so 1M entries bound the cache near ~200 MB per worker — sized for the
 # default spark.executor.pyspark/memoryOverhead headroom.
 _HASH_CACHE_CAP = 1_000_000
 
@@ -121,7 +113,7 @@ def _fan_out(df: DataFrame) -> DataFrame:
     wide — never adds a shuffle to an at-scale corpus scan.
 
     The width question is answered from the scan-size hint read_table
-    attaches (one stat/scandir — bytes AND file count since r10, so
+    attaches (one stat/scandir — bytes AND file count, so
     directory-shaped tables are sized by their part files, not the ~4 KB
     directory inode) when present: ``df.rdd.getNumPartitions()`` costs a
     throwaway physical-planning pass (~130 ms per fresh DataFrame,
@@ -129,10 +121,9 @@ def _fan_out(df: DataFrame) -> DataFrame:
     estimate reproduces Spark's own FilePartition packing (each file
     additionally charged ``openCostInBytes``; split size capped at
     ``maxPartitionBytes`` but floored at bytes-per-core), so a
-    many-small-files scan that is already wide is NOT re-shuffled
-    (VERDICT r9 #5 — the raw byte threshold used to add a RoundRobin
-    there). DataFrames without the hint (filtered/derived) keep the
-    exact probe."""
+    many-small-files scan that is already wide is NOT re-shuffled (a
+    raw byte threshold would add a RoundRobin there). DataFrames without
+    the hint (filtered/derived) keep the exact probe."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     scan_bytes = getattr(df, "_mare_scan_bytes", None)
@@ -183,17 +174,16 @@ def _verified_jaccard(sh_a: str, sh_b: str) -> Column:
     verify stages: ``|a∩b| / (|a| + |b| − |a∩b|)``.
 
     Every verify input is a sorted-distinct hash array by construction
-    (``np.unique`` in :func:`hashed_word_shingles`, ``sorted(set(...))``
-    in :func:`_minhash_base_udf`, so a 64-bit collision merges two grams
-    rather than duplicating a hash), so ``|a∪b| = |a| + |b| − |a∩b|``
-    exactly — including the empty/empty case (0, same NULL-on-0/0
-    division as before). That replaces ``array_union``'s per-pair
+    (``np.unique`` in :func:`_doc_gram_hashes`, so a 64-bit collision
+    merges two grams rather than duplicating a hash), so
+    ``|a∪b| = |a| + |b| − |a∩b|`` exactly — including the empty/empty
+    case (0, the same NULL-on-0/0 division). That replaces ``array_union``'s per-pair
     materialization (a hash-set build plus an ``|a|+|b|``-element array
     allocated only to be counted) with two integer subtractions;
     ``array_intersect`` still runs once per pair (codegen subexpression
-    elimination covers its two textual uses). Same integer operands → bit-identical division and
-    rounding (r10; guide §1.2 per-task work — measured on the verify
-    stage, the largest CPU slice of the jaccard/pipeline invocations).
+    elimination covers its two textual uses). Same integer operands →
+    bit-identical division and rounding; the verify stage is the largest
+    CPU slice of the jaccard/pipeline invocations.
     """
     inter = F.size(F.array_intersect(sh_a, sh_b))
     union = F.size(sh_a) + F.size(sh_b) - inter
@@ -358,9 +348,42 @@ def _gram_hashes(flat: list, n: int):
     return _mix64(ACC)
 
 
+def _doc_gram_hashes(texts, n: int) -> list:
+    """Per document of ``texts``, the sorted distinct int64 hashes of its
+    word ``n``-grams, from ONE :func:`_gram_hashes` call over the whole
+    batch (windows straddling two documents are never sliced out). A
+    NULL, contentless or shorter-than-``n`` document gets an empty array:
+    contentless text normalizes to ``['']``, and without the guard every
+    such document would share one phantom 1-gram.
+
+    The one gram-set source of the Python tiers — the exact tier's
+    shingles, the MinHash and SimHash signatures and the cross-source
+    overlap — so their shingle ids are the same values. In-document dedup
+    and signed-order sort are one ``np.unique`` over the int64 view, so a
+    64-bit collision merges two grams rather than duplicating a hash. UDF
+    bodies call it as ``_D._doc_gram_hashes`` (see the cache note above).
+    """
+    from itertools import chain
+
+    import numpy as np
+
+    tok = [py_tokens(t) for t in texts]
+    G = _gram_hashes(list(chain.from_iterable(tok)), n).view(np.int64)
+    out = []
+    pos = 0
+    for ws in tok:
+        m = len(ws) - n + 1
+        if ws == [""] or m <= 0:
+            out.append(np.empty(0, dtype=np.int64))
+        else:
+            out.append(np.unique(G[pos : pos + m]))
+        pos += len(ws)
+    return out
+
+
 def hashed_word_shingles(text_col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles as 64-bit hashes (sorted), via an
-    Arrow-batched pandas UDF.
+    Arrow-batched pandas UDF over :func:`_doc_gram_hashes`.
 
     Two deliberate choices:
     * **Longs, not strings** — every downstream consumer (explode,
@@ -374,41 +397,16 @@ def hashed_word_shingles(text_col: Column, n: int = 3) -> Column:
       per document for the shingle pipeline. The Arrow-batched Python
       loop is ~50× faster and scales per-core.
 
-    Gram hashes come from :func:`_gram_hashes` over the whole batch; the
-    values differ from a per-gram blake2b, which no output or oracle
-    observes — oracles compare string grams / verified Jaccard values,
-    both invariant under any injective-modulo-collisions hash. In-document
-    dedup + signed-order sort come out of one ``np.unique`` over the int64
-    view.
-
-    NB: the MinHash tier (:func:`_minhash_base_udf`) deliberately KEEPS
-    per-gram blake2b-8 — its signature values gate LSH candidate recall,
-    so its hash convention is output-visible and pinned.
+    No output or oracle observes the hash values: oracles compare string
+    grams / verified Jaccard values, both invariant under any
+    injective-modulo-collisions hash.
     """
-    from itertools import chain
-
-    import numpy as np
     import pandas as pd
 
     def shingle_batch(texts):
-        # module-attribute access: a bare global would be pickled by
-        # value, a per-task copy of the shared token cache
         import mare_spark.operators.dedup as _D
 
-        tok = [py_tokens(t) for t in texts]
-        G = _D._gram_hashes(list(chain.from_iterable(tok)), n).view(np.int64)
-        out = []
-        pos = 0
-        for ws in tok:
-            m = len(ws) - n + 1
-            # contentless docs normalize to [''] — no shingles at ANY n
-            # (without this, every empty doc shares one phantom 1-gram)
-            if ws == [""] or m <= 0:
-                out.append([])
-            else:
-                out.append(np.unique(G[pos : pos + m]).tolist())
-            pos += len(ws)
-        return pd.Series(out)
+        return pd.Series(_D._doc_gram_hashes(texts, n))
 
     shingle_batch.__annotations__ = {"texts": pd.Series, "return": pd.Series}
     return F.pandas_udf(shingle_batch, "array<bigint>")(text_col)
@@ -467,14 +465,13 @@ def ngram_jaccard_pairs(
     freq = inv.groupBy("shingle").agg(F.count("*").alias("df_freq"))
     if max_shingle_freq is not None:
         # One inner join against the ≤cap-frequency survivors both DROPS
-        # the hot head and DELIVERS the df annotation (r9 optimization
-        # pass — the previous shape anti-joined the >cap head and then
-        # re-counted survivors with a count window over the shingle,
-        # paying a second shingle exchange plus a window sort for a
-        # number the aggregate already knew). Join groups are ≤ cap by
-        # construction, so no skew is possible; AQE broadcasts the kept
-        # set when it fits and skew-splits the probe otherwise — the
-        # exact safety argument of the anti-join it replaces.
+        # the hot head and DELIVERS the df annotation (anti-joining the
+        # >cap head and re-counting survivors with a count window over
+        # the shingle would pay a second shingle exchange plus a window
+        # sort for a number the aggregate already knows). Join groups
+        # are ≤ cap by construction, so no skew is possible; AQE
+        # broadcasts the kept set when it fits and skew-splits the probe
+        # otherwise.
         inv = inv.join(freq.filter(F.col("df_freq") <= max_shingle_freq),
                        "shingle")
     else:
@@ -538,22 +535,15 @@ def _minhash_base_udf(num_perm: int, shingle_n: int, seed: int):
     """Arrow-batched UDF: per document, the sorted distinct 64-bit shingle
     hashes AND the ``num_perm`` MinHash signature, in one pass.
 
-    Shingle hash: per-gram blake2b-8 (signed int64) — deliberately PINNED
-    even after :func:`hashed_word_shingles` moved to the token-combine
-    scheme (r9): the signature values derived from these hashes gate LSH
-    candidate recall, so this tier's hash convention is output-visible
-    and must not drift. The verify-stage Jaccard VALUES still equal the
-    exact tier's (Jaccard over any injective-modulo-collisions hashing of
-    the same gram sets is identical); only the raw shingle ids differ
-    between tiers — never join them. Signature base: the hash's top 31
-    bits (keeps the affine
-    ``a*h + b`` under 2^62); per-permutation universal hash
-    ``(a*h + b) mod (2^31-1)`` (modulus at the universe size — see
-    ``_MERSENNE31``), minimized over shingles — the whole
-    (num_perm × |shingles|) grid is one numpy broadcast per document.
+    Shingles are :func:`_doc_gram_hashes` — exactly the
+    :func:`hashed_word_shingles` column. Signature base: the hash's top 31
+    bits (keeps the affine ``a*h + b`` under 2^62); per-permutation
+    universal hash ``(a*h + b) mod (2^31-1)`` (modulus at the universe
+    size — see ``_MERSENNE31``), minimized over shingles. The
+    (num_perm × grams) affine grid is one numpy broadcast per group of
+    documents, with per-document minima via ``minimum.reduceat`` at the
+    document offsets.
     """
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
@@ -562,58 +552,18 @@ def _minhash_base_udf(num_perm: int, shingle_n: int, seed: int):
     B = np.array([b for _, b in coeffs], dtype=np.uint64)[:, None]
     M = np.uint64(_MERSENNE31)
     empty_sig = [int(b % M) for b in B[:, 0]]
-    # r9 optimization pass (guide §4.2), BIT-IDENTICAL outputs:
-    # * gram → blake2b hash memoized per WORKER since r10 (the shared
-    #   module-level _MH_GRAM_CACHE — Zipf gram reuse across near-dup
-    #   docs makes hashlib calls rare after warm-up, and worker reuse now
-    #   keeps the warm set across tasks);
-    # * the (num_perm × total-grams) affine grid is ONE numpy broadcast
-    #   per batch with per-document minima via minimum.reduceat at the
-    #   doc offsets, replacing one grid launch per document (~30% off
-    #   the pass; differential-verified identical on the full fixture).
 
     def mh_batch(texts):
-        # worker-module attribute access — the bare global would be a
-        # per-task pickled COPY (see shingle_batch)
         import mare_spark.operators.dedup as _D
 
-        gram_cache = _D._MH_GRAM_CACHE
-        get = gram_cache.get
-        shingles_out = []
+        shingles_out = _D._doc_gram_hashes(texts, shingle_n)
         offs = [0]
-        flat: list = []
-        for t in texts:
-            ws = py_tokens(t)
-            grams = (
-                set()
-                if ws == [""]
-                else {
-                    " ".join(ws[i : i + shingle_n])
-                    for i in range(len(ws) - shingle_n + 1)
-                }
-            )
-            hs = []
-            for g in grams:
-                h = get(g)
-                if h is None:
-                    _hash_cache_room(gram_cache)
-                    h = int.from_bytes(
-                        hashlib.blake2b(
-                            g.encode("utf-8"), digest_size=8
-                        ).digest(),
-                        "big",
-                        signed=True,
-                    )
-                    gram_cache[g] = h
-                hs.append(h)
-            # distinct even if two grams' 64-bit hashes collide: the
-            # verify Jaccard's |a|+|b|-|a∩b| union needs set semantics
-            hs = sorted(set(hs))
-            shingles_out.append(hs)
-            flat.extend(hs)
-            offs.append(len(flat))
-        h31 = np.array(flat, dtype=np.int64).astype(np.uint64) >> np.uint64(33)
-        # empty docs contribute zero elements to `flat`, so consecutive
+        for hs in shingles_out:
+            offs.append(offs[-1] + len(hs))
+        h31 = np.concatenate(
+            [np.empty(0, dtype=np.int64), *shingles_out]
+        ).view(np.uint64) >> np.uint64(33)
+        # empty docs contribute zero elements to `h31`, so consecutive
         # non-empty docs' segments abut — reduceat over non-empty starts
         # reduces exactly one document per segment.
         #
@@ -911,68 +861,28 @@ def minhash_lsh_join(
 
 
 def _simhash_pudf(shingle_n: int):
-    """Arrow-batched SimHash: blake2b-hashed word shingles, 64-wide bit
+    """Arrow-batched SimHash over :func:`_doc_gram_hashes`: 64-wide bit
     votes vectorized in numpy, sign bits packed into one int64. Docs
     with NO grams (NULL/contentless, or shorter than the shingle) emit
     NULL — a zero signature would make every such doc a Hamming-0
     "duplicate" of every other; simhash_pairs filters them out before
     bucketing (the same guard as the MinHash tier)."""
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
-    # gram → blake2b hash memoized per WORKER (r9 memo, r10 shared
-    # module-level _SH_GRAM_CACHE; value-preserving — the signature values
-    # drive bucket candidates, so the hash convention is pinned exactly
-    # like the MinHash tier's; the memo only skips repeat hashlib calls
-    # on Zipf-repeated grams)
+    shifts = np.arange(64, dtype=np.uint64)
 
     def simhash_batch(texts):
-        # worker-module attribute access — the bare global would be a
-        # per-task pickled COPY (see shingle_batch)
         import mare_spark.operators.dedup as _D
 
-        gram_cache = _D._SH_GRAM_CACHE
-        get = gram_cache.get
         out = np.full(len(texts), None, dtype=object)
-        shifts = np.arange(64, dtype=np.uint64)
-        for row, t in enumerate(texts):
-            ws = py_tokens(t)  # THE shared tokenizer (ASCII-\s contract)
-            grams = (
-                set()
-                if ws == [""]
-                else {
-                    " ".join(ws[i : i + shingle_n])
-                    for i in range(max(len(ws) - shingle_n + 1, 0))
-                }
-            )
-            if not grams:
-                out[row] = None
-                continue
-
-            def _h(g):
-                h = get(g)
-                if h is None:
-                    _hash_cache_room(gram_cache)
-                    h = int.from_bytes(
-                        hashlib.blake2b(g.encode(), digest_size=8).digest(),
-                        "little",
-                    )
-                    gram_cache[g] = h
-                return h
-
-            hs = np.fromiter(
-                (_h(g) for g in grams),
-                dtype=np.uint64,
-                count=len(grams),
-            )
-            bits = (hs[:, None] >> shifts) & np.uint64(1)
-            votes = bits.sum(axis=0, dtype=np.int64) * 2 - len(hs)
-            sig = np.uint64(0)
-            for i in np.nonzero(votes > 0)[0]:
-                sig |= np.uint64(1) << np.uint64(i)
-            out[row] = int(sig.astype(np.int64))
+        for row, h in enumerate(_D._doc_gram_hashes(texts, shingle_n)):
+            if len(h):
+                bits = (h.view(np.uint64)[:, None] >> shifts) & np.uint64(1)
+                votes = bits.sum(axis=0, dtype=np.int64) * 2 - len(h)
+                out[row] = int(
+                    np.packbits(votes > 0, bitorder="little").view("<i8")[0]
+                )
         return pd.Series(out)
 
     simhash_batch.__annotations__ = {"texts": pd.Series, "return": pd.Series}
@@ -1146,8 +1056,8 @@ def dedup_clusters(
       depth 200 costs 200 scheduled rounds distributed and nothing
       here — and (b) on a real cluster, removing d shuffle round-trips
       plus d checkpoint materializations of scheduler latency. The
-      probe is a ``limit(N+1).count()`` over already-checkpointed rows,
-      never a full count of an unbounded set. The engaged tier and the
+      edge count is an Observation on the one job that checkpoints the
+      edges, so routing adds no job of its own. The engaged tier and the
       byte estimate are logged (``mare_spark.dedup`` at INFO) so the
       routing is observable in production driver logs.
     * above the limit (a mass-duplicate corpus at 100 TB): the
@@ -1169,15 +1079,12 @@ def dedup_clusters(
     # BEFORE materializing would run the upstream pair-generation plan twice
     # inside one job (exchange reuse across differently-projected branches
     # is not guaranteed under AQE).
-    # The routing probe rides INSIDE the checkpoint job as an Observation
-    # (the r9 optimization pass): the old shape paid three extra scheduler
-    # round-trips per invocation — a limit(N+1).count() job, a head(256)
-    # sample job, and the union-find tier's own collect() job. The edge
-    # count is now observed during the one materializing job; the byte
-    # gate prices a 256-row local fetch (as before — the gate must run
-    # BEFORE any full collect, that is its purpose), and the union-find
-    # tier's collect doubles as the final pull. Identical routing
-    # semantics: the exact count replaces the min(count, N+1) probe.
+    # The routing probe rides INSIDE the checkpoint job as an Observation,
+    # so routing costs no scheduler round-trip of its own: the edge count
+    # is observed during the one materializing job, the byte gate prices
+    # a 256-row local fetch (it must run BEFORE any full collect, that is
+    # its purpose), and the union-find tier's collect doubles as the final
+    # pull.
     obs = Observation()
     directed = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -1233,9 +1140,9 @@ def dedup_clusters(
         )
         # Convergence check fused into the materializing action: an
         # Observation on a _changed flag is collected DURING the eager
-        # localCheckpoint job, so each round costs exactly one job — the r1
-        # shape (checkpoint + separate join/limit/count job per round) paid
-        # one extra full pass over the label set every iteration.
+        # localCheckpoint job, so each round costs exactly one job (a
+        # separate join/limit/count job per round would pay one extra full
+        # pass over the label set every iteration).
         obs = Observation()
         new_labels = (
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left")

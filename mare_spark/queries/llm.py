@@ -34,15 +34,21 @@ _SHINGLES3 = (
 
 
 def _sql_cosine(av: str, bv: str) -> str:
-    """ONE definition of the oracle-side cosine: dot/(sqrt·sqrt) spelled
-    exactly as the engine's cosine kernel (``similarity._cosine_kernel``)
-    evaluates it, left-to-right sums included, with the kernel's
-    degenerate-vector guard (raw 0/0 is NaN in numpy but NULL in
-    DuckDB)."""
-    dot = f"list_sum(list_transform(range(1, 65), i -> {av}[i] * {bv}[i]))"
+    """ONE definition of the oracle-side cosine, with the contract of the
+    engine's cosine kernel (``similarity._cosine_kernel``): NULL when a
+    vector is NULL, holds a NULL element (``list_sum`` would skip it) or
+    the lengths differ; 0.0 for empty vectors or a zero denominator (raw
+    0/0 is NaN in numpy, and ``list_sum([])`` is NULL in DuckDB);
+    otherwise dot/(sqrt·sqrt) with left-to-right sums, snapped to 6
+    places."""
+    dot = (f"list_sum(list_transform(range(1, len({av}) + 1),"
+           f" i -> {av}[i] * {bv}[i]))")
     den = (f"(sqrt(list_sum(list_transform({av}, x -> x*x)))"
            f" * sqrt(list_sum(list_transform({bv}, x -> x*x))))")
-    return (f"(CASE WHEN {den} = 0 THEN 0.0 ELSE "
+    return (f"(CASE WHEN {av} IS NULL OR {bv} IS NULL"
+            f" OR list_count({av}) < len({av})"
+            f" OR list_count({bv}) < len({bv}) OR len({av}) <> len({bv})"
+            f" THEN NULL WHEN len({av}) = 0 OR {den} = 0 THEN 0.0 ELSE "
             f"floor({dot} / {den} * 1000000.0 + 0.5) / 1000000.0 END)")
 
 

@@ -332,7 +332,7 @@ def dedup_crawl_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl, odd-id documents the existing index; MinHash signatures built
     with the same seed on both sides, banded buckets joined ACROSS corpora
     only (within-corpus pairs are never generated), exact-Jaccard
-    verified. Rows-only driver check (blake2b signatures are not
+    verified. Rows-only driver check (the MinHash signatures are not
     SQL-expressible); pytest proves the result equals the union-corpus LSH
     pair set restricted to cross pairs."""
     from mare_spark.operators.dedup import minhash_lsh_join
