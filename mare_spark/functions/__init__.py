@@ -2,7 +2,7 @@
 the operator modules, exposed as a flat namespace.
 
 Each function here has one implementation, the one the operators run. Some
-are JVM expression code (tokenizing, shingling, normalization: plain
+are JVM expression code (tokenizing, n-grams, normalization: plain
 expressions fuse into codegen stages; higher-order lambdas evaluate
 interpreted, which is fine for small arrays and composition). The rest are
 Arrow-batched numpy UDFs — the hashed shingles, the sign-bit signatures, the
@@ -10,11 +10,7 @@ token stats, and the cosines, which share one kernel whose left-to-right
 sums the DuckDB oracles replay bit for bit.
 """
 
-from mare_spark.operators.dedup import (
-    hashed_word_shingles,
-    normalize_text,
-    word_shingles,
-)
+from mare_spark.operators.dedup import hashed_word_shingles, normalize_text
 from mare_spark.operators.similarity import (
     cosine_to_query,
     hyperplane_signatures,
@@ -32,7 +28,6 @@ from mare_spark.operators.text import (
 __all__ = [
     # JVM expressions
     "normalize_text",
-    "word_shingles",
     "token_count",
     "tokens",
     "bpe_ish_token_count",

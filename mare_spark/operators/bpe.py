@@ -196,6 +196,13 @@ def _learn_bpe_driver(
     return merges
 
 
+# learn_bpe_merges' tiers: vocabularies up to _DRIVER_VOCAB_LIMIT distinct
+# words learn in driver memory; larger ones take the distributed loop,
+# which localCheckpoints the vocab every _CHECKPOINT_EVERY rounds.
+_DRIVER_VOCAB_LIMIT = 2_000_000
+_CHECKPOINT_EVERY = 25
+
+
 def learn_bpe_merges(
     df: DataFrame,
     text_col: str,
@@ -203,8 +210,6 @@ def learn_bpe_merges(
     *,
     end_marker: str = "</w>",
     min_count: int = 2,
-    driver_vocab_limit: int = 2_000_000,
-    checkpoint_every: int = 25,
 ) -> list[tuple[str, str]]:
     """Learn up to ``num_merges`` BPE merges (Sennrich-style: words split
     to characters plus a terminal ``end_marker`` symbol; each round
@@ -219,7 +224,7 @@ def learn_bpe_merges(
     :func:`word_counts`); everything after runs on the distinct-word
     vocabulary, which Zipf keeps 4-6 orders of magnitude smaller:
 
-    * vocab ≤ ``driver_vocab_limit`` rows (the common case — even a
+    * vocab ≤ ``_DRIVER_VOCAB_LIMIT`` rows (the common case — even a
       100 TB web corpus has a vocabulary in the tens of millions, and
       2M rows of (word, cnt, syms) is ~200 MB of driver heap): the
       vocab is collected once and the merge loop runs in driver memory
@@ -229,8 +234,8 @@ def learn_bpe_merges(
       keyed pair-aggregate over the persisted vocab, a 1-row best-pair
       fetch, and one Arrow-batched rewrite. Each round is a Spark job
       (~0.1-0.2 s scheduling floor), so this path is for bounding
-      driver memory, not speed; raise the limit before reaching for it.
-      Every ``checkpoint_every`` rounds the vocab is localCheckpoint-ed
+      driver memory, not speed.
+      Every ``_CHECKPOINT_EVERY`` rounds the vocab is localCheckpoint-ed
       so executor loss or cache eviction replays at most that many
       rewrite rounds instead of the whole merge history back to the
       corpus scan.
@@ -249,7 +254,7 @@ def learn_bpe_merges(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_vocab = wc.count()
-    if n_vocab <= driver_vocab_limit:
+    if n_vocab <= _DRIVER_VOCAB_LIMIT:
         try:
             rows = [(r["word"], r["cnt"], r["syms"]) for r in wc.collect()]
         finally:
@@ -273,12 +278,12 @@ def learn_bpe_merges(
             nxt = wc.withColumn(
                 "syms", _merge_pair_udf(a, b)(F.col("syms"))
             )
-            if (round_no + 1) % checkpoint_every == 0:
+            if (round_no + 1) % _CHECKPOINT_EVERY == 0:
                 # truncate lineage: persist alone leaves each round's
                 # cache depending on the previous round's (evictable)
                 # cache, so a lost executor replays every merge UDF back
                 # to the corpus scan; a localCheckpoint bounds the replay
-                # to checkpoint_every rounds
+                # to _CHECKPOINT_EVERY rounds
                 nxt = nxt.localCheckpoint(eager=True)
             else:
                 nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)

@@ -36,7 +36,7 @@ from functools import lru_cache, reduce
 # ASCII-only, while Python \s is Unicode by default — re.ASCII restricts
 # it to [ \t\n\r\f\v], the same set Java matches. A non-breaking space
 # must stay inside a token on every engine or the UDF tiers' shingle sets
-# diverge from the expression tier and the oracles.
+# diverge from normalize_text and the oracles.
 _WS_RE = re.compile(r"\s+", re.ASCII)
 _ASCII_WS = " \t\n\r\f\v"
 
@@ -112,48 +112,16 @@ def _fan_out(df: DataFrame) -> DataFrame:
     1 task → single-threaded shingling). No-op when the input is already
     wide — never adds a shuffle to an at-scale corpus scan.
 
-    The width question is answered from the scan-size hint read_table
-    attaches (one stat/scandir — bytes AND file count, so
-    directory-shaped tables are sized by their part files, not the ~4 KB
-    directory inode) when present: ``df.rdd.getNumPartitions()`` costs a
-    throwaway physical-planning pass (~130 ms per fresh DataFrame,
-    measured) that the bench paid once per operator invocation. The
-    estimate reproduces Spark's own FilePartition packing (each file
-    additionally charged ``openCostInBytes``; split size capped at
-    ``maxPartitionBytes`` but floored at bytes-per-core), so a
-    many-small-files scan that is already wide is NOT re-shuffled (a
-    raw byte threshold would add a RoundRobin there). DataFrames without
-    the hint (filtered/derived) keep the exact probe."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    scan_bytes = getattr(df, "_mare_scan_bytes", None)
-    if scan_bytes is not None:
-        conf = df.sparkSession.conf
-        raw = conf.get(
-            "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
-        )
-        try:
-            max_pb = int(raw)
-            open_cost = int(
-                conf.get("spark.sql.files.openCostInBytes", str(4 * 1024 * 1024))
-            )
-        except ValueError:
-            max_pb = None  # "128m"-style value: fall through to the probe
-        if max_pb is not None:
-            n_files = getattr(df, "_mare_scan_files", 1)
-            padded = scan_bytes + n_files * open_cost
-            split = min(max_pb, max(open_cost, padded // max(target, 1)))
-            est_splits = -(-padded // max(split, 1))  # ceil
-            if est_splits < target:
-                return df.repartition(target)
-            return df
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    The width is Spark's own partition count. PySpark caches ``df.rdd`` on
+    the DataFrame object and the RDD caches its partitions, so asking
+    again about a memoized :func:`mare_spark.tables.read_table` frame runs
+    no job and plans nothing."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(target) if df.rdd.getNumPartitions() < target else df
 
 
 def _candidate_shingles(
-    base: DataFrame, cand: DataFrame, ids: tuple[str, ...] = ("doc_a", "doc_b")
+    base: DataFrame, cand: DataFrame, ids: tuple[str, ...]
 ) -> DataFrame:
     """``base``'s (doc, shingles) rows restricted to the docs named in
     ``cand``'s ``ids`` columns.
@@ -191,23 +159,33 @@ def _verified_jaccard(sh_a: str, sh_b: str) -> Column:
 
 
 def _jaccard_verify(
-    base: DataFrame, cand: DataFrame, threshold: float
+    base_a: DataFrame,
+    base_b: DataFrame,
+    cand: DataFrame,
+    threshold: float,
+    ids: tuple[str, str] = ("doc_a", "doc_b"),
 ) -> DataFrame:
-    """Verify candidate pairs ``cand`` (doc_a, doc_b) by exact Jaccard
-    over ``base``'s (doc, shingles) sets: (doc_a, doc_b, jaccard) with
-    jaccard ≥ ``threshold``.
+    """Verify candidate pairs ``cand`` (``ids``) by exact Jaccard over the
+    (doc, shingles) sets of ``base_a`` (first id) and ``base_b`` (second
+    id): (id_a, id_b, jaccard) with jaccard ≥ ``threshold``.
 
     ``cand`` is materialized first: it feeds both verify joins and the
-    :func:`_candidate_shingles` semi-join, and unpersisted the expensive
-    candidate generation would run once per consumer."""
+    :func:`_candidate_shingles` semi-joins, and unpersisted the expensive
+    candidate generation would run once per consumer. A self-join
+    (``base_a is base_b``) semi-joins its one base once, on both ids."""
+    a, b = ids
     cand = materialize(cand, StorageLevel.MEMORY_AND_DISK)
-    sh = _candidate_shingles(base, cand)
+    if base_a is base_b:
+        sh_a = sh_b = _candidate_shingles(base_a, cand, ids)
+    else:
+        sh_a = _candidate_shingles(base_a, cand, (a,))
+        sh_b = _candidate_shingles(base_b, cand, (b,))
     return (
-        cand.join(sh.withColumnsRenamed({"doc": "doc_a", "shingles": "sh_a"}), "doc_a")
-        .join(sh.withColumnsRenamed({"doc": "doc_b", "shingles": "sh_b"}), "doc_b")
+        cand.join(sh_a.withColumnsRenamed({"doc": a, "shingles": "sh_a"}), a)
+        .join(sh_b.withColumnsRenamed({"doc": b, "shingles": "sh_b"}), b)
         .withColumn("jaccard", _verified_jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        .select(a, b, "jaccard")
     )
 
 
@@ -240,29 +218,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         )
         .select(id_col, "digest", "n_copies")
     )
-
-
-def word_shingles(text_col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the normalized text (JVM-side:
-    split → sequence → transform → array_distinct; no UDF).
-
-    The transform is gated on ``size >= n``: Spark's ``sequence(1, k)``
-    generates a *descending* ``[1, 0]`` when k = 0, and ``slice(_, 0, n)``
-    then throws INVALID_PARAMETER_VALUE.START — short docs must yield an
-    empty shingle set, not a job abort."""
-    words = F.split(normalize_text(text_col), " ")
-    k = F.size(words) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )
-    has_content = ~(
-        (F.size(words) == 1) & (F.element_at(words, 1) == "")
-    )  # contentless docs normalize to [''] — no shingles at ANY n,
-    # matching hashed_word_shingles' ws == [''] guard
-    return F.when(
-        (F.size(words) >= n) & has_content, F.array_distinct(grams)
-    ).otherwise(F.array().cast("array<string>"))
 
 
 @lru_cache(maxsize=None)
@@ -520,7 +475,7 @@ def ngram_jaccard_pairs(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
-    return _jaccard_verify(base, cand, threshold)
+    return _jaccard_verify(base, base, cand, threshold)
 
 
 def _perm_coeffs(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -780,7 +735,7 @@ def minhash_lsh_pairs(
     cand = _bucket_self_join(
         _mh_buckets(base, bands, r), ("band_idx", "band_hash"), "doc", bucket_cap
     )
-    return _jaccard_verify(base, cand, threshold)
+    return _jaccard_verify(base, base, cand, threshold)
 
 
 def minhash_lsh_join(
@@ -842,21 +797,8 @@ def minhash_lsh_join(
         )
         .distinct()
     )
-    # materialized for the same reason as in _jaccard_verify; each side's
-    # verify set is restricted to its own candidate docs
-    cand = materialize(cand, StorageLevel.MEMORY_AND_DISK)
-    sh_l = _candidate_shingles(base_l, cand, ("id_left",)).withColumnsRenamed(
-        {"doc": "id_left", "shingles": "sh_l"}
-    )
-    sh_r = _candidate_shingles(base_r, cand, ("id_right",)).withColumnsRenamed(
-        {"doc": "id_right", "shingles": "sh_r"}
-    )
-    return (
-        cand.join(sh_l, "id_left")
-        .join(sh_r, "id_right")
-        .withColumn("jaccard", _verified_jaccard("sh_l", "sh_r"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_left", "id_right", "jaccard")
+    return _jaccard_verify(
+        base_l, base_r, cand, threshold, ("id_left", "id_right")
     )
 
 
@@ -1019,13 +961,17 @@ def _edge_sample_row_bytes(rows) -> int:
     return max(1, total // len(rows))
 
 
+# dedup_clusters' driver union-find tier: edge count and estimated
+# driver-heap bytes at or below which the edges are resolved in memory.
+_DRIVER_EDGES_LIMIT = 1_000_000
+_DRIVER_BYTES_LIMIT = 256 << 20
+
+
 def dedup_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iterations: int = 20,
-    driver_edges_limit: int | None = 1_000_000,
-    driver_bytes_limit: int | None = 256 << 20,
 ) -> DataFrame:
     """Resolve near-dup PAIRS into duplicate CLUSTERS via connected
     components (iterative min-label propagation), returning
@@ -1042,11 +988,10 @@ def dedup_clusters(
     Cost tiers — resolution is proportional to the EDGE set, which a
     thresholded near-dup pass keeps orders of magnitude below the corpus:
 
-    * edges ≤ ``driver_edges_limit`` AND estimated driver heap ≤
-      ``driver_bytes_limit`` (the common case; 1M long-id (src, dst)
-      rows is ~tens of MB of driver heap — but string doc ids cost ~10×
-      a long, so the byte gate prices a 256-row sample's ACTUAL row
-      width, never row count alone): the materialized edges are
+    * edges ≤ ``_DRIVER_EDGES_LIMIT`` AND estimated driver heap ≤
+      ``_DRIVER_BYTES_LIMIT`` (the common case; the byte gate prices a
+      256-row sample's ACTUAL row width, never row count alone, because
+      string doc ids cost ~10× a long): the materialized edges are
       collected ONCE and resolved by exact in-memory union-find (the
       same bounded-driver tier as ``learn_bpe_merges``). What this buys
       is NOT local wall-clock (measured parity with the distributed
@@ -1064,8 +1009,8 @@ def dedup_clusters(
       distributed loop below, unchanged — one job per round,
       Observation-fused convergence, lineage-truncating checkpoints.
 
-    Both tiers produce identical labels (pinned by test); pass
-    ``driver_edges_limit=None`` to force the distributed path.
+    Both tiers produce identical labels (pinned by test, which forces
+    the distributed path by lowering the module limits).
     """
     # Iterative plans nest: round k's logical plan would embed round k-1's
     # (twice — the join and the convergence check), which itself embeds the
@@ -1091,29 +1036,27 @@ def dedup_clusters(
         .observe(obs, F.count(F.lit(1)).alias("n_edges"))
         .localCheckpoint(eager=True)
     )
-    if driver_edges_limit is not None:
-        probe = obs.get["n_edges"] or 0
-        if probe <= driver_edges_limit:
-            row_bytes = _edge_sample_row_bytes(directed.head(256))
-            est = probe * row_bytes
-            if driver_bytes_limit is None or est <= driver_bytes_limit:
-                _log.info(
-                    "dedup_clusters: driver union-find tier engaged "
-                    "(%d edges, ~%d bytes est at %d B/row)",
-                    probe, est, row_bytes,
-                )
-                return _dedup_clusters_driver(directed)
+    probe = obs.get["n_edges"] or 0
+    if probe <= _DRIVER_EDGES_LIMIT:
+        row_bytes = _edge_sample_row_bytes(directed.head(256))
+        est = probe * row_bytes
+        if est <= _DRIVER_BYTES_LIMIT:
             _log.info(
-                "dedup_clusters: %d edges within the row limit but "
-                "~%d bytes est > driver_bytes_limit=%d — distributed "
-                "tier engaged",
-                probe, est, driver_bytes_limit,
+                "dedup_clusters: driver union-find tier engaged "
+                "(%d edges, ~%d bytes est at %d B/row)",
+                probe, est, row_bytes,
             )
-        else:
-            _log.info(
-                "dedup_clusters: > %d edges — distributed tier engaged",
-                driver_edges_limit,
-            )
+            return _dedup_clusters_driver(directed)
+        _log.info(
+            "dedup_clusters: %d edges within the row limit but "
+            "~%d bytes est > %d — distributed tier engaged",
+            probe, est, _DRIVER_BYTES_LIMIT,
+        )
+    else:
+        _log.info(
+            "dedup_clusters: > %d edges — distributed tier engaged",
+            _DRIVER_EDGES_LIMIT,
+        )
     edges = directed.union(directed.select(F.col("dst"), F.col("src")))
 
     # Seed labels with the first propagation round fused into initialization:
@@ -1181,39 +1124,17 @@ def embedding_cosine_pairs(
     vec_col: str,
     id_col: str,
     threshold: float = 0.95,
-    exact_max_rows: int | None = 100_000,
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs: cosine ≥ threshold.
 
-    Guarded routing: below ``exact_max_rows`` this is the *exact* tier — an
-    all-pairs theta self-join (O(N²) BroadcastNestedLoop, fine for modest N,
-    zero false negatives). Above it, the O(N²) plan would not survive, so
-    inputs route through the banded-LSH scale tier
-    (:func:`mare_spark.operators.similarity.embedding_lsh_pairs`), whose
-    candidates are exact-cosine verified — no false positives, recall
-    tunable via its banding. The size probe is ``limit(N+1).count()``
-    (bounded — never a full count of a 100 TB corpus). Pass
-    ``exact_max_rows=None`` to force the exact tier.
+    The *exact* tier: an all-pairs theta self-join (O(N²)
+    BroadcastNestedLoop, fine for modest N, zero false negatives). Inputs
+    too large for it take the banded-LSH scale tier,
+    :func:`mare_spark.operators.similarity.embedding_lsh_pairs`, whose
+    candidates are exact-cosine verified (no false positives, recall
+    tunable via its banding); the caller picks the tier, so an exact
+    answer never turns approximate behind its back.
     """
-    if exact_max_rows is not None:
-        n_probe = df.select(id_col).limit(exact_max_rows + 1).count()
-        if n_probe > exact_max_rows:
-            from mare_spark.operators.similarity import embedding_lsh_pairs
-
-            if dim is None and "dim" not in (df.schema[vec_col].metadata or {}):
-                # neither passed nor tagged (with_dim_metadata): one
-                # bounded fetch of the first NON-NULL vector's length
-                # beats failing the scale-tier handoff
-                dim = len(
-                    df.select(vec_col)
-                    .filter(F.col(vec_col).isNotNull())
-                    .limit(1)
-                    .collect()[0][0]
-                )
-            return embedding_lsh_pairs(
-                df, vec_col=vec_col, id_col=id_col, threshold=threshold, dim=dim
-            )
     from mare_spark.operators.similarity import pairwise_cosine
 
     base = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))

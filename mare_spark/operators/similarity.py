@@ -752,7 +752,6 @@ def hard_negatives(
     id_col: str = "vec_id",
     label_col: str = "label",
     k: int = 1,
-    exact_max_rows: int | None = 100_000,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for every anchor,
     the ``k`` most-cosine-similar vectors with a DIFFERENT label —
@@ -761,30 +760,16 @@ def hard_negatives(
 
     This is the EXACT tier: an all-pairs theta self-join on label
     inequality (O(N²) BroadcastNestedLoop — allowlisted like the other
-    exact embedding tiers) + a per-anchor top-k window. Guarded routing
-    (the ``embedding_cosine_pairs`` posture): above ``exact_max_rows``
-    the O(N²) plan would not survive, so inputs route to
-    :func:`hard_negatives_ivf`, which blocks candidates through the
-    anchor's probed IVF cells (keyed equi-join, no cartesian) and is
-    pinned to this tier by recall tests; the size probe is a bounded
-    ``limit(N+1).count()``, never a full count. Pass
-    ``exact_max_rows=None`` to force the exact tier.
+    exact embedding tiers) + a per-anchor top-k window. Inputs too large
+    for it take :func:`hard_negatives_ivf`, which blocks candidates
+    through the anchor's probed IVF cells (keyed equi-join, no cartesian)
+    and is pinned to this tier by recall tests.
 
     Output: ``(anchor_id, neg_id, cosine, rnk)``, ties broken on
     (cosine desc, neg_id asc) — deterministic across layouts.
     """
     from pyspark.sql.window import Window
 
-    if exact_max_rows is not None:
-        n_probe = df.select(id_col).limit(exact_max_rows + 1).count()
-        if n_probe > exact_max_rows:
-            # nlist clamped so centroid seeding always has enough rows
-            # (n > exact_max_rows is known without a full count)
-            nlist = min(256, exact_max_rows + 1)
-            return hard_negatives_ivf(
-                df, vec_col=vec_col, id_col=id_col, label_col=label_col,
-                k=k, nlist=nlist, nprobe=max(1, nlist // 8),
-            )
     base = df.select(
         F.col(id_col).alias("vid"),
         F.col(label_col).alias("lbl"),

@@ -247,18 +247,11 @@ def dedup_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs at cosine ≥ 0.4 (exact tier).
-
-    ``exact_max_rows=None`` pins the EXACT tier: the default guarded
-    routing would (a) run a probe-count job on every query construction
-    and (b) silently reroute to <1.0-recall LSH above 100k rows while
-    the registered oracle stays exact all-pairs — a guaranteed hash
-    failure at a bigger SF. The scale tier has its own registered row
-    (``dedup_embedding_lsh``)."""
+    """Embedding near-dup pairs at cosine ≥ 0.4 (exact tier, which the
+    registered oracle replays all-pairs). The scale tier has its own
+    registered row (``dedup_embedding_lsh``)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    return embedding_cosine_pairs(
-        emb, "embedding", "vec_id", threshold=0.4, exact_max_rows=None
-    )
+    return embedding_cosine_pairs(emb, "embedding", "vec_id", threshold=0.4)
 
 
 @register(

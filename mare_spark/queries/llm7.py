@@ -362,13 +362,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mare_spark.operators.similarity import hard_negatives
 
     emb = read_table(spark, sf_dir, "embeddings")
-    # exact_max_rows=None pins the EXACT tier this oracle models: the
-    # guarded default would run a probe-count job per construction and
-    # silently reroute to the <1.0-recall IVF tier above 100k rows (the
-    # dedup_embedding_cosine precedent)
-    return hard_negatives(
-        emb, "embedding", "vec_id", "label", k=1, exact_max_rows=None
-    )
+    return hard_negatives(emb, "embedding", "vec_id", "label", k=1)
 
 
 @register(

@@ -50,27 +50,22 @@ _SCHEMA_MEMO: dict = {}
 
 
 def _scan_stat(path: str):
-    """``(memo_key, total_bytes, n_files)`` for a parquet table path, or
-    ``None`` when no trustworthy local stat exists (non-local path,
-    permission error, Hive-partitioned nested layout).
+    """The memo key for a parquet table path, or ``None`` when no
+    trustworthy local stat exists (non-local path, permission error,
+    Hive-partitioned nested layout).
 
-    A single regular file keys on ``(path, mtime_ns, size)`` as before. A
+    A single regular file keys on ``(path, mtime_ns, size)``. A
     directory-shaped table (the standard Spark output layout,
-    ``x.parquet/part-*.parquet``) previously stat'ed as ~4 KB — ADVICE r9:
-    that made ``_fan_out`` classify any at-scale directory scan as narrow
-    and repartition it, and the dir's own mtime need not change on an
-    in-place part-file rewrite, so the schema/DataFrame memos could go
-    stale. Here the part files are scanned (one os.scandir — the same
-    listing cost Spark's own FileIndex pays) and the key carries
-    (file count, total bytes, max part mtime); hidden/metadata entries
-    (``_SUCCESS``, ``.crc``) are ignored as Spark does. A nested directory
-    (partitioned table) returns None: sizes under partition pruning are
-    filter-dependent, so both the memo and the fan-out hint fall back to
-    the exact paths."""
+    ``x.parquet/part-*.parquet``) keys on its part files, not the
+    directory inode, whose mtime need not change on an in-place part-file
+    rewrite: one os.scandir (the same listing cost Spark's own FileIndex
+    pays) gives (file count, total bytes, max part mtime); hidden/metadata
+    entries (``_SUCCESS``, ``.crc``) are ignored as Spark does. A nested
+    directory (partitioned table) returns None and skips the memos."""
     try:
         st = os.stat(path)
         if statmod.S_ISREG(st.st_mode):
-            return (path, st.st_mtime_ns, st.st_size), st.st_size, 1
+            return (path, st.st_mtime_ns, st.st_size)
         if not statmod.S_ISDIR(st.st_mode):
             return None
         total = n = max_mtime = 0
@@ -86,7 +81,7 @@ def _scan_stat(path: str):
                 max_mtime = max(max_mtime, s.st_mtime_ns)
         if n == 0:
             return None
-        return (path, "dir", n, total, max_mtime), total, n
+        return (path, "dir", n, total, max_mtime)
     except OSError:
         return None
 
@@ -144,8 +139,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # action still reads the parquet bytes. Keyed on (path, mtime, size)
     # so a rewritten fixture invalidates; memo lives on the session object
     # and dies with it.
-    scan = _scan_stat(path)
-    key, scan_bytes, scan_files = scan if scan is not None else (None, None, None)
+    key = _scan_stat(path)
     if key is not None:
         memo = getattr(spark, "_mare_df_memo", None)
         if memo is None:
@@ -156,14 +150,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema = _parquet_schema(spark, path, key)
     reader = spark.read.schema(schema) if schema is not None else spark.read
     df = reader.parquet(path)
-    # Scan-size hint for operators.dedup._fan_out: answering "is this scan
-    # narrower than the cluster?" through df.rdd costs a full physical
-    # planning pass (~130 ms per fresh DataFrame, measured) — a local
-    # stat/scandir answers it for free. Metadata only; derived DataFrames
-    # (filter/select) drop the attributes and fall back to the exact probe.
-    if key is not None:
-        df._mare_scan_bytes = scan_bytes
-        df._mare_scan_files = scan_files
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # FLOOR division, not bare `div`: div truncates toward zero, so a
         # pre-epoch nano value like -1500 ns would land at -1 µs while the
@@ -174,9 +160,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts div 1000 - (CASE WHEN ts % 1000 < 0 THEN 1 ELSE 0 END)"
         )
         df = df.withColumn("ts", F.timestamp_micros(micros))
-        if key is not None:
-            df._mare_scan_bytes = scan_bytes
-            df._mare_scan_files = scan_files
     if key is not None:
         spark._mare_df_memo[key] = df
     return df

@@ -258,28 +258,31 @@ def test_epoch_shuffle_validates_shards(spark):
 
 # --- driver-path learning (bounded vocab) -----------------------------------
 
-def test_driver_and_distributed_learning_agree(spark):
+def test_driver_and_distributed_learning_agree(spark, monkeypatch):
     """Both learn_bpe_merges paths — driver in-memory loop (vocab within
-    driver_vocab_limit) and distributed per-round jobs (limit=0 forces
-    the fallback) — must produce the identical merge table."""
+    _DRIVER_VOCAB_LIMIT) and distributed per-round jobs (a limit of 0
+    forces the fallback) — must produce the identical merge table."""
+    import mare_spark.operators.bpe as B
     from mare_spark.operators.bpe import learn_bpe_merges
 
     df = spark.createDataFrame([(t,) for t in CORPUS], "text string")
     fast = learn_bpe_merges(df, "text", 12)
-    slow = learn_bpe_merges(df, "text", 12, driver_vocab_limit=0)
+    monkeypatch.setattr(B, "_DRIVER_VOCAB_LIMIT", 0)
+    slow = learn_bpe_merges(df, "text", 12)
     want = py_learn_bpe(CORPUS, 12)
     assert fast == slow == want
 
 
-def test_distributed_checkpoint_rounds_agree(spark):
-    """A checkpoint_every that fires mid-run (lineage truncation via
+def test_distributed_checkpoint_rounds_agree(spark, monkeypatch):
+    """A checkpoint interval that fires mid-run (lineage truncation via
     localCheckpoint) may not change a single merge."""
+    import mare_spark.operators.bpe as B
     from mare_spark.operators.bpe import learn_bpe_merges
 
+    monkeypatch.setattr(B, "_DRIVER_VOCAB_LIMIT", 0)
+    monkeypatch.setattr(B, "_CHECKPOINT_EVERY", 3)
     df = spark.createDataFrame([(t,) for t in CORPUS], "text string")
-    got = learn_bpe_merges(
-        df, "text", 8, driver_vocab_limit=0, checkpoint_every=3
-    )
+    got = learn_bpe_merges(df, "text", 8)
     assert got == py_learn_bpe(CORPUS, 8)
 
 

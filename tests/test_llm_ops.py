@@ -608,8 +608,8 @@ def test_semantic_dedup_subset_and_recall(spark, emb):
     from mare_spark.operators.similarity import semantic_dedup_pairs
 
     exact = _pair_set(
-        embedding_cosine_pairs(emb, "embedding", "vec_id", threshold=0.4,
-                               exact_max_rows=None).select("id_a", "id_b")
+        embedding_cosine_pairs(emb, "embedding", "vec_id", threshold=0.4)
+        .select("id_a", "id_b")
     )
     sem = _pair_set(
         semantic_dedup_pairs(emb, "embedding", "vec_id", nlist=16,
@@ -623,10 +623,9 @@ def test_semantic_dedup_subset_and_recall(spark, emb):
 
 
 def test_word_shingles_short_docs_empty(spark):
-    """Docs shorter than shingle_n: word_shingles must yield an empty set
-    (sequence(1,0) is DESCENDING in Spark and slice(start=0) throws) —
-    not abort the job."""
-    from mare_spark.operators.dedup import word_shingles
+    """Docs shorter than shingle_n, empty or NULL: hashed_word_shingles
+    yields an empty set, not a job abort."""
+    from mare_spark.operators.dedup import hashed_word_shingles
 
     df = spark.createDataFrame(
         [(1, "a b"), (2, ""), (3, None), (4, "one two three four")],
@@ -634,7 +633,7 @@ def test_word_shingles_short_docs_empty(spark):
     )
     rows = df.select(
         "doc_id",
-        F.size(word_shingles(F.col("text"), 3)).alias("n_sh"),
+        F.size(hashed_word_shingles(F.col("text"), 3)).alias("n_sh"),
     ).collect()
     by_id = {r.doc_id: r for r in rows}
     assert by_id[1].n_sh == 0 and by_id[2].n_sh == 0 and by_id[3].n_sh == 0
@@ -1119,27 +1118,6 @@ def test_hard_negatives_ivf_recall_at_partial_probe(spark):
         assert (a // 40) != (n // 40)
 
 
-def test_hard_negatives_routes_to_ivf_above_guard(spark):
-    """Above exact_max_rows the exact tier must hand off to the IVF block
-    (no BroadcastNestedLoopJoin in the routed plan)."""
-    from mare_spark.operators.similarity import hard_negatives
-    from mare_spark.plans import formatted_plan
-
-    df = spark.createDataFrame(
-        _clustered_labeled_vectors(n_per=10, n_labels=2),
-        "vec_id long, label int, embedding array<double>",
-    )
-    routed = hard_negatives(
-        df, "embedding", "vec_id", "label", exact_max_rows=5
-    )
-    assert "BroadcastNestedLoopJoin" not in formatted_plan(routed)
-    # a 6-cell/1-probe index on well-separated clusters may legitimately
-    # find no cross-label candidates — recall at realistic probe widths
-    # is pinned by the dedicated IVF tests above; this pins the HANDOFF
-    assert routed.count() >= 0
-    assert routed.columns == ["anchor_id", "neg_id", "cosine", "rnk"]
-
-
 def test_cluster_balanced_sample_exact_sizes_and_membership(spark):
     """Every cluster contributes exactly min(k, cluster size) rows, the
     sample is a subset of the assignment, and membership is salt-keyed
@@ -1209,13 +1187,13 @@ def test_cluster_balanced_sample_with_trained_centroids(spark):
         assert want[r.vec_id] == r.cluster_id
 
 
-def test_dedup_clusters_tiers_agree(spark):
+def test_dedup_clusters_tiers_agree(spark, monkeypatch):
     """Driver union-find tier ≡ distributed min-label propagation on a
-    random multi-component graph (chains force multi-round propagation),
-    and the distributed path stays exercised via driver_edges_limit=None
-    / limit-0."""
+    random multi-component graph (chains force multi-round propagation);
+    the distributed path is forced by lowering the module's edge limit."""
     import random
 
+    import mare_spark.operators.dedup as D
     from mare_spark.operators.dedup import dedup_clusters
 
     rng = random.Random(23)
@@ -1231,29 +1209,24 @@ def test_dedup_clusters_tiers_agree(spark):
 
     drv = {r.member: r.cluster
            for r in dedup_clusters(pairs).collect()}  # default: driver tier
+    monkeypatch.setattr(D, "_DRIVER_EDGES_LIMIT", 0)
     dist = {r.member: r.cluster
-            for r in dedup_clusters(
-                pairs, max_iterations=200,
-                driver_edges_limit=None).collect()}
+            for r in dedup_clusters(pairs, max_iterations=200).collect()}
     assert drv == dist
-    dist0 = {r.member: r.cluster
-             for r in dedup_clusters(
-                 pairs, max_iterations=200,
-                 driver_edges_limit=0).collect()}
-    assert drv == dist0
     # representatives are component minima
     for c in set(drv.values()):
         assert c == min(m for m, cc in drv.items() if cc == c)
 
 
-def test_dedup_clusters_byte_gate_and_logging(spark, caplog):
+def test_dedup_clusters_byte_gate_and_logging(spark, caplog, monkeypatch):
     """The driver-tier gate prices sampled row BYTES, not row count: the
     same 3-edge graph routes to the driver under the default byte limit
     (log line names the tier + estimate) but to the distributed loop
-    when driver_bytes_limit is squeezed below the string-id row width —
+    when the byte limit is squeezed below the string-id row width —
     labels identical either way."""
     import logging
 
+    import mare_spark.operators.dedup as D
     from mare_spark.operators.dedup import dedup_clusters
 
     pairs = spark.createDataFrame(
@@ -1266,13 +1239,9 @@ def test_dedup_clusters_byte_gate_and_logging(spark, caplog):
     assert any("driver union-find tier engaged" in m
                for m in caplog.messages), caplog.messages
     caplog.clear()
+    monkeypatch.setattr(D, "_DRIVER_BYTES_LIMIT", 100)
     with caplog.at_level(logging.INFO, logger="mare_spark.dedup"):
-        dist = {
-            r.member: r.cluster
-            for r in dedup_clusters(
-                pairs, driver_bytes_limit=100
-            ).collect()
-        }
+        dist = {r.member: r.cluster for r in dedup_clusters(pairs).collect()}
     assert any("distributed tier engaged" in m
                for m in caplog.messages), caplog.messages
     assert drv == dist
@@ -1342,8 +1311,8 @@ def test_dedup_review_guards(spark):
 
     from mare_spark.operators.dedup import (
         exact_dedup,
+        hashed_word_shingles,
         simhash_pairs,
-        word_shingles,
     )
 
     df = spark.createDataFrame(
@@ -1367,7 +1336,7 @@ def test_dedup_review_guards(spark):
 
     # n=1 shingles: contentless docs yield NO phantom '' shingle
     sh = df.select(
-        "doc_id", word_shingles(F.col("text"), 1).alias("s")
+        "doc_id", hashed_word_shingles(F.col("text"), 1).alias("s")
     ).collect()
     for r in sh:
         if r.doc_id in (1, 2):
@@ -1376,7 +1345,7 @@ def test_dedup_review_guards(spark):
             assert r.s in ([], None)
 
     # NBSP stays inside a token (ASCII-\s contract): these two docs are
-    # DIFFERENT to simhash, same as to the expression tier
+    # DIFFERENT to simhash, same as to normalize_text
     nb = spark.createDataFrame(
         [(0, "aa bb cc dd ee"), (1, "aa bb cc dd ee")],
         "doc_id long, text string",

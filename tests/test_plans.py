@@ -542,34 +542,42 @@ def test_ivfpq_indexed_probe_prunes_partitions(spark, tmp_path):
 
 
 def test_fan_out_skips_wide_directory_table(spark, tmp_path):
-    """_fan_out's scan hint must size a DIRECTORY-shaped table by its part
-    files, not the ~4 KB directory inode (ADVICE r9), and must not add a
-    RoundRobin when the estimated split count already covers the cluster
-    (VERDICT r9 #5 — the many-small-files case: Spark's own packing charges
-    openCostInBytes per file, so 3x-slots tiny files plan >= slots splits)."""
+    """_fan_out spreads a scan narrower than the cluster — a single-file
+    table, filtered or not — and leaves a directory table whose part files
+    already cover every slot unchanged (no RoundRobin on a wide scan)."""
     from mare_spark.operators.dedup import _fan_out
     from mare_spark.tables import read_table
 
     slots = spark.sparkContext.defaultParallelism
-    src = read_table(spark, SF_ORACLE, "documents").limit(slots * 3)
-    path = str(tmp_path / "many_parts.parquet")
-    src.repartition(slots * 3).write.parquet(path)
-
-    # re-read through read_table's stat path (directory layout)
-    import mare_spark.tables as T
-
-    df = T.read_table(spark, str(tmp_path), "many_parts")
-    assert getattr(df, "_mare_scan_files", None) == slots * 3
-    assert df._mare_scan_bytes > 4096  # part-file sum, not the dir inode
-
-    fanned = _fan_out(df)
-    assert fanned is df, "wide many-small-files scan must not be re-shuffled"
-
-    # single narrow file still fans out (unchanged contract)
-    narrow = T.read_table(spark, SF_ORACLE, "documents")
-    assert getattr(narrow, "_mare_scan_files", None) == 1
+    narrow = read_table(spark, SF_ORACLE, "documents")
     plan = P.formatted_plan(_fan_out(narrow))
     assert "RoundRobinPartitioning" in plan, plan
+    filtered = narrow.filter(F.col("doc_id") % 2 == 0)
+    plan = P.formatted_plan(_fan_out(filtered))
+    assert "RoundRobinPartitioning" in plan, plan
+
+    path = str(tmp_path / "many_parts.parquet")
+    narrow.limit(slots * 3).repartition(slots * 3).write.parquet(path)
+    wide = read_table(spark, str(tmp_path), "many_parts")
+    assert _fan_out(wide) is wide, "wide many-small-files scan re-shuffled"
+
+
+def test_fan_out_of_memoized_table_runs_no_job(spark):
+    """A second _fan_out of the same read_table frame asks Spark for the
+    partition count again without running a job."""
+    from mare_spark.operators.dedup import _fan_out
+
+    sc = spark.sparkContext
+    df = read_table(spark, SF_ORACLE, "documents")
+    _fan_out(df)
+    assert read_table(spark, SF_ORACLE, "documents") is df
+    sc.setJobGroup("fan-out-again", "second _fan_out")
+    try:
+        _fan_out(df)
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert sc.statusTracker().getJobIdsForGroup("fan-out-again") == []
 
 
 def test_directory_table_memo_invalidates_on_part_rewrite(spark, tmp_path):
@@ -581,13 +589,13 @@ def test_directory_table_memo_invalidates_on_part_rewrite(spark, tmp_path):
     src = read_table(spark, SF_ORACLE, "documents").limit(4)
     path = str(tmp_path / "t.parquet")
     src.coalesce(1).write.parquet(path)
-    key1, bytes1, files1 = T._scan_stat(path)
-    assert files1 >= 1 and bytes1 > 0
+    key1 = T._scan_stat(path)
+    assert key1 is not None and key1[1] == "dir" and key1[2] >= 1
     df1 = T.read_table(spark, str(tmp_path), "t")
 
     # rewrite: same directory, new content
     src.limit(2).coalesce(1).write.mode("overwrite").parquet(path)
-    key2, _, _ = T._scan_stat(path)
+    key2 = T._scan_stat(path)
     assert key1 != key2
     df2 = T.read_table(spark, str(tmp_path), "t")
     assert df2 is not df1, "rewritten directory table must not hit the memo"

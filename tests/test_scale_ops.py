@@ -74,53 +74,12 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_customer_b")
 
 
-def test_embedding_cosine_pairs_guarded_routing(spark):
-    """Above the exact_max_rows guard the all-pairs theta join must NOT run:
-    the plan routes through banded LSH (no BroadcastNestedLoopJoin) and the
-    verified result is a subset of the exact pair set."""
+def test_embedding_cosine_pairs_exact_tier_plan(spark):
+    """embedding_cosine_pairs is the exact all-pairs tier at any input
+    size: its plan is the theta self-join, never the LSH scale tier."""
     emb = read_table(spark, SF_ORACLE, "embeddings")
-    exact = embedding_cosine_pairs(
-        emb, "embedding", "vec_id", 0.4, exact_max_rows=None
-    )
+    exact = embedding_cosine_pairs(emb, "embedding", "vec_id", 0.4)
     assert "BroadcastNestedLoopJoin" in exact._jdf.queryExecution().executedPlan().toString()
-
-    routed = embedding_cosine_pairs(emb, "embedding", "vec_id", 0.4, exact_max_rows=10)
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    exact_set = {(r.id_a, r.id_b) for r in exact.collect()}
-    routed_set = {(r.id_a, r.id_b) for r in routed.collect()}
-    assert routed_set and routed_set <= exact_set
-
-
-def test_embedding_cosine_pairs_routing_reads_dim_metadata(spark):
-    """The scale-tier handoff takes the dim from with_dim_metadata's
-    column tag when present: a tagged input builds with exactly one job
-    fewer than an untagged one, whose dim needs the one-row probe."""
-    from mare_spark.cache import cache_scope, release_caches
-    from mare_spark.operators.similarity import with_dim_metadata
-
-    release_caches()  # a cached base left by an unscoped test skips jobs
-    emb = read_table(spark, SF_ORACLE, "embeddings")
-    tagged = with_dim_metadata(emb, "embedding", 64)
-    sc = spark.sparkContext
-
-    def build_jobs(df, group):
-        sc.setJobGroup(group, "routed embedding_cosine_pairs build")
-        try:
-            with cache_scope():
-                embedding_cosine_pairs(
-                    df, "embedding", "vec_id", 0.4, exact_max_rows=10
-                )
-        finally:
-            sc.setJobGroup("", "")
-        # job events reach the status tracker through the async listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    build_jobs(tagged, "dim-warm")  # first build pays one-off scan jobs
-    untagged_jobs = build_jobs(emb, "dim-untagged")
-    tagged_jobs = build_jobs(tagged, "dim-tagged")
-    assert tagged_jobs == untagged_jobs - 1, (untagged_jobs, tagged_jobs)
 
 
 def test_embedding_lsh_pairs_no_job_before_signature_stage(spark):
