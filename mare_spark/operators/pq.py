@@ -36,6 +36,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mare_spark.operators.similarity import (
+    _cells_udf,
+    ivf_assign,
+    probe_cells_for,
+)
+
 
 def _sample_vectors(
     df: DataFrame, vec_col: str, id_col: str, sample: int
@@ -68,16 +74,6 @@ def _adc_table(codebooks: np.ndarray, q: np.ndarray) -> np.ndarray:
             for j in range(m)
         ]
     )
-
-
-def _probe_cells(centroids: np.ndarray, q: np.ndarray, nprobe: int) -> list:
-    """The query's nprobe nearest IVF cells under the same normalized-
-    cosine rule `ivf_assign` uses — shared by every indexed probe."""
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    return [int(c) for c in np.argsort(-(cn @ qn))[:nprobe]]
 
 
 def _adc_batch(table: np.ndarray, code_rows: list) -> np.ndarray:
@@ -448,8 +444,6 @@ def write_ivfpq_index(
     vector table on the shortlist ids (a k-row semi-join). Both
     assignment passes are scan-side Arrow; the write shuffles nothing.
     """
-    from mare_spark.operators.similarity import ivf_assign
-
     coded = pq_assign(
         ivf_assign(df, centroids, vec_col=vec_col, cell_col=cell_col),
         vec_col, codebooks,
@@ -483,9 +477,8 @@ def ivfpq_topk_indexed(
     ``rerank_shortlist`` is set — the exact re-rank runs over the
     shortlist only. Returns ``(id, adc_dist)`` or ``(id, dist)``
     ascending."""
-    q = np.asarray(list(query_vec), dtype=np.float64)
     probed = spark.read.parquet(index_path).filter(
-        F.col(cell_col).isin(_probe_cells(centroids, q, nprobe))
+        F.col(cell_col).isin(probe_cells_for(centroids, query_vec, nprobe))
     )
     if rerank_shortlist is not None:
         if vec_col not in probed.columns:
@@ -517,8 +510,10 @@ def ivfpq_topk_batch(
 ) -> DataFrame:
     """BATCH retrieval — the "score a million queries against the corpus
     tonight" shape: every query explodes into its ``nprobe`` nearest IVF
-    cells (one Arrow matmul per batch of queries), and scoring happens
-    inside a COGROUP KEYED ON THE CELL (``groupBy(cell).cogroup(...)``):
+    cells (``similarity._cells_udf``, the rule the index was assigned by;
+    a query vector the cosine kernel scores NULL probes nothing and
+    returns no rows), and scoring happens inside a COGROUP KEYED ON THE
+    CELL (``groupBy(cell).cogroup(...)``):
     each query vector crosses the exchange once per (query, probed cell)
     — never once per candidate, which at dim=768 would be ~6 KB of
     payload per scored row dwarfing the m-byte PQ codes it meets. Inside
@@ -544,22 +539,11 @@ def ivfpq_topk_batch(
 
     if cell_splits < 1:
         raise ValueError(f"cell_splits must be >= 1, got {cell_splits}")
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-
-    def probes(vecs: pd.Series) -> pd.Series:
-        mat = np.array(vecs.tolist(), dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(mat @ cn.T), axis=1)[:, :nprobe]
-        return pd.Series([row.astype(int).tolist() for row in order])
-
-    probes.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    probe_udf = F.pandas_udf(probes, "array<int>")
-
     exploded = queries.select(
         qid_col, qvec_col,
-        F.explode(probe_udf(F.col(qvec_col))).alias(cell_col),
+        F.explode(_cells_udf(centroids, nprobe)(F.col(qvec_col))).alias(
+            cell_col
+        ),
     )
     idx = index.select(id_col, codes_col, cell_col)
     keys = [cell_col]

@@ -136,6 +136,65 @@ def test_ivf_assignment_partitions_corpus(emb):
     assert assigned.exceptAll(again.select("vec_id", "ivf_cell")).count() == 0
 
 
+def test_approximate_tiers_leave_out_unusable_vectors(spark, emb, tmp_path):
+    """A vector the cosine kernel scores NULL — a NULL vector, a NULL
+    element, a wrong length — has NULL IVF cells and NULL hyperplane
+    signatures, so every approximate tier runs and leaves it out."""
+    from mare_spark.operators.pq import (
+        ivfpq_topk_batch,
+        pq_assign,
+        train_pq_codebooks,
+    )
+    from mare_spark.operators.similarity import (
+        embedding_lsh_pairs,
+        hard_negatives_ivf,
+        ivf_topk_indexed,
+        semantic_dedup_pairs,
+        write_ivf_index,
+    )
+
+    rows = [tuple(r) for r in emb.orderBy("vec_id").head(40)]
+    good = {r[0] for r in rows}
+    q = [float(x) for x in rows[0][1]]
+    bad_rows = [(1001, None, 0), (1002, [None] + q[1:], 1), (1003, q[:10], 0)]
+    bad = {r[0] for r in bad_rows}
+    df = spark.createDataFrame(rows + bad_rows, emb.schema)
+    cents = train_ivf_centroids(df, nlist=4)  # the sample skips bad rows
+
+    cells = {r.vec_id: r.ivf_cell for r in ivf_assign(df, cents).collect()}
+    assert {i for i, c in cells.items() if c is None} == bad
+
+    def ids(out, *cols):
+        return {r[c] for r in out.collect() for c in cols}
+
+    full = ivf_topk(df, q, k=50, nprobe=4, centroids=cents)
+    assert ids(full, "vec_id") == good
+    probed = ivf_topk(df, q, k=50, nprobe=2, centroids=cents).collect()
+    write_ivf_index(df, str(tmp_path / "ivf"), cents)
+    indexed = ivf_topk_indexed(
+        spark, str(tmp_path / "ivf"), cents, q, k=50, nprobe=2
+    ).collect()
+    assert indexed == probed and {r.vec_id for r in probed} <= good
+    assert ids(ann_lsh_topk(df, q, k=50, num_planes=4, hamming_radius=4),
+               "vec_id") == good
+
+    sem = semantic_dedup_pairs(df, threshold=-1.0, centroids=cents)
+    assert ids(sem, "id_a", "id_b") <= good and sem.count()
+    negs = hard_negatives_ivf(df, k=2, nprobe=2, centroids=cents)
+    assert ids(negs, "anchor_id", "neg_id") <= good and negs.count()
+    lsh = embedding_lsh_pairs(df, threshold=-1.0, dim=len(q))
+    assert ids(lsh, "id_a", "id_b") <= good and lsh.count()
+
+    clean = df.filter(F.col("vec_id").isin(sorted(good)))
+    books = train_pq_codebooks(clean, "embedding", "vec_id", m=8, nbits=3)
+    index = pq_assign(ivf_assign(clean, cents), "embedding", books)
+    queries = spark.createDataFrame(
+        [(0, q), (1, None)], "qid int, qvec array<double>"
+    )
+    out = ivfpq_topk_batch(queries, index, cents, books, 3, nprobe=2)
+    assert {r.qid for r in out.collect()} == {0}
+
+
 def test_release_caches_unpersists_intermediates(spark, docs):
     """Built outside any cache scope, an operator's persists land in the
     root scope and stay cached until release_caches empties it."""
@@ -776,46 +835,6 @@ def test_edit_distance_pairs_random_differential(spark):
     assert got == want
 
 
-def test_ivf_kmeanspp_seeding_recall_and_determinism(emb):
-    """The k-means++ (D²) seeding option: deterministic across runs (same
-    seed → byte-identical centroids), a genuinely different seed set from
-    uniform, and query recall at fixed nprobe no worse than uniform's
-    (measured EQUAL, 0.59 both, on this near-uniform fixture — the
-    train_ivf_centroids docstring records why uniform stays the default:
-    pair-blocking recall is lower under k-means++ here)."""
-    import numpy as np
-
-    c_pp = train_ivf_centroids(emb, nlist=16, init="kmeans++")
-    c_uni = train_ivf_centroids(emb, nlist=16, init="uniform")
-    assert np.array_equal(c_pp, train_ivf_centroids(emb, nlist=16, init="kmeans++"))
-    assert not np.array_equal(c_pp, c_uni)
-
-    queries = [
-        [float(x) for x in r["embedding"]]
-        for r in emb.orderBy("vec_id").head(10)
-    ]
-
-    def recall(cents):
-        hits = 0
-        for q in queries:
-            exact = {r.vec_id for r in brute_force_topk(emb, q, k=10).collect()}
-            got = {
-                r.vec_id
-                for r in ivf_topk(
-                    emb, q, k=10, nprobe=4, centroids=cents
-                ).collect()
-            }
-            hits += len(exact & got)
-        return hits / (10 * len(queries))
-
-    r_pp, r_uni = recall(c_pp), recall(c_uni)
-    assert r_pp >= r_uni, (r_pp, r_uni)
-    assert r_pp >= 0.5, r_pp
-
-    with pytest.raises(ValueError, match="init"):
-        train_ivf_centroids(emb, nlist=4, init="random")
-
-
 def test_jaccard_uncapped_path_agrees_with_capped(spark):
     """The max_shingle_freq=None branch (df annotation via the
     partial-combined aggregate join-back instead of hot-head anti-join +
@@ -1249,7 +1268,8 @@ def test_dedup_clusters_byte_gate_and_logging(spark, caplog, monkeypatch):
 
 def test_similarity_review_guards(spark):
     """Review-driven guards: assignment and every probe share one
-    normalized-cosine rule, so UNNORMALIZED centroids (kmeans_refine
+    cosine rule (the driver's probe equals the executors' cells for
+    every vector), so UNNORMALIZED centroids (kmeans_refine
     means) can't bias cells toward large norms; >63 planes per band
     raises in the Arrow tier like the expression tier; nlist > corpus
     raises with a named fix; probes don't mutate the caller's query
@@ -1258,6 +1278,7 @@ def test_similarity_review_guards(spark):
     import pytest
 
     from mare_spark.operators.similarity import (
+        _cells_udf,
         hyperplane_signatures,
         ivf_assign,
         probe_cells_for,
@@ -1279,6 +1300,13 @@ def test_similarity_review_guards(spark):
     assert a == b
     assert probe_cells_for(cents, list(cents[2]), 1) == [2]
     assert probe_cells_for(scaled, list(cents[2]), 1) == [2]
+    # the driver's query probe and the executors' assignment are one rule
+    probes = emb.select(
+        "embedding", _cells_udf(cents, 3)(emb.embedding).alias("cells")
+    ).collect()
+    assert all(
+        probe_cells_for(cents, r.embedding, 3) == r.cells for r in probes
+    )
 
     with pytest.raises(ValueError, match="63"):
         emb.select(

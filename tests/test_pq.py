@@ -149,6 +149,7 @@ def test_ivf_pq_composition_probe(spark, emb):
     )
     from mare_spark.operators.similarity import (
         ivf_assign,
+        probe_cells_for,
         train_ivf_centroids,
     )
 
@@ -169,14 +170,9 @@ def test_ivf_pq_composition_probe(spark, emb):
                 key=lambda t: (t[1], t[0]),
             )[:10]
         }
-        # query-side probe: nprobe nearest cells by the same cosine rule
-        # ivf_assign uses (normalized centroids)
-        qn = q / max(np.linalg.norm(q), 1e-12)
-        cn = cents / np.maximum(
-            np.linalg.norm(cents, axis=1, keepdims=True), 1e-12
-        )
-        nprobe = 4
-        probe_cells = [int(c) for c in np.argsort(-(cn @ qn))[:nprobe]]
+        # query-side probe: nprobe nearest cells by the rule ivf_assign
+        # assigns by
+        probe_cells = probe_cells_for(cents, q, 4)
         probed = table.filter(F.col("ivf_cell").isin(probe_cells))
         n_probed = probed.count()
         assert n_probed < table.count()  # the probe prunes
