@@ -32,11 +32,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mare_spark.operators.similarity import (
+    _batch_rows,
     _cells_udf,
     ivf_assign,
     probe_cells_for,
@@ -132,32 +134,28 @@ def train_pq_codebooks(
 
 
 def _codes_udf(books: np.ndarray):
+    """Arrow UDF: each vector's ``m`` codebook indices as ``array<int>``,
+    one (rows, k) distance matrix per subspace over the whole batch. NULL
+    for a vector the cosine kernel scores NULL: a NULL vector, a NULL
+    element, or a length other than the codebooks' ``m * dsub``."""
     m, _k, dsub = books.shape
 
-    def codes(vecs: pd.Series) -> pd.Series:
-        mask = vecs.notna().to_numpy()
-        out = np.empty(len(vecs), dtype=object)
-        out[~mask] = None
-        live = vecs[mask]
-        if len(live):
-            # one (rows, k) distance matrix per subspace — vectorized
-            # across the whole Arrow batch, no per-row Python
-            X = np.array(live.tolist(), dtype=np.float64)
-            cols = [
+    def nearest(X: np.ndarray) -> np.ndarray:
+        return np.stack(
+            [
                 (
                     ((X[:, j * dsub : (j + 1) * dsub, None]
                       - books[j].T[None, :, :]) ** 2).sum(axis=1)
                 ).argmin(axis=1)
                 for j in range(m)
-            ]
-            C = np.stack(cols, axis=1).astype(np.int32)
-            vals = np.empty(len(live), dtype=object)
-            vals[:] = [row.tolist() for row in C]
-            out[mask] = vals
-        return pd.Series(out)
+            ],
+            axis=1,
+        ).astype(np.int32)
 
-    codes.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(codes, "array<int>")
+    def codes(vecs: pa.Array) -> pa.Array:
+        return _batch_rows(vecs, m * dsub, nearest)
+
+    return F.arrow_udf(codes, "array<int>")
 
 
 def pq_assign(
@@ -168,9 +166,10 @@ def pq_assign(
     out_col: str = "pq_codes",
 ) -> DataFrame:
     """Append ``out_col``: the vector's ``m`` codebook indices — the
-    compressed representation (m · nbits bits vs dim · 32). Scan-side
-    Arrow pass (one batched distance matrix per subspace), codebooks
-    ride the closure, zero shuffle."""
+    compressed representation (m · nbits bits vs dim · 32), NULL for a
+    vector the cosine kernel scores NULL. Scan-side Arrow pass (one
+    batched distance matrix per subspace), codebooks ride the closure,
+    zero shuffle."""
     return df.withColumn(out_col, _codes_udf(codebooks)(F.col(vec_col)))
 
 
@@ -295,7 +294,6 @@ def fit_scalar_quantizer(
     )
 
     def partials(batches):
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         for batch in batches:

@@ -119,6 +119,28 @@ def test_pq_validates_inputs(spark, emb):
         pq_topk(coded, books, [0.0] * 3, 5)
 
 
+def test_pq_assign_nulls_vectors_the_cosine_kernel_scores_null(spark, emb):
+    """A NULL vector, a vector holding a NULL element and a vector of
+    another length get NULL codes, as the cosine kernel scores all three
+    NULL; every other row keeps its m codes. A re-rank whose shortlist
+    spans the whole frame scores exactly the coded rows."""
+    from mare_spark.operators.pq import (
+        pq_assign, pq_topk_rerank, train_pq_codebooks,
+    )
+
+    books = train_pq_codebooks(emb, "embedding", "vec_id", m=8, nbits=4)
+    rows = [tuple(r) for r in emb.orderBy("vec_id").head(40)]
+    q = [float(x) for x in rows[0][1]]
+    bad_rows = [(1001, None, 0), (1002, [None] + q[1:], 1), (1003, q[:10], 0)]
+    df = spark.createDataFrame(rows + bad_rows, emb.schema)
+    coded = pq_assign(df, "embedding", books)
+    got = {r.vec_id: r.pq_codes for r in coded.collect()}
+    assert {i for i, c in got.items() if c is None} == {1001, 1002, 1003}
+    assert all(len(got[r[0]]) == 8 for r in rows)
+    top = pq_topk_rerank(coded, books, q, len(rows), shortlist=len(got))
+    assert {r.vec_id for r in top.collect()} == {r[0] for r in rows}
+
+
 def test_pq_topk_plan_is_take_ordered(spark, emb):
     from mare_spark import plans as P
     from mare_spark.operators.pq import (

@@ -12,7 +12,12 @@ too small for the working set), so the warm compile count should be 0.
 It also prints the process tree's CPU seconds over the invocation by role
 (``perfbench/probes.tree_cpu``): the driver, the JVM, the Python workers
 and their children (piped commands), so a fixed cost per Python task
-shows next to the task count.
+shows next to the task count. And it prints how warm the JVM still was:
+the milliseconds its JIT compilers spent and the classes it loaded during
+the invocation (the JVM's compilation and class-loading MXBeans), and once
+per run the session's start seconds and whether it mapped the class-data
+archive (``mare_spark.session``). A session keeps compiling methods for
+many rounds, so an A/B of two sessions should say how warm each side was.
 
 The queries run in one session as whole rounds, like a warm service: one
 cold round and one warm round, uncounted, then the counted round. Usage:
@@ -34,6 +39,15 @@ sys.path.insert(0, ROOT)
 sys.path.append(os.path.join(ROOT, "perfbench"))
 
 
+def jvm_warmth(spark) -> tuple[int, int]:
+    """(JIT compile ms, classes loaded) of the session's JVM so far."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    return (
+        int(mf.getCompilationMXBean().getTotalCompilationTime()),
+        int(mf.getClassLoadingMXBean().getTotalLoadedClassCount()),
+    )
+
+
 def census(spark, tag, fn):
     from mare_spark.session import codegen_compiles
     from probes import tree_cpu
@@ -42,12 +56,14 @@ def census(spark, tag, fn):
     tracker = sc.statusTracker()
     sc.setJobGroup(tag, tag)
     c0 = codegen_compiles(spark)
+    jit0, cls0 = jvm_warmth(spark)
     cpu0 = tree_cpu()
     t0 = time.perf_counter()
     out = fn()
     dt = time.perf_counter() - t0
     cpu = {r: s - cpu0[r] for r, s in tree_cpu().items()}
     n_compiles = codegen_compiles(spark) - c0
+    jit1, cls1 = jvm_warmth(spark)
     sc.setJobGroup(None, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     job_ids = tracker.getJobIdsForGroup(tag) or []
@@ -64,7 +80,7 @@ def census(spark, tag, fn):
                 n_tasks += si.numTasks
     return {"jobs": len(job_ids), "stages": n_stages, "tasks": n_tasks,
             "compiles": n_compiles, "sec": round(dt, 3), "cpu": cpu,
-            "out": out}
+            "jit_ms": jit1 - jit0, "classes": cls1 - cls0, "out": out}
 
 
 def main() -> None:
@@ -73,9 +89,15 @@ def main() -> None:
 
     from mare_spark.cache import cache_scope
     from mare_spark.registry import all_queries
-    from mare_spark.session import get_spark
+    from mare_spark.session import archive_mapped, get_spark
 
+    t0 = time.perf_counter()
     spark = get_spark("profile_jobs")
+    print(
+        f"session start_s={time.perf_counter() - t0:.2f} "
+        f"archive_mapped={archive_mapped(spark)}",
+        flush=True,
+    )
     queries = {n: q for n, q in sorted(all_queries().items())
                if (q.bench if arg is None
                    else arg == "all" or n in arg.split(","))}
@@ -102,7 +124,8 @@ def main() -> None:
             f"tasks={b['tasks']} sec={b['sec']} | count jobs={c['jobs']} "
             f"stages={c['stages']} tasks={c['tasks']} sec={c['sec']} "
             f"rows={c['out']} | compiles={b['compiles'] + c['compiles']} "
-            f"| cpu_s {cpu}",
+            f"| jit_ms={b['jit_ms'] + c['jit_ms']} "
+            f"classes={b['classes'] + c['classes']} | cpu_s {cpu}",
             flush=True,
         )
     spark.stop()
