@@ -26,6 +26,11 @@ SQL, so the covariance query is hash-checked, not rows-only. |x| ≤ ~10 ⇒
 |micros| ≤ 1e8; int64 overflows only past ~9e10 vectors per partition.
 Eigendecomposition is iterative/non-SQL, so the PCA tiers are pinned by
 numpy differentials instead (tests/test_pca.py).
+
+Bad rows follow the vector contract of
+:mod:`mare_spark.operators.similarity`, whose Arrow reader reads every
+batch: the fits raise a ``ValueError`` naming the cause, and
+``pca_project`` gives a NULL projection.
 """
 
 from __future__ import annotations
@@ -33,44 +38,26 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mare_spark.numeric import fround
+from mare_spark.operators.similarity import _batch_rows, _fit_rows
 
 
 def _moment_partials(dim: int, vec_col: str):
     """mapInArrow generator: per partition emit integer-micro moment rows —
     (i, j, s) for i<=j second moments, (i, -1, s) first moments,
     (-1, -1, count)."""
-    import pyarrow as pa
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         s2 = np.zeros((dim, dim), dtype=np.int64)
         s1 = np.zeros(dim, dtype=np.int64)
         n = 0
-        import pyarrow.compute as pc
-
         for batch in batches:
-            col = batch.column(0)
-            if len(col) == 0:
-                continue
-            # zero-copy-ish path: validate then reshape the flattened
-            # values buffer (to_pylist() is a per-element Python loop —
-            # the difference is integral at 100 TB)
-            if col.null_count:
-                raise ValueError(f"{vec_col}: NULL vectors not allowed")
-            lens = pc.list_value_length(col).to_numpy()
-            if not (lens == dim).all():
-                bad = int(lens[lens != dim][0])
-                raise ValueError(
-                    f"{vec_col}: expected fixed-length {dim} vectors, got "
-                    f"length {bad}"
-                )
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            x = np.ascontiguousarray(flat, dtype=np.float64).reshape(-1, dim)
+            x = _fit_rows(batch.column(0), dim, vec_col)
             n += x.shape[0]
             s1 += np.floor(x * 1e6 + 0.5).astype(np.int64).sum(axis=0)
             # chunk the outer products so the (rows × dim × dim) tensor
@@ -94,10 +81,7 @@ def _moment_partials(dim: int, vec_col: str):
 def _merged_moments(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     """One distributed pass → merged integer-micro moment rows
     (second moments i<=j, first moments (i,-1), count (-1,-1))."""
-    vecs = df.select(
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v")
-    )
-    partials = vecs.mapInArrow(
+    partials = df.select(vec_col).mapInArrow(
         _moment_partials(dim, vec_col), "i int, j int, s long"
     )
     return partials.groupBy("i", "j").agg(F.sum("s").alias("s"))
@@ -109,9 +93,9 @@ def embedding_covariance(
     """Population covariance of a fixed-length embedding column:
     ``(dim_i, dim_j, cov)`` over the upper triangle (i ≤ j), from ONE
     distributed pass (see module docstring for the partial shape and the
-    integer-micro determinism contract). Vectors must be non-null and
-    exactly ``dim`` long — a malformed batch raises rather than skewing
-    the estimate silently.
+    integer-micro determinism contract). A full-pass fit: an unusable row
+    raises the vector contract's ``ValueError`` rather than skewing the
+    estimate silently.
 
     ``cov_ij = round6( S_ij/n − (S_i/n)·(S_j/n) )`` with every ``S`` an
     exact integer-micro sum — the same double on both engines, so the
@@ -222,32 +206,17 @@ def pca_project(
     """Project (and optionally whiten) every vector onto the model's
     components: ``proj = C · (x − mean)``, whitened = per-component
     division by ``sqrt(eigval + eps)``. Arrow-batched matmul, zero
-    shuffle; the (k × dim) matrix rides the closure."""
+    shuffle; the (k × dim) matrix rides the closure. NULL for an unusable
+    vector (the vector contract's row-wise rule)."""
     comps = (
         model.whitened_components(eps) if whiten else model.components
     )
     means = model.means
-    dim = int(means.shape[0])
-    vname = vec_col
 
-    @F.pandas_udf("array<double>")
-    def proj(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        # Same input contract (and message) as the fit-side moment pass:
-        # a NULL or ragged vector raises a clear error instead of an
-        # opaque numpy shape failure mid-job.
-        if vecs.isna().any():
-            raise ValueError(f"{vname}: NULL vectors not allowed")
-        lens = vecs.map(len).to_numpy()
-        if not (lens == dim).all():
-            bad = int(lens[lens != dim][0])
-            raise ValueError(
-                f"{vname}: expected fixed-length {dim} vectors, got "
-                f"length {bad}"
-            )
-        x = np.asarray(vecs.tolist(), dtype=np.float64)
-        p = (x - means) @ comps.T
-        return pd.Series(list(p))
+    def proj(vecs: pa.Array) -> pa.Array:
+        return _batch_rows(vecs, len(means), lambda X: (X - means) @ comps.T)
 
-    return df.select(F.col(id_col), proj(F.col(vec_col)).alias(out_col))
+    return df.select(
+        F.col(id_col),
+        F.arrow_udf(proj, "array<double>")(F.col(vec_col)).alias(out_col),
+    )

@@ -20,6 +20,14 @@ Scale shape (mirrors the pca/similarity modules):
   test — the approximation error is entirely quantization, never the
   probe arithmetic.
 
+* ``fit_scalar_quantizer`` / ``sq_encode`` / ``sq_topk``: the int8 tier —
+  one distributed min/max pass, then scan-side Arrow encode and score.
+
+Bad rows follow the vector contract of
+:mod:`mare_spark.operators.similarity`, whose Arrow reader reads every
+vector and SQ code batch: the row-wise passes give NULL (so every top-k
+leaves the row out), the codebook sample skips it, the SQ fit raises.
+
 Determinism: sampling is md5-ordered, seeding takes the first distinct
 subvectors, and Lloyd runs a fixed iteration count with ties broken by
 centroid index — the codebooks are a pure function of (data, params),
@@ -39,7 +47,11 @@ from pyspark.sql import functions as F
 
 from mare_spark.operators.similarity import (
     _batch_rows,
+    _batch_values,
     _cells_udf,
+    _fit_rows,
+    _modal_rows,
+    _usable_vector,
     ivf_assign,
     probe_cells_for,
 )
@@ -48,21 +60,15 @@ from mare_spark.operators.similarity import (
 def _sample_vectors(
     df: DataFrame, vec_col: str, id_col: str, sample: int
 ) -> np.ndarray:
+    """The first ``sample`` usable vectors in md5(id) order, of the
+    sample's most common length."""
     rows = (
-        df.select(vec_col)
+        df.where(_usable_vector(vec_col))
+        .select(vec_col)
         .orderBy(F.md5(F.col(id_col).cast("string")))
         .head(sample)
     )
-    vecs = [r[0] for r in rows]
-    if any(v is None for v in vecs):
-        raise ValueError(f"NULL {vec_col!r} in the training sample")
-    lens = {len(v) for v in vecs}
-    if len(lens) > 1:
-        raise ValueError(
-            f"ragged {vec_col!r} lengths in the training sample: "
-            f"{sorted(lens)}"
-        )
-    return np.array([list(v) for v in vecs], dtype=np.float64)
+    return _modal_rows([r[0] for r in rows])
 
 
 def _adc_table(codebooks: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -102,7 +108,8 @@ def train_pq_codebooks(
     iters: int = 10,
 ) -> np.ndarray:
     """Learn per-subspace codebooks: split the vector into ``m`` equal
-    blocks, k-means (k = 2^nbits) each block over an md5-ordered sample.
+    blocks, k-means (k = 2^nbits) each block over an md5-ordered sample
+    of usable rows (the vector contract's sample rule).
     Returns ``(m, 2**nbits, dim//m)`` float64. Deterministic: seeds are
     the sample's first k distinct subvectors, fixed ``iters`` Lloyd
     rounds, argmin ties to the lower index; empty clusters keep their
@@ -205,18 +212,15 @@ def pq_topk(
         )
     table = _adc_table(codebooks, q)  # (m, 2^nbits)
 
-    def adc(codes: pd.Series) -> pd.Series:
-        mask = codes.notna().to_numpy()
-        out = np.full(len(codes), np.nan)
-        live = codes[mask]
-        if len(live):
-            out[mask] = _adc_batch(table, live.tolist())
-        res = pd.Series(out, dtype="float64")
-        res[~mask] = None
-        return res
+    def adc(codes: pa.Array) -> pa.Array:
+        ok = codes.is_valid().to_numpy(zero_copy_only=False)
+        out = np.zeros(len(codes))
+        if ok.any():
+            live = codes.filter(pa.array(ok)).to_pylist()
+            out[ok] = _adc_batch(table, live)
+        return pa.array(out, mask=~ok)
 
-    adc.__annotations__ = {"codes": pd.Series, "return": pd.Series}
-    dist = F.pandas_udf(adc, "double")(F.col(codes_col))
+    dist = F.arrow_udf(adc, "double")(F.col(codes_col))
     return (
         df.select(F.col(id_col), dist.alias("adc_dist"))
         .filter(F.col("adc_dist").isNotNull())
@@ -246,7 +250,8 @@ def pq_topk_rerank(
 
     Returns ``(id, dist)`` ascending. The shortlist (k-ish rows) joins
     the vector table as a small side — broadcast by AQE — so the raw
-    table is semi-joined down before any distance math."""
+    table is semi-joined down before any distance math. A shortlisted
+    row whose vector is unusable scores NULL and is left out."""
     if shortlist is None:
         shortlist = 5 * k
     if shortlist < k:
@@ -257,16 +262,16 @@ def pq_topk_rerank(
     ).select(id_col)
     q = np.asarray(list(query_vec), dtype=np.float64)
 
-    def exact(vecs: pd.Series) -> pd.Series:
-        X = np.array(vecs.tolist(), dtype=np.float64)  # shortlist-sized
-        return pd.Series(((q[None, :] - X) ** 2).sum(axis=1),
-                         dtype="float64")
+    def exact(vecs: pa.Array) -> pa.Array:
+        return _batch_values(
+            vecs, len(q), lambda X: ((q[None, :] - X) ** 2).sum(axis=1)
+        )
 
-    exact.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    dist = F.pandas_udf(exact, "double")(F.col(vec_col))
+    dist = F.arrow_udf(exact, "double")(F.col(vec_col))
     return (
         df.join(cand, id_col, "left_semi")
         .select(F.col(id_col), dist.alias("dist"))
+        .filter(F.col("dist").isNotNull())
         .orderBy("dist", id_col)
         .limit(k)
     )
@@ -280,37 +285,14 @@ def fit_scalar_quantizer(
     reduces to a (dim, mn, mx) summary inside an Arrow batch iterator
     (the covariance module's partial shape), the merge is a dim-keyed
     min/max aggregate, and the driver collects 2·dim floats. Exact and
-    layout-independent (min/max are order-free)."""
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, StructField, StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("d", IntegerType()),
-            StructField("mn", DoubleType()),
-            StructField("mx", DoubleType()),
-        ]
-    )
+    layout-independent (min/max are order-free). A full-pass fit: an
+    unusable row raises the vector contract's ``ValueError``."""
 
     def partials(batches):
-        import pyarrow.compute as pc
-
         for batch in batches:
-            col = batch.column(0)
-            if len(col) == 0:
+            if batch.num_rows == 0:
                 continue
-            if col.null_count:
-                raise ValueError(f"NULL vectors in the {dim}-dim fit")
-            lens = pc.unique(pc.list_value_length(col)).to_pylist()
-            if lens != [dim]:
-                raise ValueError(
-                    f"expected fixed {dim}-dim vectors, got lengths {lens}"
-                )
-            # Arrow-native: the list column's flat values reshape
-            # directly — no Python-object round trip on the corpus pass
-            flat = np.asarray(col.flatten(), dtype=np.float64)
-            arr = flat.reshape(-1, dim)
+            arr = _fit_rows(batch.column(0), dim, vec_col)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.arange(dim, dtype=np.int32)),
@@ -322,7 +304,7 @@ def fit_scalar_quantizer(
 
     rows = (
         df.select(vec_col)
-        .mapInArrow(partials, schema)
+        .mapInArrow(partials, "d int, mn double, mx double")
         .groupBy("d")
         .agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"))
         .collect()
@@ -348,27 +330,21 @@ def sq_encode(
     ``round((x−mn)/(mx−mn)·255) − 128`` (constant dims encode 0) — a 4×
     compression with ≤ half-step (≈(mx−mn)/510) absolute error per
     coordinate, pinned by test. Scan-side Arrow pass, model rides the
-    closure, zero shuffle."""
+    closure, zero shuffle. NULL for an unusable vector (the vector
+    contract)."""
     span = np.where(maxs > mins, maxs - mins, 1.0)
     lo = mins.copy()
 
-    def enc(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            if v is None:
-                out.append(None)
-                continue
-            x = np.asarray(v, dtype=np.float64)
-            q = np.floor((x - lo) / span * 255.0 + 0.5)
-            out.append(
-                (np.clip(q, 0, 255).astype(np.int32) - 128).tolist()
-            )
-        return pd.Series(out)
+    def enc(X: np.ndarray) -> np.ndarray:
+        q = np.floor((X - lo) / span * 255.0 + 0.5)
+        return np.clip(q, 0, 255).astype(np.int32) - 128
 
-    enc.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return df.withColumn(out_col, F.pandas_udf(enc, "array<int>")(
-        F.col(vec_col)
-    ))
+    def codes(vecs: pa.Array) -> pa.Array:
+        return _batch_rows(vecs, len(lo), enc)
+
+    return df.withColumn(
+        out_col, F.arrow_udf(codes, "array<int>")(F.col(vec_col))
+    )
 
 
 def sq_reconstruct(codes, mins: np.ndarray, maxs: np.ndarray) -> np.ndarray:
@@ -392,7 +368,8 @@ def sq_topk(
     reconstructs on the quantization grid and scores against the query
     in one vectorized Arrow pass; TakeOrdered top-k. The coarse 4×
     tier — near-exact recall (half-step error), vs PQ's 20×+ with a
-    rerank dial."""
+    rerank dial. Codes read like vectors: a NULL, NULL-holding or
+    wrong-length code list scores NULL and is left out."""
     q = np.asarray(list(query_vec), dtype=np.float64)
     if q.shape[0] != mins.shape[0]:
         raise ValueError(
@@ -401,18 +378,12 @@ def sq_topk(
     span = np.where(maxs > mins, maxs - mins, 1.0)
     lo = mins.copy()
 
-    def dist(codes: pd.Series) -> pd.Series:
-        out = []
-        for cs in codes:
-            if cs is None:
-                out.append(None)
-                continue
-            x = lo + (np.asarray(cs, dtype=np.float64) + 128.0) / 255.0 * span
-            out.append(float(((q - x) ** 2).sum()))
-        return pd.Series(out, dtype="float64")
+    def dist(codes: pa.Array) -> pa.Array:
+        return _batch_values(codes, len(q), lambda C: (
+            (q - (lo + (C + 128.0) / 255.0 * span)) ** 2
+        ).sum(axis=1))
 
-    dist.__annotations__ = {"codes": pd.Series, "return": pd.Series}
-    d = F.pandas_udf(dist, "double")(F.col(codes_col))
+    d = F.arrow_udf(dist, "double")(F.col(codes_col))
     return (
         df.select(F.col(id_col), d.alias("dist"))
         .filter(F.col("dist").isNotNull())

@@ -375,10 +375,11 @@ def merge_parquet(
 
     At 100 TB, use :func:`merge_parquet_partitioned` on a hive-partitioned
     base — it rewrites only the partitions the batch touches (same
-    anti-join shape per partition, untouched files byte-identical). For
-    frequent fine-grained merges, graduate to a table format with real
-    commit logs (sources.external gates Delta) — copy-on-write
-    rewrites everything it touches by design.
+    anti-join shape per partition, untouched files byte-identical).
+    Copy-on-write merge is the engine's supported merge path; it
+    rewrites everything it touches by design, so frequent fine-grained
+    merges need a table format with commit logs, which the engine does
+    not ship.
 
     Swap visibility caveat: the tmp→live promotion is two renames, so a
     concurrent reader can observe ``path`` briefly missing between them —

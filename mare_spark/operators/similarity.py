@@ -24,10 +24,23 @@ assignment and probe — Lloyd training, corpus assignment, multi-probe
 blocking, the driver-side query probe — goes through one rule
 (:func:`_nearest_cells`).
 
-NULL contract: a vector the cosine kernel scores NULL (a NULL vector, a
-NULL element, or a length other than the query's, centroids' or planes')
-is never a candidate in an approximate tier: its IVF cells and hyperplane
-signatures are NULL, so every probe, block and bucket drops it.
+Vector contract, for every embedding operator here and in ``pq.py`` and
+``pca.py``: a row is *unusable* when the cosine kernel scores it NULL — a
+NULL vector, a NULL element, or a length other than the operator's (the
+query's, centroids', planes', codebooks' or model's dim). Every batch is
+read through :func:`_usable_rows`, and:
+
+1. Row-wise operators give NULL for an unusable row (:func:`_batch_rows`,
+   :func:`_batch_values`): cosines, IVF cells, hyperplane signatures, PQ
+   and SQ codes and distances, PCA projections. So every probe, block,
+   bucket and top-k leaves the row out.
+2. Sample trainers (IVF centroids, PQ codebooks) skip it: they draw only
+   rows :func:`_usable_vector` passes and keep the sample's most common
+   length (:func:`_modal_rows`).
+3. Full-pass fits (covariance, PCA, the scalar quantizer) raise a
+   ``ValueError`` naming the cause (:func:`_fit_rows`): a fit is defined
+   over every row, and dropping one would change the ``n`` that the
+   covariance oracle replays in SQL.
 """
 
 from __future__ import annotations
@@ -105,22 +118,70 @@ def _cosine_kernel(va, vb=None, q: np.ndarray | None = None) -> pa.Array:
     return pa.array(out, mask=~ok)
 
 
-def _batch_rows(vecs, d: int, fn) -> pa.Array:
-    """``fn`` over the rows of list array ``vecs`` that the cosine kernel
-    scores against a ``d``-element vector, as a list array: ``fn`` maps
-    their (rows × d) float64 matrix (C-ordered, one vector per row) to a
-    (rows × w) matrix, whose rows become the lists. Every other row —
-    NULL, holding a NULL element, or not ``d`` long — is NULL."""
+def _scored_rows(vecs, d: int) -> tuple[np.ndarray, np.ndarray]:
+    """(usable, X): which rows of list array ``vecs`` the cosine kernel
+    scores against a ``d``-element vector, and those rows as a C-ordered
+    (rows × d) float64 matrix, one vector per row."""
     lens, ok = _usable_rows(vecs)
     ok &= lens == d
     rows = np.flatnonzero(ok)
-    part = fn(np.ascontiguousarray(_list_columns(vecs, rows, d).T))
+    return ok, np.ascontiguousarray(_list_columns(vecs, rows, d).T)
+
+
+def _batch_rows(vecs, d: int, fn) -> pa.Array:
+    """``fn`` over the usable rows of list array ``vecs``
+    (:func:`_scored_rows`), as a list array: ``fn`` maps their (rows × d)
+    matrix to a (rows × w) matrix, whose rows become the lists. Every
+    other row is NULL."""
+    ok, X = _scored_rows(vecs, d)
+    part = fn(X)
     out = np.zeros((len(vecs), part.shape[1]), dtype=part.dtype)
-    out[rows] = part
+    out[ok] = part
     offsets = np.arange(len(vecs) + 1, dtype=np.int32) * part.shape[1]
     return pa.ListArray.from_arrays(
         pa.array(offsets), pa.array(out.ravel()), mask=pa.array(~ok)
     )
+
+
+def _batch_values(vecs, d: int, fn) -> pa.Array:
+    """:func:`_batch_rows` for a scorer: ``fn`` maps the same (rows × d)
+    matrix to one float64 per row. Every other row is NULL."""
+    ok, X = _scored_rows(vecs, d)
+    out = np.zeros(len(vecs))
+    out[ok] = fn(X)
+    return pa.array(out, mask=~ok)
+
+
+def _fit_rows(vecs, d: int, name: str) -> np.ndarray:
+    """Every row of list array ``vecs`` as a (rows × d) float64 matrix,
+    for a full-pass fit: the first unusable row raises a ``ValueError``
+    naming its cause (a NULL vector, a NULL element, or its length)."""
+    ok, X = _scored_rows(vecs, d)
+    if not ok.all():
+        v = vecs[int(np.argmin(ok))].as_py()
+        cause = "a NULL vector" if v is None else (
+            "a NULL element" if None in v else f"length {len(v)}"
+        )
+        raise ValueError(f"{name}: expected fixed-length {d} vectors, "
+                         f"got {cause}")
+    return X
+
+
+def _usable_vector(vec_col: str):
+    """Spark-side filter for a sample trainer: the vector is non-NULL and
+    holds no NULL element."""
+    return F.col(vec_col).isNotNull() & ~F.exists(
+        vec_col, lambda x: x.isNull()
+    )
+
+
+def _modal_rows(rows: list) -> np.ndarray:
+    """The sampled vectors of the sample's most common length, as a
+    (rows × d) float64 matrix — shape (0,) for an empty sample."""
+    if rows:
+        d = Counter(map(len, rows)).most_common(1)[0][0]
+        rows = [r for r in rows if len(r) == d]
+    return np.array(rows, dtype=np.float64)
 
 
 def cosine_to_query(vec_col, query_vec: list[float]):
@@ -306,18 +367,15 @@ def train_ivf_centroids(
     uniformly from the sample, then Lloyd iterations run in numpy on the
     driver, assigning by :func:`_nearest_cells`; the result is a tiny
     (nlist × dim) array that is broadcast into the assignment UDF.
-    Deterministic under ``seed``. The sample skips NULL vectors, vectors
-    holding a NULL element, and vectors whose length is not the sample's
-    most common one.
+    Deterministic under ``seed``. The sample skips unusable rows (the
+    module's vector contract, part 2).
 
     One bounded action: the sample is a fixed conservative fraction +
     ``limit``, never a ``count()`` of the corpus to size the fraction. If
     the fraction under-fills on a small input, a bounded ``limit`` scan
     stands in — the input is tiny exactly when that scan is cheap.
     """
-    vecs = df.select(vec_col).where(
-        F.col(vec_col).isNotNull() & ~F.exists(vec_col, lambda x: x.isNull())
-    )
+    vecs = df.select(vec_col).where(_usable_vector(vec_col))
     # Arrow-path driver pull (toPandas) — the .rdd.collect() alternative
     # spins a pickling Python pipeline per job and is several times slower
     rows = (
@@ -326,16 +384,14 @@ def train_ivf_centroids(
     )
     if len(rows) < max(nlist, min(256, sample_size)):
         rows = vecs.limit(sample_size).toPandas()[vec_col].tolist()
-    if rows:
-        dim = Counter(map(len, rows)).most_common(1)[0][0]
-        rows = [r for r in rows if len(r) == dim]
-    if len(rows) < nlist:
+    sample = _modal_rows(rows)
+    if len(sample) < nlist:
         raise ValueError(
-            f"corpus has only {len(rows)} vectors but nlist={nlist} — "
+            f"corpus has only {len(sample)} vectors but nlist={nlist} — "
             "lower nlist (fewer cells than rows is meaningless; the "
             "seeder draws nlist distinct rows)"
         )
-    sample = _unit_rows(np.array(rows, dtype=np.float64))
+    sample = _unit_rows(sample)
 
     rng = np.random.default_rng(seed)
     centroids = sample[rng.choice(len(sample), size=nlist, replace=False)]

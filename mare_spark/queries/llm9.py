@@ -46,9 +46,12 @@ def _exact_l2_topk_batch(df, queries, k):
     exchange carries at most tasks·queries·k rows. Replaces the
     previous per-query loop (n_queries sequential actions) with one
     action. Returns {qid: [vec_id, ...]} under the (dist, vec_id)
-    tie-break every tier shares."""
+    tie-break every tier shares. An unusable vector (the similarity
+    module's vector contract) is left out."""
     import pyarrow as pa
     from pyspark.sql.window import Window
+
+    from mare_spark.operators.similarity import _scored_rows
 
     Q = np.array([qv for _, qv in queries], dtype=np.float64)
     qids = np.array([qid for qid, _ in queries], dtype=np.int64)
@@ -56,11 +59,10 @@ def _exact_l2_topk_batch(df, queries, k):
 
     def score(batches):
         for batch in batches:
-            ids = np.asarray(batch.column(0), dtype=np.int64)
+            ok, X = _scored_rows(batch.column(1), dim)
+            ids = np.asarray(batch.column(0), dtype=np.int64)[ok]
             if len(ids) == 0:
                 continue
-            X = np.asarray(batch.column(1).flatten(), dtype=np.float64)
-            X = X.reshape(-1, dim)
             # ||x-q||^2 expanded form: one GEMM instead of a (B, nq, dim)
             # broadcasted cube
             d2 = (
@@ -78,8 +80,7 @@ def _exact_l2_topk_batch(df, queries, k):
             )
 
     scored = (
-        df.filter(F.col("embedding").isNotNull())
-        .select("vec_id", "embedding")
+        df.select("vec_id", "embedding")
         .mapInArrow(score, "qid long, vec_id long, dist double")
     )
     w = Window.partitionBy("qid").orderBy("dist", "vec_id")

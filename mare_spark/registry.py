@@ -62,18 +62,21 @@ def register(
 # rows for the FIRST 50 entries of all_queries(), and this tuple decides
 # which queries those are (the rest follow in registration order).
 DRIVER_PRIORITY: tuple[str, ...] = (
-    # -- 1. round-8-touched operator paths / oracles --
+    # -- 1. operator paths no TPC-H row reaches: sketches, streaming
+    #    replays, quantization, media decode, UDTF, DSIR, pipe, epoch
+    #    shuffle --
     "events_quantile_sketch", "streaming_quantile_replay",
     "streaming_sessionize_replay", "sim_pq_recall_report",
     "multimodal_decode", "q_udtf_word_positions",
     "corpus_dsir_weights", "sample_dsir_gumbel",
     "pipe_gc_count", "pipe_map_upper", "pipe_token_total",
     "corpus_epoch_shuffle",
-    # -- 2. round-8 registrations --
+    # -- 2. end-to-end compositions of those operators --
     "multimodal_media_stats", "rag_retrieval_report",
     # -- 3. anchors --
     "q1_pricing_summary", "q5_local_supplier_volume", "pipeline_clean_corpus",
-    # -- 4. the 33 remaining round-4-stale rows (registration order) --
+    # -- 4. 33 relational, UDF, event, sampling and corpus shapes that
+    #    fill the window (registration order) --
     "q3_shipping_priority", "q_agg_stats",
     "q_rollup", "q_cube",
     "q_grouping_sets", "q_window_running",
@@ -91,8 +94,8 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "corpus_quality_funnel", "pipeline_clean_corpus_v3",
     "q_asof_join_forward", "streaming_heavy_hitters_replay",
     "q_join_interval_binned",
-    # -- 5. (no fill rows this round — window exactly full) --
-    # -- 6. the rest of the corpus follows in registration order --
+    # -- the window holds exactly 50; every other query follows in
+    #    registration order --
 )
 
 

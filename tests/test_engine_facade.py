@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from mare_spark import worker_daemon
 from mare_spark.codecs import TextFile
 from mare_spark.engine import Engine
-from mare_spark.sources.external import read_delta, read_jdbc
 from mare_spark.session import codegen_compiles
 from tests.conftest import SF_SMOKE
 
@@ -197,84 +196,6 @@ def test_engine_udfs_run_outside_the_repo(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert "token_total 27939" in out.stdout.splitlines(), out.stderr[-2000:]
-
-
-def test_jdbc_requires_bounds_with_partition_column(spark):
-    with pytest.raises(ValueError, match="requires lower_bound"):
-        read_jdbc(spark, "jdbc:h2:mem:x", "t", partition_column="id")
-
-
-def test_delta_stub_fails_actionably(spark):
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        read_delta(spark, "/tmp/nonexistent")
-
-
-def test_delta_merge_stub_fails_actionably(spark):
-    """merge_delta shares the readers' gate: without the Delta jar it must
-    fail with the install hint before touching the table or the updates."""
-    from mare_spark.sources.external import merge_delta
-
-    df = spark.createDataFrame([(1, "a")], "id long, val string")
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        merge_delta(spark, "/tmp/nonexistent", df, "id")
-
-
-def test_jdbc_bounds_without_partition_column_fail_loud(spark):
-    """r8 review: bounds passed WITHOUT partition_column were silently
-    dropped, producing the exact single-task full-table stream the
-    docstring warns about — now a loud ValueError."""
-    with pytest.raises(ValueError, match="require\\s+partition_column"):
-        read_jdbc(
-            spark, "jdbc:h2:mem:x", "t",
-            lower_bound=0, upper_bound=10**9, num_partitions=64,
-        )
-
-
-def test_require_format_unknown_fmt_is_programming_error(spark):
-    """r8 review: an unknown fmt used to KeyError inside the probe's
-    try block and get mislabeled as a missing runtime jar."""
-    from mare_spark.sources.external import _require_format
-
-    with pytest.raises(ValueError, match="unknown lakehouse format"):
-        _require_format(spark, "paimon")
-
-
-def test_merge_delta_partition_presence_contract(spark):
-    """r8 review: the partitioned twin's explicit 'must carry partition
-    column' errors apply to merge_delta too, BEFORE the format gate —
-    a bare delete_keys frame used to surface as a raw unresolved-column
-    AnalysisException (or, in this jar-less sandbox, be masked entirely
-    by the NotImplementedError gate)."""
-    from mare_spark.sources.external import merge_delta
-
-    ups = spark.createDataFrame([(1, "p0", "a")],
-                                "id long, pt string, val string")
-    dels = spark.createDataFrame([(2,)], "id long")
-    with pytest.raises(ValueError, match="delete_keys must carry partition"):
-        merge_delta(spark, "/tmp/nx", ups, "id",
-                    partition_col="pt", delete_keys=dels)
-    bare_ups = ups.drop("pt")
-    with pytest.raises(ValueError, match="updates must carry partition"):
-        merge_delta(spark, "/tmp/nx", bare_ups, "id", partition_col="pt")
-
-
-def test_package_hints_are_valid_ivy_coordinate_forms():
-    """r8 review: the spark.jars.packages hints must be in Ivy's
-    group:artifact:version form (a versionless coordinate is rejected by
-    the parser the error message points users at)."""
-    from mare_spark.sources.external import _FORMAT_PACKAGE_HINT
-
-    for fmt, hint in _FORMAT_PACKAGE_HINT.items():
-        assert hint.count(":") == 2, (fmt, hint)
-        assert hint.endswith(":<version>"), (fmt, hint)
-
-
-def test_merge_delta_reserves_op_column(spark):
-    from mare_spark.sources.external import merge_delta
-
-    df = spark.createDataFrame([(1, "u")], "id long, _op string")
-    with pytest.raises(ValueError, match="reserved"):
-        merge_delta(spark, "/tmp/nx", df, "id")
 
 
 def test_engine_table_tracks_live_catalog(spark):

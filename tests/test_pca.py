@@ -57,12 +57,33 @@ def test_covariance_layout_independent(vec_df):
 
 
 def test_covariance_rejects_malformed_vectors(spark):
-    df = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, [1.0, 2.0, 3.0])],
-        "vec_id long, embedding array<double>",
+    """Full-pass fits are defined over every row (the vector contract in
+    the similarity module docstring): a wrong length, a NULL vector or a
+    NULL element raises one ValueError naming the cause, from the
+    covariance, the PCA fit and the scalar-quantizer fit alike."""
+    from mare_spark.operators.pq import fit_scalar_quantizer
+
+    fits = (
+        lambda df: embedding_covariance(df, "embedding", 2).collect(),
+        lambda df: pca_fit(df, "embedding", 2, k=1),
+        lambda df: fit_scalar_quantizer(df, "embedding", 2),
     )
-    with pytest.raises(Exception, match="fixed-length"):
-        embedding_covariance(df, "embedding", 2).collect()
+    for bad, cause in (
+        ([1.0, 2.0, 3.0], "length 3"),
+        (None, "a NULL vector"),
+        ([None, 2.0], "a NULL element"),
+    ):
+        df = spark.createDataFrame(
+            [(1, [1.0, 2.0]), (2, bad)],
+            "vec_id long, embedding array<double>",
+        )
+        for fit in fits:
+            with pytest.raises(
+                Exception,
+                match=f"ValueError: embedding: expected fixed-length 2 "
+                f"vectors, got {cause}",
+            ):
+                fit(df)
 
 
 def test_pca_matches_numpy_eigh(vec_df):

@@ -141,6 +141,112 @@ def test_pq_assign_nulls_vectors_the_cosine_kernel_scores_null(spark, emb):
     assert {r.vec_id for r in top.collect()} == {r[0] for r in rows}
 
 
+_BAD_ROWS = {
+    "null_vector": lambda v: None,
+    "null_element": lambda v: [None] + list(v[1:]),
+    "short": lambda v: list(v[:10]),
+}
+
+
+@pytest.mark.parametrize("bad", sorted(_BAD_ROWS))
+def test_unusable_row_is_null_or_left_out(spark, emb, bad, tmp_path):
+    """The vector contract (similarity module docstring) for one bad row
+    among 40 good ones — a NULL vector, a NULL element, or 10 of 64
+    elements: every row-wise operator gives it NULL or leaves it out,
+    the sample trainers skip it, and every good row keeps the value it
+    has without the bad row. The SQ and re-rank scorers see the bad row
+    too: its SQ codes are bad the same way, and its PQ codes are forced
+    non-NULL so the ADC shortlist holds it."""
+    from pyspark.sql import functions as F
+
+    from mare_spark.operators.pca import pca_fit, pca_project
+    from mare_spark.operators.pq import (
+        fit_scalar_quantizer, ivfpq_topk_batch, pq_assign, pq_topk_rerank,
+        sq_encode, sq_topk, train_pq_codebooks, write_ivfpq_index,
+    )
+    from mare_spark.operators.similarity import (
+        ivf_assign, train_ivf_centroids,
+    )
+
+    make, BAD = _BAD_ROWS[bad], 1001
+    rows = [tuple(r) for r in emb.orderBy("vec_id").head(40)]
+    good = spark.createDataFrame(rows, emb.schema)
+    q = [float(x) for x in rows[0][1]]
+    df = spark.createDataFrame(rows + [(BAD, make(q), 0)], emb.schema)
+    n = len(rows) + 1
+
+    books = train_pq_codebooks(good, "embedding", "vec_id", m=8, nbits=4)
+    np.testing.assert_array_equal(
+        train_pq_codebooks(df, "embedding", "vec_id", m=8, nbits=4), books
+    )
+    cents = train_ivf_centroids(good, nlist=4)
+    np.testing.assert_array_equal(train_ivf_centroids(df, nlist=4), cents)
+    mins, maxs = fit_scalar_quantizer(good, "embedding", 64)
+    model = pca_fit(good, "embedding", 64, k=4)
+
+    def by_id(frame, *cols):
+        return {r.vec_id: tuple(r[c] for c in cols) for r in frame.collect()}
+
+    for op, col in (
+        (lambda f: pq_assign(f, "embedding", books), "pq_codes"),
+        (lambda f: sq_encode(f, "embedding", mins, maxs), "sq_codes"),
+        (lambda f: pca_project(f, "embedding", "vec_id", model), "proj"),
+    ):
+        got, want = by_id(op(df), col), by_id(op(good), col)
+        assert got.pop(BAD) == (None,), col
+        assert got.keys() == want.keys(), col
+        np.testing.assert_allclose(  # a matmul may block batches apart
+            [got[i][0] for i in sorted(got)],
+            [want[i][0] for i in sorted(want)], rtol=1e-12, err_msg=col,
+        )
+
+    sq_rows = [
+        (r.vec_id, r.sq_codes)
+        for r in sq_encode(good, "embedding", mins, maxs).collect()
+    ]
+
+    def sq_top(codes):
+        frame = spark.createDataFrame(
+            codes, "vec_id long, sq_codes array<int>"
+        )
+        return [tuple(r) for r in sq_topk(frame, mins, maxs, q, n).collect()]
+
+    assert sq_top(sq_rows + [(BAD, make(sq_rows[0][1]))]) == sq_top(sq_rows)
+
+    coded = pq_assign(good, "embedding", books)
+    codes0 = by_id(coded, "pq_codes")[rows[0][0]][0]
+    forced = pq_assign(df, "embedding", books).withColumn(
+        "pq_codes", F.coalesce("pq_codes", F.array(*map(F.lit, codes0)))
+    )
+
+    def rerank(frame):
+        top = pq_topk_rerank(frame, books, q, n, shortlist=n)
+        return [tuple(r) for r in top.collect()]
+
+    assert rerank(forced) == rerank(coded)
+
+    path = str(tmp_path / "ivfpq")
+    write_ivfpq_index(df, path, cents, books)
+    index = spark.read.parquet(path)
+    got = by_id(index, "ivf_cell", "pq_codes")
+    assert got.pop(BAD) == (None, None)
+    assert got == by_id(
+        pq_assign(ivf_assign(good, cents), "embedding", books),
+        "ivf_cell", "pq_codes",
+    )
+
+    queries = [(i, list(rows[i][1])) for i in range(3)]
+
+    def batch(qrows, idx):
+        qdf = spark.createDataFrame(qrows, "qid long, qvec array<float>")
+        out = ivfpq_topk_batch(qdf, idx, cents, books, 5, nprobe=2)
+        return sorted(tuple(r) for r in out.collect())
+
+    assert batch(queries + [(BAD, make(q))], index) == batch(
+        queries, index.filter(F.col("vec_id") != BAD)
+    )
+
+
 def test_pq_topk_plan_is_take_ordered(spark, emb):
     from mare_spark import plans as P
     from mare_spark.operators.pq import (
@@ -249,9 +355,14 @@ def test_scalar_quantizer_error_bound_and_recall(spark, emb):
                 key=lambda t: (t[1], t[0]),
             )[:10]
         ]
-        got = [r.vec_id
-               for r in sq_topk(coded, mins, maxs, list(q), 10).collect()]
+        top = sq_topk(coded, mins, maxs, list(q), 10).collect()
+        got = [r.vec_id for r in top]
         assert len(set(got) & set(true_top)) >= 9
+        # the batch scorer equals the per-row reference on the grid
+        codes = {r.vec_id: r.sq_codes for r in coded.collect()}
+        for r in top:
+            recon = sq_reconstruct(codes[r.vec_id], mins, maxs)
+            assert r.dist == float(((q - recon) ** 2).sum()), r.vec_id
     finally:
         coded.unpersist()
 
@@ -356,8 +467,9 @@ def test_pq_guard_paths_from_review(spark, emb):
     """Review-driven guards: probing with a DIFFERENT quantizer's m
     raises (never silently truncates the ADC sum); fitting a scalar
     quantizer on an empty frame raises; NULL codes in the batch probe
-    drop out instead of crashing the job; NULL/ragged training samples
-    raise with named causes."""
+    drop out instead of crashing the job; the codebook sample skips NULL
+    vectors, so codebooks trained on a half-NULL frame are those of its
+    non-NULL half."""
     from pyspark.sql import functions as F
 
     from mare_spark.operators.pq import (
@@ -383,14 +495,14 @@ def test_pq_guard_paths_from_review(spark, emb):
             emb.filter(F.col("vec_id") < 0), "embedding", 64
         )
 
-    with pytest.raises(ValueError, match="NULL"):
+    even = F.col("vec_id") % 2 == 0
+    np.testing.assert_array_equal(
         train_pq_codebooks(
-            emb.withColumn(
-                "embedding",
-                F.when(F.col("vec_id") % 2 == 0, F.col("embedding")),
-            ),
+            emb.withColumn("embedding", F.when(even, F.col("embedding"))),
             "embedding", "vec_id", m=8,
-        )
+        ),
+        train_pq_codebooks(emb.filter(even), "embedding", "vec_id", m=8),
+    )
 
     # NULL codes rows drop out of the batch probe (parity with pq_topk)
     cents = train_ivf_centroids(emb, nlist=4)
